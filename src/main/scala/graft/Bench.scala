@@ -218,8 +218,11 @@ object Bench {
     val sb = new StringBuilder("{")
     var n = 0
     var full = false
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     for ((k, v) <- bySlowest if !full) {
-      val entry = (if (n == 0) "" else ",") + "\"" + k + "\":" + sig3(v)
+      // Jackson quotes the key: a name holding `"` or `\` stays valid JSON
+      val entry = (if (n == 0) "" else ",") +
+        mapper.writeValueAsString(k) + ":" + sig3(v)
       if (sb.length + entry.length + 1 > budget) full = true
       else { sb.append(entry); n += 1 }
     }
@@ -565,15 +568,23 @@ object Bench {
       case Some(p)  => Seq(p)
       case None     => Seq("bench_out.json", s"bench_out_c$cpus.json")
     }
-    for (outPath <- outPaths) try {
-      val p = java.nio.file.Paths.get(outPath)
-      java.nio.file.Files.write(p,
-        (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      System.err.println(s"[bench] wrote ${p.toAbsolutePath.normalize}")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
+    val written = outPaths.filter { outPath =>
+      try {
+        val p = java.nio.file.Paths.get(outPath)
+        java.nio.file.Files.write(p,
+          (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        System.err.println(s"[bench] wrote ${p.toAbsolutePath.normalize}")
+        true
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] could not write $outPath: ${e.getMessage}")
+        false
+      }
     }
-    val outPath = outPaths.lastOption.getOrElse("")
+    // null when persistence is off or every write failed: the line never
+    // points at a file that does not exist
+    val artifactJson = written.lastOption
+      .map(new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(_))
+      .getOrElse("null")
     // Everything that can still write to stdout/stderr happens BEFORE the
     // compact summary below, so the driver's tail ends with one parseable
     // JSON line: Spark's own stop()-time logging is capped at ERROR, the
@@ -595,7 +606,7 @@ object Bench {
     val compactHead =
       s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"sf":"$sfDir","n_queries":${med.size},"n_errors":${failures.size},"n_regressions":${regNames.size},"scale_ratio_total":$scaleTotal,"host_degraded":$hostDegraded,"queries":"""
     def compactTail(elided: Int) =
-      s""","queries_elided":$elided,"full_artifact":"$outPath"}"""
+      s""","queries_elided":$elided,"full_artifact":$artifactJson}"""
     val mapBudget =
       tailBudget - compactHead.length - compactTail(med.size).length
     val (qMapJson, qElided) = trimmedQueriesJson(med, mapBudget)

@@ -122,6 +122,25 @@ object LakehouseOps {
       .unionByName(srcLatest)
   }
 
+  /** The MERGE both table formats' `selectiveMerge` run over the files
+    * they rewrite: `clauses` go through [[mergeClauses]], otherwise the
+    * plain upsert, where `schemaEvolution` lets source columns the target
+    * lacks join the schema additively (untouched files read them as null
+    * — the drift shape API-ingest merges hit daily). Clause merges name
+    * explicit columns, so they refuse schema evolution.
+    */
+  def merge(target: DataFrame, source: DataFrame, keys: Seq[String],
+            clauses: Seq[MergeClause], skewSafe: Boolean,
+            schemaEvolution: Boolean): DataFrame = {
+    require(!schemaEvolution || clauses.isEmpty,
+      "schemaEvolution composes with the plain upsert only " +
+        "(clause merges name explicit columns — align the source first)")
+    if (clauses.nonEmpty)
+      mergeClauses(target, source, keys, clauses, skewSafe = skewSafe)
+    else mergeUpsert(target, source, keys, skewSafe = skewSafe,
+      autoAlign = schemaEvolution)
+  }
+
   // ---------------------------------------------------------------- B2c lib
   /** The FULL MERGE grammar — conditional `whenMatched` update/delete,
     * `whenNotMatched` insert, and `whenNotMatchedBySource` update/delete

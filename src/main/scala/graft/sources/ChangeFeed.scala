@@ -2,6 +2,7 @@ package graft.sources
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** The shared NET-DIFF → CDF classifier under both formats' `changes()`:
   * given the two sides of a snapshot diff (each already restricted to
@@ -20,6 +21,25 @@ import org.apache.spark.sql.functions._
   * null bucketing == exceptAll's null-safe comparison).
   */
 private[graft] object ChangeFeed {
+
+  /** Both formats' net-diff `changes()` tail: project each side to the
+    * TO `schema` (additive evolution between the versions null-fills the
+    * columns the old side lacks), [[classify]], and stamp
+    * `_commit_version` when asked.
+    */
+  def netDiff(newSide: DataFrame, oldSide: DataFrame, schema: StructType,
+              keys: Seq[String], commitVersion: Option[Long]): DataFrame = {
+    def aligned(df: DataFrame): DataFrame = {
+      val have = df.columns.toSet
+      df.select(schema.fields.toSeq.map { fld =>
+        if (have.contains(fld.name)) col(s"`${fld.name}`")
+        else lit(null).cast(fld.dataType).as(fld.name)
+      }: _*)
+    }
+    val out = classify(aligned(newSide), aligned(oldSide), keys,
+      schema.fieldNames.toSeq)
+    commitVersion.fold(out)(v => out.withColumn("_commit_version", lit(v)))
+  }
 
   def classify(newSide: DataFrame, oldSide: DataFrame, keys: Seq[String],
                dataCols: Seq[String]): DataFrame = {

@@ -8,7 +8,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.ObjectNode
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructField, StructType}
+import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, LongType, MapType, ShortType, StringType, StructField, StructType}
 
 /** Native reader/writer for the (public) Delta Lake transaction-log
   * protocol — the minimal core that makes transactional parquet tables
@@ -1617,44 +1617,12 @@ object DeltaLite {
                          writeDf: DataFrame, stageId: String,
                          namePrefix: String,
                          partitionBy: Seq[String] = Nil)
-      : Seq[(String, Long, Option[String], Map[String, String])] = {
-    val root = new Path(table)
-    val f = fs(spark, root)
-    val staging = new Path(root, s".staging-$stageId")
-    val w = writeDf.write.mode("overwrite")
-    (if (partitionBy.isEmpty) w else w.partitionBy(partitionBy: _*))
-      .parquet(staging.toString)
-    def leaves(dir: Path, rel: String): Seq[(Path, String)] =
-      f.listStatus(dir).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.contains("="))
-          leaves(st.getPath, if (rel.isEmpty) n else s"$rel/$n")
-        else if (n.startsWith("part-") && n.endsWith(".parquet"))
-          Seq((st.getPath, rel))
-        else Nil
-      }
-    // listStatus order is filesystem-dependent; sorting by (dir, name)
-    // pins file order = Spark partition order (part-00000 < part-00001),
-    // which row tracking's per-file id assignment depends on — ids must
-    // ascend with partition index, not with inode order
-    val named = leaves(staging, "").sortBy { case (p, relDir) =>
-      (relDir, p.getName)
-    }.zipWithIndex.map { case ((p, relDir), i) =>
+      : Seq[(String, Long, Option[String], Map[String, String])] =
+    DataFiles.stage(spark, new Path(table), writeDf, stageId,
+      partitionBy) { (i, relDir) =>
       val name = f"$namePrefix-$i%05d.parquet"
-      val rel = if (relDir.isEmpty) name else s"$relDir/$name"
-      val target = new Path(root, rel)
-      f.mkdirs(target.getParent)
-      require(f.rename(p, target), s"rename failed: $p")
-      val pv: Map[String, String] =
-        relDir.split("/").filter(_.nonEmpty).map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          k -> HivePaths.unescape(v)
-        }.toMap
-      (rel, f.getFileStatus(target).getLen, fileStatsJson(spark, target), pv)
-    }
-    f.delete(staging, true)
-    named
-  }
+      if (relDir.isEmpty) name else s"$relDir/$name"
+    }.map(sf => (sf.rel, sf.size, sf.stats.map(statsJson), sf.partition))
 
   /** One commit's NDJSON action block. `emitProtocol` gates the
     * protocol action INSIDE an emitMeta commit: only creation and
@@ -2240,8 +2208,10 @@ object DeltaLite {
       val qualified = f.makeQualified(new Path(p))
       val pj = mapper.writeValueAsString(qualified.toString)
       val size = f.getFileStatus(qualified).getLen
-      val statsField = fileStatsJson(spark, qualified).map(s =>
-        s""","stats":${mapper.writeValueAsString(s)}""").getOrElse("")
+      val statsField = DataFiles.footerStats(
+        spark.sparkContext.hadoopConfiguration, qualified).map(st =>
+        s""","stats":${mapper.writeValueAsString(statsJson(st))}""")
+        .getOrElse("")
       sb.append(s"""{"add":{"path":$pj,"size":$size,"partitionValues":{},"modificationTime":0,"dataChange":true$statsField}}""")
         .append('\n')
     }
@@ -2458,79 +2428,28 @@ object DeltaLite {
   }
 
   /** Per-file `stats` JSON for an add action — the protocol's
-    * data-skipping payload (numRecords + per-column minValues/maxValues),
-    * computed from the parquet FOOTER (driver-side, metadata-only; the
-    * file was just written, its footer is page-cache-hot). Only
-    * unambiguous primitives are recorded: plain int/long/float/double/
-    * boolean and UTF-8 strings — decimal/timestamp physical encodings are
-    * skipped rather than mis-ranged, and consumers treat a missing bound
-    * conservatively. Any footer trouble degrades to no stats, never a
-    * failed commit.
+    * data-skipping payload (numRecords + per-column minValues/maxValues)
+    * from the shared footer fold ([[DataFiles.footerStats]]: unambiguous
+    * primitives and UTF-8 strings only; consumers treat a missing bound
+    * conservatively).
     */
-  private def fileStatsJson(spark: SparkSession, p: Path): Option[String] =
-    try {
-      val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          p, spark.sparkContext.hadoopConfiguration))
-      try {
-        import scala.jdk.CollectionConverters._
-        import org.apache.parquet.schema.LogicalTypeAnnotation
-        val blocks = reader.getFooter.getBlocks.asScala.toSeq
-        val numRecords = blocks.map(_.getRowCount).sum
-        // (min, max) per top-level primitive column, folded across blocks
-        val acc = scala.collection.mutable.LinkedHashMap
-          .empty[String, (Comparable[Any], Comparable[Any])]
-        for (b <- blocks; c <- b.getColumns.asScala) {
-          val parts = c.getPath.toArray
-          val st = c.getStatistics
-          if (parts.length == 1 && st != null && !st.isEmpty &&
-              st.hasNonNullValue) {
-            val logical = c.getPrimitiveType.getLogicalTypeAnnotation
-            val isString = logical != null &&
-              logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-            if (logical == null || isString) {
-              // a RAW binary column also has a null annotation — its
-              // Binary min/max must NOT round-trip through UTF-8 into
-              // string stats ("skipped rather than mis-ranged"); only
-              // string-annotated binaries are recorded, folded in UTF-8
-              // byte order (parquet's own stats order — Java String
-              // compareTo would pick the wrong extreme past the BMP)
-              def v(x: Any): Option[Comparable[Any]] = (x match {
-                case b: org.apache.parquet.io.api.Binary =>
-                  if (isString) Some(new Utf8Bytes(b.getBytes)) else None
-                case other => Some(other)
-              }).map(_.asInstanceOf[Comparable[Any]])
-              for (mn <- v(st.genericGetMin(): Any);
-                   mx <- v(st.genericGetMax(): Any)) {
-                acc.get(parts(0)) match {
-                  case Some((lo, hi)) => acc(parts(0)) = (
-                    if (mn.compareTo(lo) < 0) mn else lo,
-                    if (mx.compareTo(hi) > 0) mx else hi)
-                  case None => acc(parts(0)) = (mn, mx)
-                }
-              }
-            }
-          }
-        }
-        val node = mapper.createObjectNode()
-        node.put("numRecords", numRecords)
-        val mins = node.putObject("minValues")
-        val maxs = node.putObject("maxValues")
-        def put(o: ObjectNode, k: String, x: Any): Unit = x match {
-          case u: Utf8Bytes         =>
-            o.put(k, new String(u.bytes, StandardCharsets.UTF_8)); ()
-          case s: String            => o.put(k, s); ()
-          case i: java.lang.Integer => o.put(k, i.intValue()); ()
-          case l: java.lang.Long    => o.put(k, l.longValue()); ()
-          case f: java.lang.Float   => o.put(k, f.floatValue()); ()
-          case d: java.lang.Double  => o.put(k, d.doubleValue()); ()
-          case b: java.lang.Boolean => o.put(k, b.booleanValue()); ()
-          case _                    => ()
-        }
-        acc.foreach { case (k, (lo, hi)) => put(mins, k, lo); put(maxs, k, hi) }
-        Some(mapper.writeValueAsString(node))
-      } finally reader.close()
-    } catch { case scala.util.control.NonFatal(_) => None }
+  private def statsJson(st: DataFiles.FooterStats): String = {
+    val node = mapper.createObjectNode()
+    node.put("numRecords", st.numRecords)
+    val mins = node.putObject("minValues")
+    val maxs = node.putObject("maxValues")
+    def put(o: ObjectNode, k: String, x: Any): Unit = x match {
+      case u: DataFiles.Utf8Bytes => o.put(k, u.toString); ()
+      case i: java.lang.Integer   => o.put(k, i.intValue()); ()
+      case l: java.lang.Long      => o.put(k, l.longValue()); ()
+      case f: java.lang.Float     => o.put(k, f.floatValue()); ()
+      case d: java.lang.Double    => o.put(k, d.doubleValue()); ()
+      case b: java.lang.Boolean   => o.put(k, b.booleanValue()); ()
+      case _                      => ()
+    }
+    st.bounds.foreach { case (k, (lo, hi)) => put(mins, k, lo); put(maxs, k, hi) }
+    mapper.writeValueAsString(node)
+  }
 
   /** What [[selectiveMerge]] did: the committed version plus the file
     * economics (the whole point — `filesSkipped` is the table volume a
@@ -2563,57 +2482,25 @@ object DeltaLite {
     */
   def selectiveMerge(spark: SparkSession, table: String, updates: DataFrame,
                      keys: Seq[String], skewSafe: Boolean = false,
-                     maxPruneKeys: Int = DefaultMaxPruneKeys,
+                     maxPruneKeys: Int = DataFiles.DefaultMaxPruneKeys,
                      clauses: Seq[graft.operators.MergeClause] = Nil,
                      schemaEvolution: Boolean = false)
       : MergeStats = {
-    require(!schemaEvolution || clauses.isEmpty,
-      s"$table: schemaEvolution composes with the plain upsert only " +
-        "(clause merges name explicit columns — align the source first)")
-    import org.apache.spark.sql.types.{DataType => SDT, StructType => SST}
     val snap = snapshot(spark, table)
     require(snap.schemaJson.nonEmpty, s"$table: no metaData in log")
-    val schema = SDT.fromJson(snap.schemaJson.get).asInstanceOf[SST]
-    val keyCol = keys.head
-    val isString = updates.schema(keyCol).dataType ==
-      org.apache.spark.sql.types.StringType
-
-    // Null keys never equi-join an existing row (they land as inserts),
-    // so they don't drive the prune — and must not NPE it.
     // whenNotMatchedBySource clauses involve EVERY target row by
-    // definition, so key-range pruning is off the table there.
-    val keyRows =
-      if (graft.operators.MergeClause.touchesBySource(clauses)) None
-      else boundedKeys(updates, keyCol, maxPruneKeys)
-
-    val (touched, skipped) = keyRows match {
-      case None => (snap.files, Seq.empty[String]) // over bound: no prune
-      case Some(rows) if snap.partitionColumns.contains(keyCol) =>
-        // partition-keyed merge: hive data files carry no stats for the
-        // partition column — prune whole partitions on the log's
-        // partitionValues instead
-        partitionValuesPrune(snap, keyCol, rows,
-          schema(keyCol).dataType)
-      case Some(rows) =>
-        val sortedKeys: Array[AnyRef] = sortKeys(rows, isString)
-        // mapped tables record stats under PHYSICAL names
-        snap.files.partition(statsIntersect(snap,
-          physicalNameOf(snap, keyCol), isString, sortedKeys))
-    }
+    // definition, so key-range pruning is off the table there
+    val (touched, skipped) =
+      if (graft.operators.MergeClause.touchesBySource(clauses))
+        (snap.files, Seq.empty[String])
+      else keyPrune(snap, keys.head, updates, maxPruneKeys)
     // readSnapshot: DV masking + physical→logical relabel ride along —
     // rewriting a DV-carrying file folds its mask in (the rewrite has
-    // no DV, same live rows)
+    // no DV, same live rows). Schema evolution's new source columns
+    // reach the log through commit's append-evolution channel.
     val base = readSnapshot(spark, table, snap, touched)
-    val merged =
-      if (clauses.nonEmpty) graft.operators.LakehouseOps
-        .mergeClauses(base, updates, keys, clauses, skewSafe = skewSafe)
-      else graft.operators.LakehouseOps
-        // MERGE WITH SCHEMA EVOLUTION: source columns the target lacks
-        // join the schema additively (commit's append-evolution channel
-        // re-emits metaData; untouched files read the new columns as
-        // null — the drift shape API-ingest merges hit daily)
-        .mergeUpsert(base, updates, keys, skewSafe = skewSafe,
-          autoAlign = schemaEvolution)
+    val merged = graft.operators.LakehouseOps.merge(base, updates, keys,
+      clauses, skewSafe, schemaEvolution)
     // CDF: materialize the exact per-commit feed the merge implies —
     // update_pre/postimage for keys present in the base, insert for new
     // keys. Cost ∝ touched data + batch (two key semi-joins), opt-in via
@@ -2655,25 +2542,11 @@ object DeltaLite {
     */
   def selectiveDelete(spark: SparkSession, table: String, keys: DataFrame,
                       keyCols: Seq[String],
-                      maxPruneKeys: Int = DefaultMaxPruneKeys): MergeStats = {
-    import org.apache.spark.sql.types.{DataType => SDT, StructType => SST}
+                      maxPruneKeys: Int = DataFiles.DefaultMaxPruneKeys): MergeStats = {
     import org.apache.spark.sql.functions.broadcast
     val snap = snapshot(spark, table)
     require(snap.schemaJson.nonEmpty, s"$table: no metaData in log")
-    val schema = SDT.fromJson(snap.schemaJson.get).asInstanceOf[SST]
-    val keyCol = keyCols.head
-    val isString = keys.schema(keyCol).dataType ==
-      org.apache.spark.sql.types.StringType
-    val (touched, skipped) = boundedKeys(keys, keyCol, maxPruneKeys) match {
-      case None => (snap.files, Seq.empty[String]) // over bound: no prune
-      case Some(rows) if snap.partitionColumns.contains(keyCol) =>
-        partitionValuesPrune(snap, keyCol, rows,
-          schema(keyCol).dataType)
-      case Some(rows) =>
-        val sortedKeys: Array[AnyRef] = sortKeys(rows, isString)
-        snap.files.partition(statsIntersect(snap,
-          physicalNameOf(snap, keyCol), isString, sortedKeys))
-    }
+    val (touched, skipped) = keyPrune(snap, keyCols.head, keys, maxPruneKeys)
     if (touched.isEmpty) return MergeStats(snap.version, 0, skipped.size)
     val base = readSnapshot(spark, table, snap, touched)
     val delKeys = broadcast(keys
@@ -2854,21 +2727,17 @@ object DeltaLite {
     PurgeStats(v, touched.size, snap.files.size - touched.size)
   }
 
-  /** What [[readWhere]] scanned: the pruned DataFrame plus the file
-    * economics ([[filesSkipped]] is the I/O a naive full scan would have
-    * paid — at 100 TB on a clustered table it is nearly all of it).
-    */
-  final case class SkippingScan(df: DataFrame, filesScanned: Int,
-                                filesSkipped: Int)
+  type SkippingScan = DataFiles.SkippingScan
+  val SkippingScan = DataFiles.SkippingScan
 
   /** Stats-pruned READ — the protocol's data-skipping payload applied to
     * the scan path (the reason `OPTIMIZE ZORDER` exists at all): files
     * whose recorded add-stats [min,max] on `keyCol` cannot contain a row
     * in `[lo, hi]` are dropped from the file list BEFORE Spark ever sees
-    * them; the surviving files scan as ordinary parquet with the range
-    * predicate applied (so Catalyst still pushes it into row-group and
-    * page skipping inside each file — two pruning layers, same
-    * predicate). Missing stats → scanned conservatively. On a
+    * them ([[DataFiles.readWhere]]: shared comparison domain, residual
+    * predicate pushed into the surviving scan). A PARTITION column prunes
+    * on the log's partitionValues instead (hive layout: its data files
+    * carry no stats for it). Missing stats → scanned conservatively. On a
     * range/Z-ORDER-clustered table, cost ∝ files overlapping the range,
     * NOT table size; on an unclustered table every file overlaps and
     * this degrades (harmlessly) to a full filtered scan — exactly when
@@ -2876,62 +2745,18 @@ object DeltaLite {
     */
   def readWhere(spark: SparkSession, table: String, keyCol: String,
                 lo: Any, hi: Any): SkippingScan = {
-    import org.apache.spark.sql.functions.col
-    import org.apache.spark.sql.types.{DataType => SDT, StructType => SST}
     val snap = snapshot(spark, table)
     require(snap.schemaJson.nonEmpty, s"$table: no metaData in log")
-    val schema = SDT.fromJson(snap.schemaJson.get).asInstanceOf[SST]
-    // key type comes from the TABLE schema, never from the bound's
-    // runtime class — a mistyped bound must not flip the comparison
-    // into lexicographic space and silently mis-prune
-    val isString = schema(keyCol).dataType ==
-      org.apache.spark.sql.types.StringType
-    require(isString == lo.isInstanceOf[String] &&
-        isString == hi.isInstanceOf[String],
-      s"$table.$keyCol is ${schema(keyCol).dataType.simpleString}; " +
-        s"bounds (${lo.getClass.getSimpleName}, ${hi.getClass.getSimpleName}) " +
-        "must match the column type")
-    def cmp(x: Any): Comparable[Any] =
-      if (isString) utf8(x.toString)
-      else new java.math.BigDecimal(x.toString).asInstanceOf[Comparable[Any]]
-    val physKey = physicalNameOf(snap, keyCol)
-    // the partition-value domain is hive-dir STRINGS — only string and
-    // integral columns compare safely against them (a date/timestamp
-    // partition value would NumberFormatException in the decimal
-    // domain); anything else scans conservatively, never crashes
-    val partPruneSafe = schema(keyCol).dataType match {
-      case org.apache.spark.sql.types.StringType |
-           org.apache.spark.sql.types.IntegerType |
-           org.apache.spark.sql.types.LongType |
-           org.apache.spark.sql.types.ShortType |
-           org.apache.spark.sql.types.ByteType => true
-      case _ => false
-    }
-    val (scanned, skipped) =
-      if (snap.partitionColumns.contains(keyCol)) {
-        // PARTITION column: data files carry no stats for it (hive
-        // layout) — prune on the log's partitionValues instead, same
-        // comparison domain
-        if (!partPruneSafe) (snap.files, Seq.empty[String])
-        else snap.files.partition { p =>
-          snap.partitionValues.get(p).flatMap(m => Option(m.getOrElse(keyCol, null))) match {
-            case Some(v) =>
-              val c = cmp(v)
-              c.compareTo(cmp(lo)) >= 0 && c.compareTo(cmp(hi)) <= 0
-            case None => true // unknown value: scan conservatively
-          }
-        }
-      }
-      else snap.files.partition { p =>
-        fileBounds(snap, p, physKey, isString) match {
-          case Some((mn, mx)) =>
-            mx.compareTo(cmp(lo)) >= 0 && mn.compareTo(cmp(hi)) <= 0
-          case None => true
-        }
-      }
-    val base = readSnapshot(spark, table, snap, scanned)
-    SkippingScan(base.filter(col(keyCol) >= lo && col(keyCol) <= hi),
-      scanned.size, skipped.size)
+    val field = logicalSchema(snap)(keyCol)
+    val dt = field.dataType
+    val bounds: String => Option[(Any, Any)] =
+      if (!snap.partitionColumns.contains(keyCol))
+        statsBounds(snap, field)
+      else if (hiveComparable(dt))
+        p => partitionValue(snap)(p, keyCol).map(v => (v, v))
+      else _ => None
+    DataFiles.readWhere(table, keyCol, dt, lo, hi, snap.files)(bounds)(
+      readSnapshot(spark, table, snap, _))
   }
 
   /** OPTIMIZE ZORDER as a protocol commit (reference:
@@ -3029,7 +2854,7 @@ object DeltaLite {
   def changes(spark: SparkSession, table: String, fromVersion: Long,
               toVersion: Long, keys: Seq[String],
               withVersion: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.{array, col, explode, lit, struct, when}
+    import org.apache.spark.sql.functions.{col, lit}
     import org.apache.spark.sql.types.{DataType => SDT, StructType => SST}
     require(fromVersion < toVersion, "changes requires fromVersion < toVersion")
     val from = snapshot(spark, table, Some(fromVersion))
@@ -3090,143 +2915,76 @@ object DeltaLite {
       !ident(from).contains((p, to.dvs.getOrElse(p, ""))))
     val removedFiles = from.files.filter(p =>
       !ident(to).contains((p, from.dvs.getOrElse(p, ""))))
-    // additive-evolution alignment: project each side to the TO schema,
-    // null-filling columns the old snapshot doesn't carry
-    def aligned(df: DataFrame): DataFrame = {
-      val have = df.columns.toSet
-      df.select(schema.fields.toSeq.map { fld =>
-        if (have.contains(fld.name)) col(s"`${fld.name}`")
-        else lit(null).cast(fld.dataType).as(fld.name)
-      }: _*)
-    }
-    val newSide = aligned(readSnapshot(spark, table, to, addedFiles))
-    val oldSide = aligned(readSnapshot(spark, table, from, removedFiles))
-    val out = ChangeFeed.classify(newSide, oldSide, keys, dataCols)
-    if (withVersion) out.withColumn("_commit_version", lit(toVersion))
-    else out
+    ChangeFeed.netDiff(readSnapshot(spark, table, to, addedFiles),
+      readSnapshot(spark, table, from, removedFiles), schema, keys,
+      if (withVersion) Some(toVersion) else None)
   }
 
-  /** UTF-8 bytes under unsigned lexicographic order — the domain parquet
-    * stats and Spark's binary string comparison use; Java
-    * String.compareTo (UTF-16 code units) diverges for
-    * supplementary-plane characters, so string bounds compare HERE.
+  private def logicalSchema(snap: Snapshot): StructType =
+    DataType.fromJson(snap.schemaJson.get).asInstanceOf[StructType]
+
+  /** The partition-value domain is hive-dir STRINGS — only string and
+    * integral columns compare safely against them (a timestamp's dir form
+    * differs from its toString; a date would fail the decimal domain);
+    * anything else keeps every file, conservative by construction.
     */
-  private final class Utf8Bytes(val bytes: Array[Byte])
-      extends Comparable[Utf8Bytes] {
-    def compareTo(o: Utf8Bytes): Int = {
-      val n = math.min(bytes.length, o.bytes.length)
-      var i = 0
-      while (i < n) {
-        val c = (bytes(i) & 0xFF) - (o.bytes(i) & 0xFF)
-        if (c != 0) return c
-        i += 1
-      }
-      bytes.length - o.bytes.length
-    }
+  private def hiveComparable(dt: DataType): Boolean = dt match {
+    case StringType | IntegerType | LongType | ShortType | ByteType => true
+    case _ => false
   }
 
-  private def utf8(s: String): Comparable[Any] =
-    new Utf8Bytes(s.getBytes(StandardCharsets.UTF_8))
-      .asInstanceOf[Comparable[Any]]
-
-  /** Driver-collect bound for stats pruning: past this many distinct
-    * first-key values, selectiveMerge/selectiveDelete skip pruning
-    * (correct, just unpruned) rather than collect unboundedly. ~4M keys
-    * ≈ tens of MB of driver heap — the CDC-batch shape with headroom.
+  /** `path`'s hive partition value for `col` from the log (None when
+    * unknown or null).
     */
-  private[graft] val DefaultMaxPruneKeys: Int = 4 << 20
+  private def partitionValue(snap: Snapshot)(path: String,
+                                             col: String): Option[String] =
+    snap.partitionValues.get(path).flatMap(m => Option(m.getOrElse(col, null)))
 
-  /** The batch's distinct non-null `keyCol` values, collected through a
-    * `limit(max + 1)` so at most max+1 rows EVER reach the driver; None
-    * when the batch exceeds the bound (caller must fall back to the
-    * unpruned path). Shared by selectiveMerge/selectiveDelete (and the
-    * IcebergLite twins).
+  /** `path`'s recorded add-stats [min,max] on `field` (stats are keyed
+    * by physical name), as JSON text for [[DataFiles.key]]; None when
+    * stats are absent. A column widened float→double (`delta.typeChanges`)
+    * mixes files whose stats are float text with files whose stats are
+    * double text, so its bounds take the wider of both readings.
     */
-  private[graft] def boundedKeys(batch: DataFrame, keyCol: String,
-                                 maxPruneKeys: Int)
-      : Option[Array[org.apache.spark.sql.Row]] = {
-    require(maxPruneKeys > 0, s"maxPruneKeys must be positive: $maxPruneKeys")
-    val rows = batch.select(keyCol).na.drop().distinct()
-      .limit(maxPruneKeys + 1).collect()
-    if (rows.length > maxPruneKeys) None else Some(rows)
-  }
-
-  /** Distinct key rows → sorted comparables in the prune domain (UTF-8
-    * bytes for strings, decimal for numerics) — shared by
-    * selectiveMerge and selectiveDelete.
-    */
-  private def sortKeys(keyRows: Array[org.apache.spark.sql.Row],
-                       isString: Boolean): Array[AnyRef] = {
-    val cs: Array[Comparable[Any]] =
-      if (isString) keyRows.map(r => utf8(r.get(0).toString))
-      else keyRows.map(r => new java.math.BigDecimal(r.get(0).toString)
-        .asInstanceOf[Comparable[Any]])
-    cs.sortWith(_.compareTo(_) < 0).map(_.asInstanceOf[AnyRef])
-  }
-
-  /** `path`'s recorded add-stats [min,max] on `keyCol`, typed for
-    * comparison (strings in UTF-8 byte order); None when stats are
-    * absent (consumers must be conservative).
-    */
-  private def fileBounds(snap: Snapshot, path: String, keyCol: String,
-                         isString: Boolean)
-      : Option[(Comparable[Any], Comparable[Any])] =
+  private def statsBounds(snap: Snapshot, field: StructField)(
+      path: String): Option[(Any, Any)] = {
+    val col = physicalNameOf(snap, field.name)
+    val fromFloat = field.metadata.contains("delta.typeChanges") &&
+      mapper.readTree(field.metadata.json).get("delta.typeChanges")
+        .elements().asScala.exists(_.path("fromType").asText() == "float")
     snap.stats.get(path).flatMap { js =>
       val node = mapper.readTree(js)
-      for {
-        mn <- Option(node.get("minValues")).flatMap(m => Option(m.get(keyCol)))
-        mx <- Option(node.get("maxValues")).flatMap(m => Option(m.get(keyCol)))
-      } yield
-        if (isString) (utf8(mn.asText()), utf8(mx.asText()))
-        else (mn.decimalValue().asInstanceOf[Comparable[Any]],
-          mx.decimalValue().asInstanceOf[Comparable[Any]])
-    }
-
-  /** Partition-value equality prune for merge/delete batches keyed on a
-    * PARTITION column: a file survives iff its recorded partition value
-    * is in the batch's key set. Only string/integral domains compare
-    * safely against the hive-dir string encoding — anything else (e.g.
-    * timestamps, whose toString differs from the dir form) keeps every
-    * file, conservative by construction. Unknown/null values rewrite.
-    */
-  private def partitionValuesPrune(snap: Snapshot, keyCol: String,
-                                   rows: Array[org.apache.spark.sql.Row],
-                                   dt: org.apache.spark.sql.types.DataType)
-      : (Seq[String], Seq[String]) = {
-    import org.apache.spark.sql.types._
-    val safe = dt match {
-      case StringType | IntegerType | LongType | ShortType | ByteType => true
-      case _ => false
-    }
-    if (!safe) return (snap.files, Seq.empty)
-    val keySet = rows.map(r => String.valueOf(r.get(0))).toSet
-    snap.files.partition { p =>
-      snap.partitionValues.get(p)
-        .flatMap(m => Option(m.getOrElse(keyCol, null))) match {
-        case Some(v) => keySet.contains(v)
-        case None    => true // unknown: rewrite conservatively
-      }
+      def side(f: String) = Option(node.get(f)).flatMap(m => Option(m.get(col)))
+        .filterNot(_.isNull).map(_.asText())
+      for (mn <- side("minValues"); mx <- side("maxValues")) yield
+        if (!fromFloat) (mn, mx)
+        else (math.min(mn.toFloat.toDouble, mn.toDouble),
+          math.max(mx.toFloat.toDouble, mx.toDouble))
     }
   }
 
-  /** Shared stats-pruning predicate: does `path`'s recorded [min,max] on
-    * `keyCol` intersect the sorted key set? Missing stats → true
-    * (rewrite conservatively).
+  /** selectiveMerge/selectiveDelete's (touched, skipped) file split for a
+    * key batch: at most `maxPruneKeys` distinct first-key values reach the
+    * driver ([[DataFiles.boundedKeys]] — past the bound, nothing is
+    * pruned). A partition-keyed batch prunes whole partitions on the
+    * log's partitionValues; otherwise files prune on add-stats, recorded
+    * under PHYSICAL names on mapped tables.
     */
-  private def statsIntersect(snap: Snapshot, keyCol: String,
-                             isString: Boolean, sortedKeys: Array[AnyRef])
-                            (path: String): Boolean =
-    fileBounds(snap, path, keyCol, isString) match {
-      case Some((lo, hi)) =>
-        // first element ≥ lo, then check ≤ hi
-        var l = 0; var r = sortedKeys.length
-        while (l < r) {
-          val m = (l + r) >>> 1
-          if (lo.compareTo(sortedKeys(m)) > 0) l = m + 1 else r = m
-        }
-        l < sortedKeys.length && hi.compareTo(sortedKeys(l)) >= 0
-      case None => true
+  private def keyPrune(snap: Snapshot, keyCol: String, batch: DataFrame,
+                       maxPruneKeys: Int): (Seq[String], Seq[String]) = {
+    val field = logicalSchema(snap)(keyCol)
+    val dt = field.dataType
+    DataFiles.boundedKeys(batch, keyCol, maxPruneKeys) match {
+      case None => (snap.files, Nil)
+      case Some(rows) if snap.partitionColumns.contains(keyCol) =>
+        if (!hiveComparable(dt)) (snap.files, Nil)
+        else DataFiles.partitionPrune(snap.files,
+          Seq(keyCol -> DataFiles.keyStrings(rows)))(partitionValue(snap))
+      case Some(rows) =>
+        DataFiles.keyPrune(snap.files, dt, rows)(
+          statsBounds(snap, field))
     }
+  }
 
   /** The `files` METADATA TABLE — the live file inventory as a queryable
     * DataFrame: one row per data file with its add-stats record count,

@@ -247,25 +247,27 @@ object IcebergLite {
           valueContainsNull = !Option(t.get("value-required")).exists(_.asBoolean()))
         case other => sys.error(s"iceberg type unsupported: $other")
       }
-    def primitive(s: String): DataType = s match {
-      case "boolean"     => BooleanType
-      case "int"         => IntegerType
-      case "long"        => LongType
-      case "float"       => FloatType
-      case "double"      => DoubleType
-      case "date"        => DateType
-      case "string"      => StringType
-      case "uuid"        => StringType
-      case "binary"      => BinaryType
-      case "timestamp"   => TimestampNTZType
-      case "timestamptz" => TimestampType
-      case d if d.startsWith("decimal(") =>
-        val Array(p, sc) = d.stripPrefix("decimal(").stripSuffix(")").split(",")
-        DecimalType(p.trim.toInt, sc.trim.toInt)
-      case f if f.startsWith("fixed[") => BinaryType
-      case other => sys.error(s"iceberg primitive unsupported: $other")
-    }
     convert(schema).asInstanceOf[StructType]
+  }
+
+  /** Iceberg primitive type name → Spark type. */
+  private def primitive(s: String): DataType = s match {
+    case "boolean"     => BooleanType
+    case "int"         => IntegerType
+    case "long"        => LongType
+    case "float"       => FloatType
+    case "double"      => DoubleType
+    case "date"        => DateType
+    case "string"      => StringType
+    case "uuid"        => StringType
+    case "binary"      => BinaryType
+    case "timestamp"   => TimestampNTZType
+    case "timestamptz" => TimestampType
+    case d if d.startsWith("decimal(") =>
+      val Array(p, sc) = d.stripPrefix("decimal(").stripSuffix(")").split(",")
+      DecimalType(p.trim.toInt, sc.trim.toInt)
+    case f if f.startsWith("fixed[") => BinaryType
+    case other => sys.error(s"iceberg primitive unsupported: $other")
   }
 
   /** Spark StructType → Iceberg schema JSON with spec-conformant unique
@@ -772,30 +774,9 @@ object IcebergLite {
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema))
   }
 
-  /** What [[readWhere]] scanned — same economics contract as
-    * DeltaLite.SkippingScan.
-    */
-  final case class SkippingScan(df: DataFrame, filesScanned: Int,
-                                filesSkipped: Int)
+  type SkippingScan = DataFiles.SkippingScan
+  val SkippingScan = DataFiles.SkippingScan
 
-  /** Stats-pruned READ on the Iceberg side — the manifests' spec
-    * `lower_bounds`/`upper_bounds` maps applied to scan planning, the
-    * Delta [[DeltaLite.readWhere]] counterpart: files whose recorded
-    * bound range on `keyCol` cannot contain a row in `[lo, hi]` are
-    * dropped from the plan using MANIFEST METADATA ONLY (no data or
-    * listing I/O — planFiles' 100 TB planning story, now per column, not
-    * just per partition); survivors scan with the residual predicate
-    * pushed down. Files from writers that recorded no bounds scan
-    * conservatively. The key's type comes from the table schema, and a
-    * mistyped bound is refused rather than silently compared in the
-    * wrong domain.
-    */
-  /** Resolve a top-level primitive column's (iceberg type, field id)
-    * from already-parsed table metadata — the key for the manifest bound
-    * maps. Resolves the CURRENT schema by `current-schema-id` (an
-    * evolved external table's `schemas` array holds every historical
-    * schema; head would be the oldest).
-    */
   /** The CURRENT schema node (`schemas` keyed by `current-schema-id`, or
     * the legacy single `schema`).
     */
@@ -813,6 +794,12 @@ object IcebergLite {
       .orElse(Option(meta.get("schema")))
       .getOrElse(sys.error(s"$table: metadata has no schema"))
 
+  /** Resolve a top-level primitive column's (iceberg type, field id)
+    * from already-parsed table metadata — the key for the manifest bound
+    * maps. Resolves the CURRENT schema by `current-schema-id` (an
+    * evolved external table's `schemas` array holds every historical
+    * schema; head would be the oldest).
+    */
   private def topField(meta: JsonNode, table: String,
                        name: String): (String, Int) = {
     val fieldNode = currentSchemaNode(meta, table).get("fields")
@@ -841,66 +828,32 @@ object IcebergLite {
         n.get("transform").asText(), n.get("source-id").asInt()))
   }
 
-  /** UTF-8 bytes under unsigned lexicographic order — the domain parquet
-    * stats, Iceberg bound truncation, and Spark's binary string
-    * comparison all agree on. Java String.compareTo (UTF-16 code units)
-    * diverges for supplementary-plane characters, so string bounds are
-    * compared HERE, never as Strings.
+  /** Iceberg types whose single-value bounds this reader decodes — the
+    * types its writer records ([[manifestBounds]]). A foreign writer's
+    * bounds on any other type (uuid, date, ...) are never compared.
     */
-  private final class Utf8Bytes(val bytes: Array[Byte])
-      extends Comparable[Utf8Bytes] {
-    def compareTo(o: Utf8Bytes): Int = {
-      val n = math.min(bytes.length, o.bytes.length)
-      var i = 0
-      while (i < n) {
-        val c = (bytes(i) & 0xFF) - (o.bytes(i) & 0xFF)
-        if (c != 0) return c
-        i += 1
-      }
-      bytes.length - o.bytes.length
-    }
-  }
+  private val BoundedTypes = Set("int", "long", "float", "double", "string")
 
-  /** A query key in the column's comparison domain: UTF-8 bytes for
-    * strings, exact IEEE doubles for float/double (matching what the
-    * residual `col >= lit(x)` filter compares — a decimal-string
-    * BigDecimal of 0.3 is NOT the double 0.3), integer BigDecimal for
-    * int/long.
+  /** Stats-pruned READ on the Iceberg side — the manifests' spec
+    * `lower_bounds`/`upper_bounds` maps applied to scan planning, the
+    * Delta [[DeltaLite.readWhere]] counterpart: files whose recorded
+    * bound range on `keyCol` cannot contain a row in `[lo, hi]` are
+    * dropped from the plan using MANIFEST METADATA ONLY (no data or
+    * listing I/O — planFiles' 100 TB planning story, now per column, not
+    * just per partition); survivors scan with the residual predicate
+    * pushed down ([[DataFiles.readWhere]], the shared comparison
+    * domain). Files from writers that recorded no bounds scan
+    * conservatively; a non-primitive key type is refused.
     */
-  private def keyComparable(tpe: String, x: Any): Comparable[Any] =
-    (tpe match {
-      case "string" => new Utf8Bytes(
-        x.toString.getBytes(StandardCharsets.UTF_8))
-      case "float" | "double" =>
-        java.lang.Double.valueOf(x.toString.toDouble)
-      case _ => new java.math.BigDecimal(x.toString)
-    }).asInstanceOf[Comparable[Any]]
-
   def readWhere(spark: SparkSession, table: String, keyCol: String,
                 lo: Any, hi: Any): SkippingScan = {
-    import org.apache.spark.sql.functions.col
     val (tpe, fid) = topField(metadata(spark, table), table, keyCol)
-    require(Set("int", "long", "float", "double", "string")(tpe),
+    require(BoundedTypes(tpe),
       s"$table.$keyCol: bounds pruning unsupported for type $tpe")
-    val isString = tpe == "string"
-    require(isString == lo.isInstanceOf[String] &&
-        isString == hi.isInstanceOf[String],
-      s"$table.$keyCol is $tpe; bounds " +
-        s"(${lo.getClass.getSimpleName}, ${hi.getClass.getSimpleName}) " +
-        "must match the column type")
-    val (cmpLo, cmpHi) = (keyComparable(tpe, lo), keyComparable(tpe, hi))
+    val dt = primitive(tpe)
     val snap = snapshot(spark, table)
-    val (scanned, skipped) = snap.detail.partition { fi =>
-      (fi.lowerBounds.get(fid), fi.upperBounds.get(fid)) match {
-        case (Some(lb), Some(ub)) =>
-          decodeBound(tpe, ub).compareTo(cmpLo) >= 0 &&
-            decodeBound(tpe, lb).compareTo(cmpHi) <= 0
-        case _ => true // no recorded bounds: scan conservatively
-      }
-    }
-    val base = readWithDeletes(spark, table, snap, scanned)
-    SkippingScan(base.filter(col(keyCol) >= lo && col(keyCol) <= hi),
-      scanned.size, skipped.size)
+    DataFiles.readWhere(table, keyCol, dt, lo, hi, snap.detail)(
+      bounds(dt, fid))(readWithDeletes(spark, table, snap, _))
   }
 
   /** One source-column predicate for [[readWherePart]]: a range
@@ -971,15 +924,14 @@ object IcebergLite {
     val isEq = p.eq != null
     val T = IcebergTransforms
     tf.transform match {
-      case "identity" => icebergType match {
-        case "int" | "long" | "float" | "double" | "string" =>
-          // same comparison domain as readWhere's bound pruning
-          val x = keyComparable(icebergType, v)
-          if (isEq) x.compareTo(keyComparable(icebergType, p.eq)) == 0
-          else x.compareTo(keyComparable(icebergType, p.lo)) >= 0 &&
-            x.compareTo(keyComparable(icebergType, p.hi)) <= 0
-        case _ => true
-      }
+      case "identity" if BoundedTypes(icebergType) =>
+        // same comparison domain as readWhere's bound pruning
+        val dt = primitive(icebergType)
+        val x = DataFiles.key(dt, v)
+        if (isEq) x.compareTo(DataFiles.key(dt, p.eq)) == 0
+        else x.compareTo(DataFiles.key(dt, p.lo)) >= 0 &&
+          x.compareTo(DataFiles.key(dt, p.hi)) <= 0
+      case "identity" => true
       case t if T.isTimeTransform(t) =>
         val x = v.toLong
         if (isEq) x == T.timeValue(t, icebergType, p.eq)
@@ -999,16 +951,14 @@ object IcebergLite {
           case "string" =>
             // prefix truncation is monotone: row ∈ [lo,hi] ⇒
             // trunc(lo) ≤ pv ≤ trunc(hi) — compared in the UNSIGNED
-            // UTF-8 byte domain (keyComparable), the order parquet
+            // UTF-8 byte domain (DataFiles.key), the order parquet
             // stats and Spark binary comparison use; Java String
             // ordering diverges for supplementary-plane characters
             if (isEq) v == T.truncateOf(icebergType, p.eq, w)
             else {
-              val c = keyComparable("string", v)
-              c.compareTo(keyComparable("string",
-                T.truncateOf(icebergType, p.lo, w))) >= 0 &&
-                c.compareTo(keyComparable("string",
-                  T.truncateOf(icebergType, p.hi, w))) <= 0
+              def k(x: Any) = DataFiles.key(StringType, x)
+              k(v).compareTo(k(T.truncateOf(icebergType, p.lo, w))) >= 0 &&
+                k(v).compareTo(k(T.truncateOf(icebergType, p.hi, w))) <= 0
             }
           case _ => true
         }
@@ -1143,118 +1093,97 @@ object IcebergLite {
            |]}""".stripMargin)
     }
 
-  /** Per-column [min, max] from a parquet footer as the spec's
-    * single-value binary (little-endian numerics, UTF-8 strings), keyed
-    * by Iceberg field id — the payload of the manifest's
-    * `lower_bounds`/`upper_bounds` maps. Only unambiguous top-level
-    * primitives are recorded (int/long/float/double, UTF-8 strings);
-    * anything else is skipped rather than mis-ranged, and consumers
-    * treat a missing bound conservatively — the same contract as
-    * DeltaLite's add-stats. Any footer trouble degrades to no bounds,
-    * never a failed commit.
+  /** A data file's footer stats — the manifest's `record_count` is
+    * spec-required, so an unreadable footer fails the commit.
     */
-  private def footerBounds(
-      reader: org.apache.parquet.hadoop.ParquetFileReader,
-      topFields: Map[String, (Int, DataType)])
-      : (Map[Int, Array[Byte]], Map[Int, Array[Byte]]) =
-    try {
-      import org.apache.parquet.schema.LogicalTypeAnnotation
-      val acc = scala.collection.mutable.LinkedHashMap
-        .empty[String, (Comparable[Any], Comparable[Any])]
-      for (b <- reader.getFooter.getBlocks.asScala;
-           c <- b.getColumns.asScala) {
-        val parts = c.getPath.toArray
-        val st: org.apache.parquet.column.statistics.Statistics[_] =
-          c.getStatistics
-        if (parts.length == 1 && topFields.contains(parts(0)) &&
-            st != null && !st.isEmpty && st.hasNonNullValue) {
-          val logical = c.getPrimitiveType.getLogicalTypeAnnotation
-          val isString = logical != null &&
-            logical.isInstanceOf[LogicalTypeAnnotation.StringLogicalTypeAnnotation]
-          // gate on the TABLE type, not just the parquet annotation: a
-          // raw BinaryType column also has a null annotation, and
-          // round-tripping arbitrary bytes through UTF-8 would mis-range
-          // it ("skipped rather than mis-ranged", like DeltaLite)
-          val wantType = topFields(parts(0))._2
-          val supported = wantType match {
-            case StringType => isString
-            case IntegerType | LongType | FloatType | DoubleType =>
-              logical == null
-            case _ => false
-          }
-          if (supported) {
-            // strings fold in UTF-8 BYTE order — the order parquet stats
-            // and the bound truncation contract use; UTF-16 String
-            // compare would pick the wrong extreme past the BMP
-            def v(x: Any): Comparable[Any] = (x match {
-              case bin: org.apache.parquet.io.api.Binary =>
-                new Utf8Bytes(bin.getBytes)
-              case other => other
-            }).asInstanceOf[Comparable[Any]]
-            val (mn, mx) = (v(st.genericGetMin(): Any),
-              v(st.genericGetMax(): Any))
-            acc.get(parts(0)) match {
-              case Some((lo, hi)) => acc(parts(0)) = (
-                if (mn.compareTo(lo) < 0) mn else lo,
-                if (mx.compareTo(hi) > 0) mx else hi)
-              case None => acc(parts(0)) = (mn, mx)
-            }
-          }
-        }
+  private def footerOf(table: String, p: Path,
+                       st: Option[DataFiles.FooterStats]): DataFiles.FooterStats =
+    st.getOrElse(sys.error(s"$table: no parquet footer for data file $p"))
+
+  /** A file's footer [min, max] ([[DataFiles.footerStats]]) as the
+    * spec's single-value binary (little-endian numerics, UTF-8 strings),
+    * keyed by Iceberg field id — the payload of the manifest's
+    * `lower_bounds`/`upper_bounds` maps. Only top-level int/long/float/
+    * double/string columns whose footer value has the TABLE's type are
+    * recorded (a raw binary column never reaches string bounds);
+    * consumers treat a missing bound conservatively.
+    */
+  private def manifestBounds(st: DataFiles.FooterStats,
+                             topFields: Map[String, (Int, DataType)])
+      : (Map[Int, Array[Byte]], Map[Int, Array[Byte]]) = {
+    val recorded = st.bounds.flatMap { case (name, (mn, mx)) =>
+      topFields.get(name).filter { case (_, dt) => (dt, mn) match {
+        case (StringType, _: DataFiles.Utf8Bytes) |
+             (IntegerType, _: java.lang.Integer) |
+             (LongType, _: java.lang.Long) |
+             (FloatType, _: java.lang.Float) |
+             (DoubleType, _: java.lang.Double) => true
+        case _ => false
+      }}.map { case (id, _) =>
+        (id, singleValueBytes(mn), singleValueBytes(mx))
       }
-      val lower = scala.collection.mutable.Map.empty[Int, Array[Byte]]
-      val upper = scala.collection.mutable.Map.empty[Int, Array[Byte]]
-      acc.foreach { case (name, (mn, mx)) =>
-        for (lb <- singleValueBytes(mn); ub <- singleValueBytes(mx)) {
-          lower(topFields(name)._1) = lb
-          upper(topFields(name)._1) = ub
-        }
+    }
+    (recorded.map(r => r._1 -> r._2).toMap, recorded.map(r => r._1 -> r._3).toMap)
+  }
+
+  /** A manifest entry's `lower_bounds`/`upper_bounds` value: the union
+    * [null, array-with-map-logicalType] of (field id, bound) records,
+    * sorted by id; null when no bound was recorded.
+    */
+  private def boundsArray(dataFileSchema: Schema, fieldName: String,
+                          m: Map[Int, Array[Byte]]): AnyRef =
+    if (m.isEmpty) null
+    else {
+      val arrSchema = dataFileSchema.getField(fieldName).schema()
+        .getTypes.get(1)
+      val arr = new GenericData.Array[GenericRecord](m.size, arrSchema)
+      m.toSeq.sortBy(_._1).foreach { case (k, v) =>
+        arr.add(record(arrSchema.getElementType)(
+          "key" -> k, "value" -> java.nio.ByteBuffer.wrap(v)))
       }
-      (lower.toMap, upper.toMap)
-    } catch {
-      case scala.util.control.NonFatal(_) => (Map.empty, Map.empty)
+      arr
     }
 
   /** Spec "Binary single-value serialization": little-endian numerics,
     * UTF-8 strings.
     */
-  private def singleValueBytes(v: Any): Option[Array[Byte]] = {
+  private def singleValueBytes(v: Any): Array[Byte] = {
     import java.nio.{ByteBuffer, ByteOrder}
     def le(n: Int) = ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
     v match {
-      case i: java.lang.Integer => Some(le(4).putInt(i).array())
-      case l: java.lang.Long    => Some(le(8).putLong(l).array())
-      case f: java.lang.Float   => Some(le(4).putFloat(f).array())
-      case d: java.lang.Double  => Some(le(8).putDouble(d).array())
-      case u: Utf8Bytes         => Some(u.bytes)
-      case s: String            => Some(s.getBytes(StandardCharsets.UTF_8))
-      case _                    => None
+      case i: java.lang.Integer   => le(4).putInt(i).array()
+      case l: java.lang.Long      => le(8).putLong(l).array()
+      case f: java.lang.Float     => le(4).putFloat(f).array()
+      case d: java.lang.Double    => le(8).putDouble(d).array()
+      case u: DataFiles.Utf8Bytes => u.bytes
     }
   }
 
-  /** Decode a spec single-value bound into [[keyComparable]]'s domain for
-    * the type: UTF-8 bytes for strings, IEEE doubles for float/double
-    * (infinities compare fine as doubles; a decimal constructor would
-    * throw on them), integer BigDecimal for int/long.
+  /** A file's manifest [lower, upper] bound on field `fid`, decoded from
+    * the spec's single-value binary for a `dt` key ([[DataFiles.key]]
+    * compares it); None when the writer recorded none.
     */
-  private def decodeBound(tpe: String, b: Array[Byte]): Comparable[Any] = {
+  private def bounds(dt: DataType, fid: Int)(fi: FileInfo): Option[(Any, Any)] = {
     import java.nio.{ByteBuffer, ByteOrder}
-    def le = ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
-    (tpe match {
-      case "string" => new Utf8Bytes(b)
-      case "int"    => new java.math.BigDecimal(le.getInt)
-      case "long"   => java.math.BigDecimal.valueOf(le.getLong)
-      case "float"  => java.lang.Double.valueOf(le.getFloat.toDouble)
-      case "double" => java.lang.Double.valueOf(le.getDouble)
-      case other    => sys.error(s"bounds unsupported for type $other")
-    }).asInstanceOf[Comparable[Any]]
+    def decode(b: Array[Byte]): Any = {
+      def le = ByteBuffer.wrap(b).order(ByteOrder.LITTLE_ENDIAN)
+      dt match {
+        case StringType  => new DataFiles.Utf8Bytes(b)
+        case IntegerType => le.getInt
+        case LongType    => le.getLong
+        case FloatType   => le.getFloat
+        case DoubleType  => le.getDouble
+        case other       => sys.error(s"bounds unsupported for type $other")
+      }
+    }
+    for (lb <- fi.lowerBounds.get(fid); ub <- fi.upperBounds.get(fid))
+      yield (decode(lb), decode(ub))
   }
 
-  /** A hive dir value, typed for the manifest's partition record (the
-    * shared [[HivePaths]] decoder; a null marker stores null).
+  /** A decoded hive dir value ([[DataFiles.StagedFile.partition]]),
+    * typed for the manifest's partition record (null stores null).
     */
-  private def typedPartitionValue(raw: String, dt: DataType): Any = {
-    val v = HivePaths.unescape(raw)
+  private def typedPartitionValue(v: String, dt: DataType): Any = {
     if (v == null) return null
     if (v == "__HIVE_DEFAULT_PARTITION__") null
     else dt match {
@@ -1517,8 +1446,6 @@ object IcebergLite {
     //    transform, the dir name carrying the value), then publish under
     //    data/ with snapshot-stamped names (metadata, not the listing,
     //    defines the table)
-    val staging = new Path(root,
-      s".staging-s${nameToken.getOrElse(snapId.toString)}")
     // non-identity transforms: derive the partition-value columns (they
     // are consumed by partitionBy into the dir names; the SOURCE columns
     // stay in the data files, so reads need no value reconstruction)
@@ -1526,19 +1453,6 @@ object IcebergLite {
       .foldLeft(df) { (d, sc) =>
         d.withColumn(sc.name, IcebergTransforms.transformColumn(
           sc.transform, d(sc.source), df.schema(sc.source).dataType))
-      }
-    val w0 = stageDf.write.mode("overwrite")
-    val dirCols = specCols.map(_.name)
-    (if (dirCols.isEmpty) w0 else w0.partitionBy(dirCols: _*))
-      .parquet(staging.toString)
-    def leaves(dir: Path, rel: String): Seq[(Path, String)] =
-      f.listStatus(dir).toSeq.flatMap { st =>
-        val n = st.getPath.getName
-        if (st.isDirectory && n.contains("="))
-          leaves(st.getPath, if (rel.isEmpty) n else s"$rel/$n")
-        else if (n.startsWith("part-") && n.endsWith(".parquet"))
-          Seq((st.getPath, rel))
-        else Nil
       }
     f.mkdirs(dataDir(table))
     // top-level field ids for the bound maps, from the EFFECTIVE schema
@@ -1554,26 +1468,19 @@ object IcebergLite {
     // two racers at the same prospective snapshot id can never clobber
     // each other's data files
     val partTag = nameToken.getOrElse(f"$snapId%05d")
-    val named = leaves(staging, "").zipWithIndex.map { case ((p, relDir), i) =>
-      val rel =
-        if (relDir.isEmpty) f"data/part-$partTag-$i%05d.parquet"
-        else f"data/$relDir/part-$partTag-$i%05d.parquet"
-      val target = new Path(root, rel)
-      f.mkdirs(target.getParent)
-      require(f.rename(p, target), s"rename failed: $p")
+    val stageId = s"s${nameToken.getOrElse(snapId.toString)}"
+    val named = DataFiles.stage(spark, root, stageDf, stageId,
+      specCols.map(_.name)) { (i, relDir) =>
+      if (relDir.isEmpty) f"data/part-$partTag-$i%05d.parquet"
+      else f"data/$relDir/part-$partTag-$i%05d.parquet"
+    }.map { sf =>
       // spec-required record_count + the spec's lower/upper bound maps
       // (field-ids 125/128), from the parquet footer (driver-side,
       // metadata-only — the stats real planners prune with)
-      val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          target, spark.sparkContext.hadoopConfiguration))
-      val (rows, bounds) =
-        try (footer.getRecordCount, footerBounds(footer, topFields))
-        finally footer.close()
-      (rel, f.getFileStatus(target).getLen, rows, relDir,
-        bounds._1, bounds._2)
+      val st = footerOf(table, new Path(root, sf.rel), sf.stats)
+      val (lower, upper) = manifestBounds(st, topFields)
+      (sf.rel, sf.size, st.numRecords, sf.partition, lower, upper)
     }
-    f.delete(staging, true)
 
     // 2. manifest: ADDED entries for the new files (typed partition
     //    values parsed back out of the hive dirs); on overwrite, DELETED
@@ -1583,34 +1490,14 @@ object IcebergLite {
     val entrySchema = manifestEntrySchema(partCols)
     val dataFileSchema = entrySchema.getField("data_file").schema()
     val partSchema = dataFileSchema.getField("partition").schema()
-    def partRecord(relDir: String): GenericRecord = {
+    def partRecord(partition: Map[String, String]): GenericRecord = {
       val r = new GenericData.Record(partSchema)
-      if (relDir.nonEmpty) {
-        val byName = relDir.split("/").toSeq.map { seg =>
-          val Array(k, v) = seg.split("=", 2)
-          k -> v
-        }.toMap
-        partCols.foreach(c => byName.get(c.name).foreach(v =>
-          r.put(c.name, typedPartitionValue(v, c.dataType))))
-      }
+      partCols.foreach(c => partition.get(c.name).foreach(v =>
+        r.put(c.name, typedPartitionValue(v, c.dataType))))
       r
     }
-    def boundsArray(fieldName: String,
-                    m: Map[Int, Array[Byte]]): AnyRef =
-      if (m.isEmpty) null
-      else {
-        // union [null, array-with-map-logicalType]
-        val arrSchema = dataFileSchema.getField(fieldName).schema()
-          .getTypes.get(1)
-        val arr = new GenericData.Array[GenericRecord](m.size, arrSchema)
-        m.toSeq.sortBy(_._1).foreach { case (k, v) =>
-          arr.add(record(arrSchema.getElementType)(
-            "key" -> k, "value" -> java.nio.ByteBuffer.wrap(v)))
-        }
-        arr
-      }
     def entry(status: Int, path: String, size: Long, rows: Long,
-              relDir: String, lower: Map[Int, Array[Byte]],
+              partition: Map[String, String], lower: Map[Int, Array[Byte]],
               upper: Map[Int, Array[Byte]]): GenericRecord =
       record(entrySchema)(
         "status" -> status, "snapshot_id" -> snapId,
@@ -1618,14 +1505,14 @@ object IcebergLite {
         "data_file" -> record(dataFileSchema)(
           "content" -> 0,
           "file_path" -> path, "file_format" -> "PARQUET",
-          "partition" -> partRecord(relDir), "record_count" -> rows,
+          "partition" -> partRecord(partition), "record_count" -> rows,
           "file_size_in_bytes" -> size, "block_size_in_bytes" -> (128L << 20),
-          "lower_bounds" -> boundsArray("lower_bounds", lower),
-          "upper_bounds" -> boundsArray("upper_bounds", upper)))
+          "lower_bounds" -> boundsArray(dataFileSchema, "lower_bounds", lower),
+          "upper_bounds" -> boundsArray(dataFileSchema, "upper_bounds", upper)))
     val entries =
-      named.map { case (p, size, rows, relDir, lower, upper) =>
-        entry(1, p, size, rows, relDir, lower, upper) } ++
-        removed.map(p => entry(2, p, 0L, 0L, "", Map.empty, Map.empty))
+      named.map { case (p, size, rows, partition, lower, upper) =>
+        entry(1, p, size, rows, partition, lower, upper) } ++
+        removed.map(p => entry(2, p, 0L, 0L, Map.empty, Map.empty, Map.empty))
     f.mkdirs(metaDir(table))
     val manifestRel = s"metadata/m-$partTag-0.avro"
     val manifestLen = writeAvro(f, new Path(root, manifestRel),
@@ -1925,13 +1812,10 @@ object IcebergLite {
   def selectiveMerge(spark: SparkSession, table: String, updates: DataFrame,
                      keys: Seq[String], partitionCol: String = "",
                      skewSafe: Boolean = false,
-                     maxPruneKeys: Int = DeltaLite.DefaultMaxPruneKeys,
+                     maxPruneKeys: Int = DataFiles.DefaultMaxPruneKeys,
                      clauses: Seq[graft.operators.MergeClause] = Nil,
                      schemaEvolution: Boolean = false)
       : MergeStats = {
-    require(!schemaEvolution || clauses.isEmpty,
-      s"$table: schemaEvolution composes with the plain upsert only " +
-        "(clause merges name explicit columns — align the source first)")
     val meta0 = metadata(spark, table)
     val spec = partitionSpecFields(meta0)
     val specSourceName: Map[Int, String] =
@@ -1942,109 +1826,65 @@ object IcebergLite {
     val identityOnly = spec.forall(_.transform == "identity")
     val snap = snapshot(spark, table)
     val noPrune = (snap.detail, Seq.empty[FileInfo])
+    val pruneCol = if (partitionCol.nonEmpty) partitionCol else keys.head
     val (touched, skipped) =
       // whenNotMatchedBySource clauses involve EVERY target row by
       // definition — pruning untouched partitions/files would hide rows
       // from the clause
       if (graft.operators.MergeClause.touchesBySource(clauses)) noPrune
-      else if (partitionCol.nonEmpty) {
-        // partitioned table: prune whole partitions on the manifests'
-        // typed partition values — TRANSFORM-AWARE: each spec field
-        // sourced from partitionCol admits exactly the partition values
-        // its transform maps the batch keys to (bucket hashes, day
-        // numbers, truncated prefixes, identity raw values)
-        DeltaLite.boundedKeys(updates, partitionCol, maxPruneKeys) match {
-          case None => noPrune
-          case Some(rows) =>
-            val fieldsOnCol = spec.filter(tf =>
-              specSourceName.get(tf.sourceId).contains(partitionCol))
+      else DataFiles.boundedKeys(updates, pruneCol, maxPruneKeys) match {
+        case None => noPrune
+        case Some(rows) if partitionCol.nonEmpty =>
+          // partitioned table: prune whole partitions on the manifests'
+          // typed partition values — TRANSFORM-AWARE: each spec field
+          // sourced from partitionCol admits exactly the partition values
+          // its transform maps the batch keys to (bucket hashes, day
+          // numbers, truncated prefixes, identity raw values)
+          val fieldsOnCol = spec.filter(tf =>
+            specSourceName.get(tf.sourceId).contains(partitionCol))
+          val admitted: Option[Seq[(String, Set[String])]] =
             if (fieldsOnCol.isEmpty && spec.nonEmpty &&
-                !spec.exists(_.name == partitionCol)) noPrune
-            else if (spec.isEmpty || (identityOnly && fieldsOnCol.isEmpty)) {
+                !spec.exists(_.name == partitionCol)) None
+            else if (spec.isEmpty || (identityOnly && fieldsOnCol.isEmpty))
               // legacy identity layout keyed by field NAME
-              val updParts: Set[String] =
-                rows.map(r => String.valueOf(r.get(0))).toSet
-              snap.detail.partition { fi =>
-                fi.partition.get(partitionCol) match {
-                  case Some(v) if v != null => updParts.contains(v)
-                  case _                    => true // unknown: rewrite
-                }
-              }
-            } else {
+              Some(Seq(partitionCol -> DataFiles.keyStrings(rows)))
+            else {
               val tpe = topField(meta0, table, partitionCol)._1
               val T = IcebergTransforms
-              val valueSets: Seq[(T.PartField, Set[String])] =
-                fieldsOnCol.map { tf =>
-                  val vs: Set[String] = tf.transform match {
-                    case "identity" =>
-                      rows.map(r => String.valueOf(r.get(0))).toSet
-                    case t if T.isTimeTransform(t) =>
-                      rows.map(r =>
-                        T.timeValue(t, tpe, r.get(0)).toString).toSet
-                    case t if T.bucketN(t).isDefined =>
-                      rows.map(r => T.bucketOf(tpe, r.get(0),
-                        T.bucketN(t).get).toString).toSet
-                    case t if T.truncW(t).isDefined =>
-                      rows.map(r => T.truncateOf(tpe, r.get(0),
-                        T.truncW(t).get).toString).toSet
-                    case _ => null // unknown transform: no pruning
-                  }
-                  tf -> vs
+              Some(fieldsOnCol.flatMap { tf =>
+                val vs: Option[Set[String]] = tf.transform match {
+                  case "identity" => Some(DataFiles.keyStrings(rows))
+                  case t if T.isTimeTransform(t) => Some(rows.map(r =>
+                    T.timeValue(t, tpe, r.get(0)).toString).toSet)
+                  case t if T.bucketN(t).isDefined => Some(rows.map(r =>
+                    T.bucketOf(tpe, r.get(0), T.bucketN(t).get).toString).toSet)
+                  case t if T.truncW(t).isDefined => Some(rows.map(r =>
+                    T.truncateOf(tpe, r.get(0), T.truncW(t).get).toString).toSet)
+                  case _ => None // unknown transform: no pruning
                 }
-              snap.detail.partition { fi =>
-                valueSets.forall { case (tf, vs) =>
-                  vs == null || (fi.partition.get(tf.name) match {
-                    case Some(v) if v != null => vs.contains(v)
-                    case _                    => true // unknown: rewrite
-                  })
-                }
-              }
+                vs.map(tf.name -> _)
+              })
             }
-        }
-      } else {
-        // unpartitioned table: prune on the manifests' column bound maps
-        // for the first merge key — the DeltaLite add-stats shape, so a
-        // range-clustered (Z-ORDERed) Iceberg table merges ∝ touched
-        // files too. Bound-less files rewrite conservatively.
-        val keyCol = keys.head
-        val (tpe, fid) = topField(metadata(spark, table), table, keyCol)
-        // null keys never equi-join an existing row (they land as
-        // inserts), so they don't drive the prune — and must not NPE it
-        DeltaLite.boundedKeys(updates, keyCol, maxPruneKeys) match {
-          case None => noPrune
-          case Some(keyRows) =>
-        val sortedKeys: Array[Comparable[Any]] = keyRows
-          .map(r => keyComparable(tpe, r.get(0))).sortWith(_.compareTo(_) < 0)
-        snap.detail.partition { fi =>
-          (fi.lowerBounds.get(fid), fi.upperBounds.get(fid)) match {
-            case (Some(lb), Some(ub)) =>
-              val lo = decodeBound(tpe, lb)
-              val hi = decodeBound(tpe, ub)
-              // first key ≥ lo, then check ≤ hi
-              var l = 0; var r = sortedKeys.length
-              while (l < r) {
-                val m = (l + r) >>> 1
-                if (lo.compareTo(sortedKeys(m)) > 0) l = m + 1 else r = m
-              }
-              l < sortedKeys.length && hi.compareTo(sortedKeys(l)) >= 0
-            case _ => true
-          }
-        }
-        }
+          admitted.fold(noPrune)(DataFiles.partitionPrune(snap.detail, _)(
+            (fi, field) => fi.partition.get(field).flatMap(Option(_))))
+        case Some(rows) =>
+          // unpartitioned table: prune on the manifests' column bound maps
+          // for the first merge key — the DeltaLite add-stats shape, so a
+          // range-clustered (Z-ORDERed) Iceberg table merges ∝ touched
+          // files too. Bound-less files rewrite conservatively.
+          val (tpe, fid) = topField(meta0, table, pruneCol)
+          if (!BoundedTypes(tpe)) noPrune
+          else DataFiles.keyPrune(snap.detail, primitive(tpe), rows)(
+            bounds(primitive(tpe), fid))
       }
     val base =
       if (touched.isEmpty) spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], snap.schema)
       else readWithDeletes(spark, table, snap, touched)
-    val merged =
-      if (clauses.nonEmpty) graft.operators.LakehouseOps
-        .mergeClauses(base, updates, keys, clauses, skewSafe = skewSafe)
-      else graft.operators.LakehouseOps
-        // MERGE WITH SCHEMA EVOLUTION: source-only columns join the
-        // schema additively (commit's append-drift channel re-keys the
-        // metadata schema; untouched files read the new columns as null)
-        .mergeUpsert(base, updates, keys, skewSafe = skewSafe,
-          autoAlign = schemaEvolution)
+    // schema evolution's source-only columns re-key the metadata schema
+    // through commit's append-drift channel
+    val merged = graft.operators.LakehouseOps.merge(base, updates, keys,
+      clauses, skewSafe, schemaEvolution)
     // rewrite under the table's OWN layout: the FULL spec (identity
     // fields included — collapsing to just partitionCol would drop the
     // other partition columns from the rewritten metadata/dirs) is
@@ -2114,18 +1954,6 @@ object IcebergLite {
     val entrySchema = manifestEntrySchema(Nil)
     val dataFileSchema = entrySchema.getField("data_file").schema()
     val partSchema = dataFileSchema.getField("partition").schema()
-    def boundsArray(fieldName: String, m: Map[Int, Array[Byte]]): AnyRef =
-      if (m.isEmpty) null
-      else {
-        val arrSchema = dataFileSchema.getField(fieldName).schema()
-          .getTypes.get(1)
-        val arr = new GenericData.Array[GenericRecord](m.size, arrSchema)
-        m.toSeq.sortBy(_._1).foreach { case (k, v) =>
-          arr.add(record(arrSchema.getElementType)(
-            "key" -> k, "value" -> java.nio.ByteBuffer.wrap(v)))
-        }
-        arr
-      }
     val entries = files.map { p =>
       val qualified = f.makeQualified(new Path(p))
       val size = f.getFileStatus(qualified).getLen
@@ -2137,11 +1965,9 @@ object IcebergLite {
         case Some(n) =>
           (n, (Map.empty[Int, Array[Byte]], Map.empty[Int, Array[Byte]]))
         case None =>
-          val footer = org.apache.parquet.hadoop.ParquetFileReader.open(
-            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-              qualified, spark.sparkContext.hadoopConfiguration))
-          try (footer.getRecordCount, footerBounds(footer, topFields))
-          finally footer.close()
+          val st = footerOf(table, qualified, DataFiles.footerStats(
+            spark.sparkContext.hadoopConfiguration, qualified))
+          (st.numRecords, manifestBounds(st, topFields))
       }
       record(entrySchema)(
         "status" -> 1, "snapshot_id" -> snapId,
@@ -2152,8 +1978,8 @@ object IcebergLite {
           "partition" -> new GenericData.Record(partSchema),
           "record_count" -> rows, "file_size_in_bytes" -> size,
           "block_size_in_bytes" -> (128L << 20),
-          "lower_bounds" -> boundsArray("lower_bounds", bounds._1),
-          "upper_bounds" -> boundsArray("upper_bounds", bounds._2)))
+          "lower_bounds" -> boundsArray(dataFileSchema, "lower_bounds", bounds._1),
+          "upper_bounds" -> boundsArray(dataFileSchema, "upper_bounds", bounds._2)))
     }
     f.mkdirs(metaDir(table))
     val manifestRel = f"metadata/m-$snapId%05d-0.avro"
@@ -3167,7 +2993,6 @@ object IcebergLite {
   def changes(spark: SparkSession, table: String, fromSnapshotId: Long,
               toSnapshotId: Option[Long], keys: Seq[String],
               withVersion: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions._
     require(keys.nonEmpty, "changes needs the key columns for classification")
     val meta = metadata(spark, table)
     val ids = Option(meta.get("snapshots")).map(_.elements().asScala.toSeq)
@@ -3181,24 +3006,11 @@ object IcebergLite {
     val from = snapshot(spark, table, Some(fromSnapshotId))
     val to = snapshot(spark, table, Some(toId))
     val (changedNew, changedOld) = changedSplit(spark, table, from, to)
-    // additive-evolution alignment: project each side to the TO schema,
-    // null-filling columns the old snapshot doesn't carry
-    val schema = to.schema
-    val dataCols = schema.fieldNames.toIndexedSeq
-    def aligned(df: DataFrame): DataFrame = {
-      val have = df.columns.toSet
-      df.select(schema.fields.toIndexedSeq.map { fld =>
-        if (have.contains(fld.name)) col(s"`${fld.name}`")
-        else lit(null).cast(fld.dataType).as(fld.name)
-      }: _*)
-    }
-    val newSide = aligned(readWithDeletes(spark, table, to, changedNew))
-    val oldSide = aligned(readWithDeletes(spark, table, from, changedOld))
     // the shared symmetric-diff classifier cancels rows whose visibility
     // didn't actually change (compaction rewrites) in ONE scan per side
-    val out = ChangeFeed.classify(newSide, oldSide, keys, dataCols)
-    if (withVersion) out.withColumn("_commit_version", lit(toIdx.toLong))
-    else out
+    ChangeFeed.netDiff(readWithDeletes(spark, table, to, changedNew),
+      readWithDeletes(spark, table, from, changedOld), to.schema, keys,
+      if (withVersion) Some(toIdx.toLong) else None)
   }
 
   /** TIMESTAMP AS OF — [[DeltaLite.readAsOf]]'s Iceberg face: resolve

@@ -333,6 +333,14 @@ class DeltaLiteSpec extends SparkSpec {
     val plan = scan.df.queryExecution.executedPlan.toString
     assert(plan.contains("GreaterThanOrEqual(k,110)"),
       "residual range filter lost scan pushdown")
+    // a FLOAT bound widens from the float: 0.3f is 0.30000001192092896
+    // to the residual filter, so a lower bound of 0.30000001 keeps it
+    val tf = newTable()
+    DeltaLite.commit(spark, tf, Seq(0.3f).toDF("f"))
+    val fScan = DeltaLite.readWhere(spark, tf, "f", 0.30000001, 1.0)
+    assert(fScan.filesScanned == 1 && fScan.filesSkipped == 0,
+      s"float file mis-pruned: ${fScan.filesScanned}/${fScan.filesSkipped}")
+    assert(fScan.df.count() == 1)
   }
 
   test("optimizeZorder re-clusters an interleaved table so stats pruning " +

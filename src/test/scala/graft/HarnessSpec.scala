@@ -106,6 +106,13 @@ class HarnessSpec extends SparkSpec {
     assert(eAll == 0)
     assert(new com.fasterxml.jackson.databind.ObjectMapper()
       .readTree(jAll).size() == 5)
+    // names are JSON-escaped: a quote or backslash keeps the line parseable
+    val odd = Seq("q\"quoted\"" -> 2.0, "back\\slash" -> 1.0)
+    val (jOdd, eOdd) = Bench.trimmedQueriesJson(odd, 1500)
+    val nOdd = new com.fasterxml.jackson.databind.ObjectMapper().readTree(jOdd)
+    assert(eOdd == 0 && nOdd.size() == 2)
+    assert(nOdd.get("q\"quoted\"").asDouble() == 2.0)
+    assert(nOdd.get("back\\slash").asDouble() == 1.0)
     // 3-significant-digit rendering keeps entries short and ratio-precise
     assert(Bench.sig3(1.2445823263655322) == "1.24")
     assert(Bench.sig3(0.8800444771027348) == "0.88")

@@ -70,6 +70,23 @@ class TypeWideningSpec extends SparkSpec {
       DeltaLite.widenColumn(spark, t, "s", "long"))
   }
 
+  test("float->double widen: pre-widen files' FLOAT stats keep pruning " +
+    "exact against double bounds, and post-widen DOUBLE stats too") {
+    val t = newTable("graft_widen_float")
+    DeltaLite.commit(spark, t, Seq((1, 0.3f)).toDF("k", "f"))  // v0, float
+    DeltaLite.widenColumn(spark, t, "f", "double")             // v1
+    DeltaLite.commit(spark, t, Seq((2, 0.1)).toDF("k", "f")
+      .select(col("k").cast("int"), col("f")))                 // v2, double
+    // 0.3f reads as 0.30000001192092896 after the widen: its file holds
+    // a row in [0.30000001, 1.0]; the double 0.1 file holds 0.1 exactly
+    val up = DeltaLite.readWhere(spark, t, "f", 0.30000001, 1.0)
+    assert(up.df.count() == 1 && up.filesScanned == 1,
+      s"pre-widen file mis-pruned: ${up.filesScanned}/${up.filesSkipped}")
+    val low = DeltaLite.readWhere(spark, t, "f", 0.0, 0.1)
+    assert(low.df.count() == 1 && low.filesScanned == 1,
+      s"post-widen file mis-pruned: ${low.filesScanned}/${low.filesSkipped}")
+  }
+
   test("a forged foreign typeWidening table reads (reader gate admits " +
     "the feature); time travel below the widen keeps the narrow schema") {
     val t = newTable("graft_widen_foreign")
