@@ -1,18 +1,93 @@
 package graft
 
+import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType, TimestampType}
 
 /** Loaders for the driver-generated test tables (TESTDATA.md).
   *
   * Plain parquet reads: Spark's DataSource v2 parquet scan gives predicate
   * pushdown, column pruning and vectorized decode for free — every operator
   * in this library builds a declarative plan on top of these.
+  *
+  * Each table path resolves once per session and file state: the first
+  * load infers the schema (a one-task Spark job) and the first fanned-out
+  * load decides the fan-out; later loads of an unchanged table reuse both
+  * and only re-list the path (see [[Resolution]]).
   */
 object Tables {
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
   def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+    resolve(spark, s"$dir/$name.parquet")._1
+
+  /** What a table path resolved to, valid while `state` holds. */
+  private final case class Resolution(state: FileState, schema: StructType,
+                                      fansOut: Option[Boolean])
+
+  /** Everything schema inference and the fan-out verdict read: the leaf
+    * files (path, length, modification time) of one listing, the
+    * session's conf (parquet type mapping, split sizing) and the
+    * parallelism the verdict targets.
+    */
+  private final case class FileState(files: Seq[(String, Long, Long)],
+                                     conf: Map[String, String],
+                                     parallelism: Int)
+
+  // One entry per (session, path); weak-keyed so sessions are not pinned
+  // (the GraftCatalog.registries pattern).
+  private val resolutions =
+    java.util.Collections.synchronizedMap(
+      new java.util.WeakHashMap[SparkSession, TrieMap[String, Resolution]]())
+
+  private def resolutionsOf(s: SparkSession): TrieMap[String, Resolution] =
+    resolutions.synchronized {
+      var r = resolutions.get(s)
+      if (r == null) {
+        r = TrieMap.empty[String, Resolution]
+        resolutions.put(s, r)
+      }
+      r
+    }
+
+  private def fileState(s: SparkSession, path: String): Option[FileState] =
+    try {
+      val p = new Path(path)
+      val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+      def leaves(st: FileStatus): Seq[(String, Long, Long)] =
+        if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves)
+        else Seq((st.getPath.toString, st.getLen, st.getModificationTime))
+      Some(FileState(fs.listStatus(p).toSeq.flatMap(leaves).sorted,
+        s.conf.getAll, s.sparkContext.defaultParallelism))
+    } catch {
+      // unlistable: the uncached read below raises the error it always did
+      case NonFatal(_) => None
+    }
+
+  /** A fresh DataFrame over `path` (distinct attribute ids on every call,
+    * so self-joins resolve) plus the resolution it came from. An
+    * unchanged file state reads with the recorded schema — no inference
+    * job; a changed one re-infers and replaces the entry.
+    */
+  private def resolve(s: SparkSession, path: String)
+      : (DataFrame, Option[Resolution]) =
+    fileState(s, path) match {
+      case None => (s.read.parquet(path), None)
+      case Some(state) =>
+        val cache = resolutionsOf(s)
+        cache.get(path).filter(_.state == state) match {
+          case Some(r) => (s.read.schema(r.schema).parquet(path), Some(r))
+          case None =>
+            val df = s.read.parquet(path)
+            val r = Resolution(state, df.schema, None)
+            cache.put(path, r)
+            (df, Some(r))
+        }
+    }
 
   def region(s: SparkSession, d: String): DataFrame    = load(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame    = load(s, d, "nation")
@@ -21,9 +96,45 @@ object Tables {
   def part(s: SparkSession, d: String): DataFrame      = load(s, d, "part")
   def orders(s: SparkSession, d: String): DataFrame    = load(s, d, "orders")
   def lineitem(s: SparkSession, d: String): DataFrame  =
-    fanOut(s, load(s, d, "lineitem"), Seq("l_orderkey"))
+    fanOutFor(s, d, "lineitem", Seq("l_orderkey"))
 
-  /** Fan an under-split scan out to the session's parallelism.
+  /** Opt-in fan-out for operators whose PER-ROW work is heavy enough to
+    * out-cost the shuffle (JSON parsing, codecs) over a table that
+    * doesn't fan out by default — same decision rule as the table-level
+    * wrapping, caller-chosen. The table-level loaders go through here
+    * too: the verdict is recorded with the table's [[Resolution]], so an
+    * unchanged table pays neither `df.rdd` planning nor footer reads.
+    */
+  private[graft] def fanOutFor(s: SparkSession, d: String, name: String,
+                               keys: Seq[String] = Nil): DataFrame = {
+    val path = s"$d/$name.parquet"
+    val (df, res) = resolve(s, path)
+    val fan = res.flatMap(_.fansOut).getOrElse {
+      val v = fansOut(s, df)
+      res.foreach(r => resolutionsOf(s).replace(path, r, r.copy(fansOut = Some(v))))
+      v
+    }
+    val target = s.sparkContext.defaultParallelism
+    if (!fan) df
+    // Deterministic-key hash fan-out beats the keyless round-robin
+    // when the table has a natural key: RoundRobinPartitioning pays a
+    // local sort of its entire input for retry determinism
+    // (spark.sql.execution.sortBeforeRepartition, guide §2.5) while a
+    // hash of real key columns is retry-deterministic for free — the
+    // r20 FanoutProbe measured the lineitem exchange at 0.88 s
+    // round-robin vs 0.60 s keyed (narrow consumer) and 1.43 vs
+    // 0.84 s (wide). Keying lineitem on l_orderkey additionally makes
+    // the fan-out exchange SATISFY downstream ClusteredDistribution
+    // requirements on the same key (guide §2.4): lineitem⋈orders
+    // joins and l_orderkey aggregates reuse this exchange instead of
+    // planning a second fact shuffle. Keys stay uniform (≤7 lines per
+    // order; doc/vec ids unique), so no §2.5 collision skew.
+    else if (keys.nonEmpty) df.repartition(target, keys.map(col): _*)
+    else df.repartition(target)
+  }
+
+  /** Whether an under-split scan should fan out to the session's
+    * parallelism.
     *
     * Parquet splits only at row-group boundaries, so a single-row-group
     * file (the shape of the driver-generated testdata) scans as ONE task —
@@ -56,21 +167,11 @@ object Tables {
     * The footer reads are driver-side metadata (≤3 files × ~ms) and only
     * happen on the few-file path.
     */
-  /** Opt-in fan-out for operators whose PER-ROW work is heavy enough to
-    * out-cost the shuffle (JSON parsing, codecs) over a table that
-    * doesn't fan out by default — same decision rule as the table-level
-    * wrapping, caller-chosen.
-    */
-  private[graft] def fanOutFor(s: SparkSession, df: DataFrame,
-                               keys: Seq[String] = Nil): DataFrame =
-    fanOut(s, df, keys)
-
-  private def fanOut(s: SparkSession, df: DataFrame,
-                     keys: Seq[String] = Nil): DataFrame = {
+  private def fansOut(s: SparkSession, df: DataFrame): Boolean = {
     val target = s.sparkContext.defaultParallelism
     val need = math.min(4, target)
     val files = df.inputFiles
-    if (files.length >= need) df
+    if (files.length >= need) false
     else {
       // Effective scan parallelism is min(byte-range splits, row groups):
       // row groups beyond the split count share a task (Spark assigns
@@ -85,34 +186,20 @@ object Tables {
       // getNumPartitions is plan-time metadata — no job runs.
       val splits = df.rdd.getNumPartitions
       val effective = math.min(splits, rowGroupCount(s, files, need))
-      if (effective >= need) df
+      if (effective >= need) false
       // within one of the target: the exchange would buy ONE extra way
       // at the cost of a full-table round trip — never worth it. The
       // `effective >= 2` guard keeps a genuinely 1-way scan falling
       // through to the repartition even when defaultParallelism == 2
       // (there need == 2 and 1 >= need - 1 would otherwise hold).
-      else if (effective >= 2 && effective >= need - 1) df
+      else if (effective >= 2 && effective >= need - 1) false
       // already-parallel LARGE scan (e.g. one ~300 MB file: ≥2 byte-range
       // splits under maxPartitionBytes): a round-robin here is the exact
       // data-proportional exchange this gate exists to avoid; only
       // genuinely serialized (1-way) or small inputs fall through to the
       // shuffle, whose cost is then bounded by the small input
-      else if (effective >= 2 && totalBytes(s, files) >= LargeInputBytes) df
-      // Deterministic-key hash fan-out beats the keyless round-robin
-      // when the table has a natural key: RoundRobinPartitioning pays a
-      // local sort of its entire input for retry determinism
-      // (spark.sql.execution.sortBeforeRepartition, guide §2.5) while a
-      // hash of real key columns is retry-deterministic for free — the
-      // r20 FanoutProbe measured the lineitem exchange at 0.88 s
-      // round-robin vs 0.60 s keyed (narrow consumer) and 1.43 vs
-      // 0.84 s (wide). Keying lineitem on l_orderkey additionally makes
-      // the fan-out exchange SATISFY downstream ClusteredDistribution
-      // requirements on the same key (guide §2.4): lineitem⋈orders
-      // joins and l_orderkey aggregates reuse this exchange instead of
-      // planning a second fact shuffle. Keys stay uniform (≤7 lines per
-      // order; doc/vec ids unique), so no §2.5 collision skew.
-      else if (keys.nonEmpty) df.repartition(target, keys.map(col): _*)
-      else df.repartition(target)
+      else if (effective >= 2 && totalBytes(s, files) >= LargeInputBytes) false
+      else true
     }
   }
 
@@ -126,9 +213,13 @@ object Tables {
     val conf = s.sparkContext.hadoopConfiguration
     files.map { f =>
       try {
-        val p = new org.apache.hadoop.fs.Path(f)
+        val p = new Path(f)
         p.getFileSystem(conf).getFileStatus(p).getLen
-      } catch { case scala.util.control.NonFatal(_) => 0L }
+      } catch {
+        case NonFatal(e) =>
+          log.warn(s"no length for $f, counting 0 bytes: $e")
+          0L
+      }
     }.sum
   }
 
@@ -146,9 +237,13 @@ object Tables {
       total += (try {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(
           org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-            new org.apache.hadoop.fs.Path(f), conf))
+            new Path(f), conf))
         try r.getFooter.getBlocks.size finally r.close()
-      } catch { case scala.util.control.NonFatal(_) => 1 })
+      } catch {
+        case NonFatal(e) =>
+          log.warn(s"no footer for $f, counting one row group: $e")
+          1
+      })
     }
     total
   }
@@ -216,7 +311,7 @@ object Tables {
   // scale posture as lineitem/embeddings: identity on any ≥4-split
   // production layout, key column is one delta-encoded int64 locally.
   def documents(s: SparkSession, d: String): DataFrame =
-    fanOut(s, load(s, d, "documents"), Seq("doc_id"))
+    fanOutFor(s, d, "documents", Seq("doc_id"))
   def embeddings(s: SparkSession, d: String): DataFrame =
-    fanOut(s, load(s, d, "embeddings"), Seq("vec_id"))
+    fanOutFor(s, d, "embeddings", Seq("vec_id"))
 }

@@ -265,7 +265,7 @@ object Relational {
     * way [[qGroupingSets]]'s did).
     */
   def qCube(s: SparkSession, dir: String): DataFrame = {
-    Tables.fanOutFor(s, Tables.orders(s, dir), Seq("o_orderkey"))
+    Tables.fanOutFor(s, dir, "orders", Seq("o_orderkey"))
       .cube("o_orderstatus", "o_orderpriority")
       .agg(count(lit(1)).as("n_orders"),
         asDouble(sum(dec(col("o_totalprice")))).as("sum_price"))

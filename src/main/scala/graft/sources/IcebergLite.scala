@@ -743,7 +743,9 @@ object IcebergLite {
       val pos = s.deletes.filter(d => d.content == 1 && d.seq >= seq &&
         d.contentOffset.isEmpty)
       if (pos.nonEmpty) {
-        val posDf = spark.read
+        // the spec's position-delete columns, read without inference (a
+        // foreign file's optional `row` column is simply not read)
+        val posDf = spark.read.schema("file_path STRING, pos BIGINT")
           .parquet(pos.map(d => resolvePath(table, d.path)): _*)
           .select(canonCol(tableAbs, col("file_path")).as("__if"),
             col("pos").as("__ip"))
