@@ -1,5 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import com.fasterxml.jackson.core.StreamWriteFeature
+import com.fasterxml.jackson.databind.JsonNode
+import com.fasterxml.jackson.databind.json.JsonMapper
+import com.fasterxml.jackson.databind.node.{NullNode, ObjectNode}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main: runs every `SparkEntry.queries` entry against
   * `SPARK_GRAFT_SF_DIR` and prints ONE JSON line.
@@ -27,6 +35,33 @@ import org.apache.spark.sql.SparkSession
   * ratio clean of compilation noise.
   */
 object Bench {
+  private type Query = (SparkSession, String) => DataFrame
+
+  // plain BigDecimals: the compact line's 3-significant-digit medians
+  // print as `211`, never `2.11E+2`
+  private val mapper = JsonMapper.builder()
+    .enable(StreamWriteFeature.WRITE_BIGDECIMAL_AS_PLAIN).build()
+
+  /** Timed samples per query in every isolated re-measure. */
+  private[graft] val IsoRuns = 3
+
+  /** Queries always re-measured ALONE at the headline SF after the suite:
+    * dba_iceberg_dv (the r14 neighbor-interference case) plus the two r15
+    * unverified-uptick queries — their isolated minima adjudicate
+    * noise-vs-regression mechanically in the artifact. */
+  private[graft] val IsolateCanaries =
+    Seq("dba_iceberg_dv", "dedup_embedding_cc_exact", "dba_delta_v2ckpt")
+
+  /** Decade canaries re-measured ALONE at both rungs: the per-row kernels
+    * whose in-suite minima ride the 2.3×+ band round after round get a
+    * standing isolated number instead of ad-hoc re-benching. */
+  private[graft] val ScaleCanaries =
+    Seq("mm_video_frames", "text_pii_scrub", "stream_interval_join")
+
+  /** Char budget of the compact final line: its readers keep only a
+    * ~2000-char stdout tail and parse the last line. */
+  private[graft] val TailBudget = 1900
+
   private def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     val n = s.length
@@ -35,16 +70,19 @@ object Bench {
     else (s(n / 2 - 1) + s(n / 2)) / 2.0
   }
 
+  /** One measured rung: its dir, per-query successful samples and
+    * per-query failure counts. */
+  private[graft] final case class Rung(dir: String,
+                                       samples: Map[String, List[Double]],
+                                       failures: Map[String, Int])
+
   /** One full measured sweep: `runs` interleaved whole-suite passes (run 1
     * of everything, then run 2, ...) rather than back-to-back repeats of
     * one query — a transient host stall then lands in at most one sample
     * of each query instead of all three samples of whichever was running.
-    * Returns per-query samples and failure counts.
     */
   private def runSuite(spark: SparkSession, sfDir: String,
-                       names: Seq[(String, (SparkSession, String) => org.apache.spark.sql.DataFrame)],
-                       runs: Int)
-      : (Map[String, List[Double]], Map[String, Int]) = {
+                       names: Seq[(String, Query)], runs: Int): Rung = {
     val samples = scala.collection.mutable.Map.empty[String, List[Double]]
     val failures = scala.collection.mutable.Map.empty[String, Int]
     for (_ <- 1 to runs; (name, fn) <- names) {
@@ -77,8 +115,28 @@ object Bench {
       sweepScratch()
       System.gc()
     }
-    (samples.toMap, failures.toMap)
+    Rung(sfDir, samples.toMap, failures.toMap)
   }
+
+  /** Min wall of [[IsoRuns]] runs of one query ALONE at `dir` — caches
+    * cleared, scratch swept, JVM settled before each sample. A thrown
+    * sample is NOT a timing (a fast abort would masquerade as "does not
+    * reproduce isolated" and bury a real regression): it is logged and
+    * skipped, and None means every sample failed.
+    */
+  private def timeIsolated(spark: SparkSession, name: String, fn: Query,
+                           dir: String): Option[Double] =
+    (1 to IsoRuns).flatMap { _ =>
+      spark.catalog.clearCache(); sweepScratch(); System.gc()
+      val t0 = System.nanoTime()
+      try {
+        fn(spark, dir).write.format("noop").mode("overwrite").save()
+        Some((System.nanoTime() - t0) / 1e9)
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] isolated $name failed at $dir: ${e.getMessage}")
+        None
+      }
+    }.minOption
 
   /** This process's scratch root: main() points java.io.tmpdir here
     * before any query runs, so every table-building query's
@@ -86,10 +144,10 @@ object Bench {
     * can never touch a CONCURRENT bench/test run's live temp tables
     * (they live under the original tmpdir, outside this root).
     */
-  private val scratchRoot: java.nio.file.Path = {
-    val r = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+  private val scratchRoot: Path = {
+    val r = Paths.get(System.getProperty("java.io.tmpdir"),
       s"graft_bench_${ProcessHandle.current().pid()}")
-    java.nio.file.Files.createDirectories(r)
+    Files.createDirectories(r)
     r
   }
 
@@ -117,13 +175,14 @@ object Bench {
   private[graft] case class HostSnap(load1: Double, load5: Double,
                                      load15: Double, runnable: Long,
                                      stealTicks: Long, totalTicks: Long) {
-    def json: String =
-      s"""{"load1":$load1,"load5":$load5,"load15":$load15,"runnable":$runnable,"steal_ticks":$stealTicks,"total_ticks":$totalTicks}"""
+    def node: ObjectNode = mapper.createObjectNode()
+      .put("load1", load1).put("load5", load5).put("load15", load15)
+      .put("runnable", runnable).put("steal_ticks", stealTicks)
+      .put("total_ticks", totalTicks)
   }
 
   private[graft] def hostSnap(): HostSnap = try {
-    val la = new String(java.nio.file.Files.readAllBytes(
-      java.nio.file.Paths.get("/proc/loadavg")),
+    val la = new String(Files.readAllBytes(Paths.get("/proc/loadavg")),
       java.nio.charset.StandardCharsets.UTF_8).trim.split("\\s+")
     val runnable = la(3).split("/")(0).toLong
     val cpu = scala.io.Source.fromFile("/proc/stat").getLines()
@@ -160,7 +219,7 @@ object Bench {
     * degraded evenings (steal 5.7%).
     */
   private[graft] def hostJson(pre: HostSnap, mid: Option[HostSnap],
-                              post: HostSnap, cpus: Int): (String, Boolean) = {
+                              post: HostSnap, cpus: Int): (ObjectNode, Boolean) = {
     val stealPct =
       if (pre.stealTicks >= 0 && post.stealTicks >= pre.stealTicks &&
           post.totalTicks > pre.totalTicks)
@@ -169,9 +228,11 @@ object Bench {
       else -1.0
     val degraded = stealPct > 2.0 ||
       (pre.load1 > 2.0 && pre.runnable > cpus / 4)
-    val midJson = mid.fold("null")(_.json)
-    (s""""host":{"pre":${pre.json},"mid":$midJson,"post":${post.json},"steal_pct":$stealPct,"degraded":$degraded}""",
-      degraded)
+    val host = mapper.createObjectNode()
+    host.set[JsonNode]("pre", pre.node)
+    host.set[JsonNode]("mid", mid.fold[JsonNode](NullNode.instance)(_.node))
+    host.set[JsonNode]("post", post.node)
+    (host.put("steal_pct", stealPct).put("degraded", degraded), degraded)
   }
 
   /** Print `line` as the FINAL stdout line no matter what the cleanups
@@ -199,9 +260,9 @@ object Bench {
     else BigDecimal(v).round(new java.math.MathContext(3))
       .bigDecimal.stripTrailingZeros.toPlainString
 
-  /** Per-query medians for the COMPACT final line, trimmed to a byte
-    * budget: slowest queries first (they carry the perf signal), as many
-    * entries as fit. Returns (mapJson, elidedCount).
+  /** Per-query medians for the COMPACT final line, trimmed to a char
+    * budget for the serialized map: slowest queries first (they carry the
+    * perf signal), as many entries as fit. Returns (map, elidedCount).
     *
     * Why trimmed: the driver captures only a ~2000-char stdout tail and
     * parses its last line, while 154 full-precision entries are ~27 KB —
@@ -213,105 +274,263 @@ object Bench {
     * the full artifact(s) on disk.
     */
   private[graft] def trimmedQueriesJson(med: Seq[(String, Double)],
-                                        budget: Int): (String, Int) = {
-    val bySlowest = med.sortBy { case (n, v) => (-v, n) }
-    val sb = new StringBuilder("{")
-    var n = 0
+                                        budget: Int): (ObjectNode, Int) = {
+    val map = mapper.createObjectNode()
+    var chars = 2 // the braces
     var full = false
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    for ((k, v) <- bySlowest if !full) {
-      // Jackson quotes the key: a name holding `"` or `\` stays valid JSON
-      val entry = (if (n == 0) "" else ",") +
-        mapper.writeValueAsString(k) + ":" + sig3(v)
-      if (sb.length + entry.length + 1 > budget) full = true
-      else { sb.append(entry); n += 1 }
+    for ((k, v) <- med.sortBy { case (n, v) => (-v, n) } if !full) {
+      val value = sig3(v)
+      // serialized entry: separator, quoted+escaped key, colon, value
+      val entry = (if (map.isEmpty) 0 else 1) +
+        mapper.writeValueAsString(k).length + 1 + value.length
+      if (chars + entry > budget) full = true
+      else { map.put(k, new java.math.BigDecimal(value)); chars += entry }
     }
-    sb.append("}")
-    (sb.toString, med.size - n)
+    (map, med.size - map.size)
   }
 
-  /** Round-over-round regression gate: compare this run's medians against
-    * the newest committed bench artifact measured at the SAME headline SF
-    * (any `BENCH_*r<N>*.json` in the working dir whose "sf" basename
-    * matches, highest round wins; `SPARK_GRAFT_BASELINE` overrides, empty
-    * disables). Returns the `"baseline"`/`"regressions"` JSON fields —
-    * regressions = per-query median growth beyond 1.5× (noise swings
-    * ±20–40 % on this host, so 1.5× is past noise for 3-run medians),
-    * `null` when no comparable artifact exists. The gate is advisory
-    * output, not an exit code: the round judge reads it from the artifact.
+  private def roundOf(name: String): Int =
+    "r0*([0-9]+)".r.findFirstMatchIn(name).map(_.group(1).toInt).getOrElse(-1)
+
+  /** Committed `BENCH_*r<N>*.json` artifacts in the working dir with their
+    * round numbers, newest round first. */
+  private def benchArtifacts(): Seq[(Path, Int)] =
+    try {
+      val s = Files.list(Paths.get("."))
+      try s.iterator().asScala.toList.flatMap { p =>
+        val n = p.getFileName.toString
+        if (n.startsWith("BENCH_") && n.endsWith(".json") && roundOf(n) >= 0)
+          Some(p -> roundOf(n))
+        else None
+      }.sortBy(-_._2)
+      finally s.close()
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] cannot list BENCH_* artifacts in " +
+        s"${Paths.get(".").toAbsolutePath.normalize}: $e")
+      Nil
+    }
+
+  /** The regression gate's baseline: the newest committed bench artifact
+    * with a `queries` map measured at the SAME headline SF (its "sf"
+    * basename matches), as (file name, per-query medians); None when none
+    * exists. An unreadable artifact is logged and skipped.
     */
-  private def regressionsJson(sfDir: String,
-                              med: Seq[(String, Double)])
-      : (String, Seq[String], Map[String, Double]) = {
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    def sfBase(p: String): String =
-      java.nio.file.Paths.get(p).getFileName.toString
-    def parse(p: java.nio.file.Path): Option[(String, Map[String, Double])] =
+  private def benchBaseline(sfDir: String): Option[(String, Map[String, Double])] = {
+    def sfBase(p: String): String = Paths.get(p).getFileName.toString
+    benchArtifacts().iterator.flatMap { case (p, _) =>
       try {
         val n = mapper.readTree(p.toFile)
-        val sfB = Option(n.get("sf")).map(_.asText).getOrElse("")
-        val qs = Option(n.get("queries")).map { q =>
-          val b = Map.newBuilder[String, Double]
-          q.propertyStream().forEach(e => b += e.getKey -> e.getValue.asDouble())
-          b.result()
-        }.getOrElse(Map.empty)
-        if (qs.nonEmpty) Some((sfB, qs)) else None
-      } catch { case _: Throwable => None }
-    val roundOf: String => Int = name =>
-      "r0*([0-9]+)".r.findFirstMatchIn(name).map(_.group(1).toInt).getOrElse(-1)
-    val chosen: Option[(java.nio.file.Path, Map[String, Double])] =
-      sys.env.get("SPARK_GRAFT_BASELINE") match {
-        case Some("") => None
-        case Some(p) =>
-          val path = java.nio.file.Paths.get(p)
-          parse(path).map { case (_, qs) => (path, qs) } // explicit: trust the SF
-        case None =>
-          val cwd = java.nio.file.Paths.get(".")
-          val files = try {
-            val s = java.nio.file.Files.list(cwd)
-            try {
-              import scala.jdk.CollectionConverters._
-              s.iterator().asScala.toList.filter { p =>
-                val n = p.getFileName.toString
-                n.startsWith("BENCH_") && n.endsWith(".json") && roundOf(n) >= 0
-              }
-            } finally s.close()
-          } catch { case _: Throwable => Nil }
-          files.sortBy(p => -roundOf(p.getFileName.toString)).iterator
-            .flatMap(p => parse(p).map { case (sfB, qs) => (p, sfB, qs) })
-            .collectFirst { case (p, sfB, qs) if sfBase(sfB) == sfBase(sfDir) => (p, qs) }
+        val sf = Option(n.get("sf")).map(_.asText).getOrElse("")
+        val qs = Option(n.get("queries")).fold(Map.empty[String, Double])(
+          _.properties().asScala.map(e => e.getKey -> e.getValue.asDouble()).toMap)
+        if (qs.nonEmpty && sfBase(sf) == sfBase(sfDir))
+          Some((p.getFileName.toString, qs))
+        else None
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] skipping unreadable bench artifact $p: $e")
+        None
       }
-    chosen match {
-      case None => (""","baseline":null,"regressions":null""", Nil, Map.empty)
-      case Some((path, base)) =>
-        val regs = med.flatMap { case (n, v) =>
-          base.get(n).collect { case b if b > 0 && v > 1.5 * b => n -> v / b }
-        }
-        val regJson = regs.map { case (k, v) => s"\"" + k + "\":" + v }
-          .mkString("{", ",", "}")
-        (s""","baseline":"${path.getFileName}","regressions":$regJson""",
-          regs.map(_._1), base)
-    }
+    }.nextOption()
   }
 
-  /** Highest round number among committed BENCH_*r<N>*.json artifacts in
-    * the working dir — the default order-shuffle seed, so each round's
-    * pass runs in a DIFFERENT deterministic order (retiring the
-    * alphabetical page-cache-interference class where a predecessor's
-    * table construction pollutes its successor's measurement).
+  /** Expected big/small wall ratio for an exactly-linear query = the size
+    * ratio of the two dirs, derived from their "sf<N>" names (both dirs
+    * are env-configurable — hard-coding 10x would mis-flag any other
+    * pair). None when either name is unparsable: flags are then OMITTED
+    * (null) rather than computed against a guessed ratio — a silent 10.0
+    * fallback would mis-flag any honestly data-proportional query on a
+    * non-default pair, the exact failure this derivation exists to avoid.
     */
-  private def latestBenchRound(): Int = {
-    val roundOf: String => Int = name =>
-      "r0*([0-9]+)".r.findFirstMatchIn(name).map(_.group(1).toInt).getOrElse(-1)
-    try {
-      val s = java.nio.file.Files.list(java.nio.file.Paths.get("."))
-      try {
-        import scala.jdk.CollectionConverters._
-        s.iterator().asScala.map(_.getFileName.toString)
-          .filter(n => n.startsWith("BENCH_") && n.endsWith(".json"))
-          .map(roundOf).foldLeft(0)(math.max)
-      } finally s.close()
-    } catch { case _: Throwable => 0 }
+  private def sizeRatio(big: String, small: String): Option[Double] = {
+    def sfOf(dir: String): Option[Double] =
+      "sf([0-9.]+)".r.findFirstMatchIn(Paths.get(dir).getFileName.toString)
+        .flatMap(m => m.group(1).toDoubleOption).filter(_ > 0)
+    for (b <- sfOf(big); s <- sfOf(small)) yield b / s
+  }
+
+  /** Ordered name → number pairs as one JSON object. */
+  private def obj(kvs: Seq[(String, AnyVal)]): ObjectNode = {
+    val m = new java.util.LinkedHashMap[String, Any]()
+    kvs.foreach { case (k, v) => m.put(k, v) }
+    mapper.valueToTree(m)
+  }
+
+  /** The full artifact line from the measured rungs. `order` is the run
+    * order (and the key order of every per-query map); `baseline` is the
+    * regression gate's (file name, medians); `isolated(name, dir)`
+    * re-times one query alone ([[timeIsolated]]); `host` yields the host
+    * block and verdict ([[hostJson]]) after the last isolated re-run.
+    */
+  private[graft] def fullArtifact(runs: Int, orderSeed: Long, order: Seq[String],
+                                  big: Rung, small: Option[Rung],
+                                  baseline: Option[(String, Map[String, Double])],
+                                  isolated: (String, String) => Option[Double],
+                                  host: () => (ObjectNode, Boolean)): ObjectNode = {
+    val measured = order.filter(big.samples.contains)
+    val med = measured.map(n => n -> median(big.samples(n)))
+    val mins = measured.map(n => n -> big.samples(n).min)
+    val total = med.map(_._2).sum
+    val ratio = small.flatMap(s => sizeRatio(big.dir, s.dir))
+    if (small.nonEmpty && ratio.isEmpty)
+      System.err.println(s"[bench] cannot parse sf<N> from '${big.dir}' / " +
+        s"'${small.get.dir}' — scale_flags omitted (ratios still reported)")
+    // Round-over-round regression gate: per-query median growth beyond
+    // 1.5× the baseline's (noise swings ±20–40 % on this host, so 1.5× is
+    // past noise for 3-run medians). The gate is advisory output, not an
+    // exit code: the round judge reads it from the artifact. It runs
+    // FIRST: regressed queries join the decade isolated watch band below,
+    // so a round-over-round uptick gets an isolated decade ratio in the
+    // same artifact that reports it (r17 shipped three unadjudicated
+    // decade `regressions`; the judge had to cross-read queries_isolated
+    // against the baseline by hand)
+    val base = baseline.fold(Map.empty[String, Double])(_._2)
+    val regs = med.flatMap { case (n, v) =>
+      base.get(n).collect { case b if b > 0 && v > 1.5 * b => n -> v / b }
+    }
+    val regNames = regs.map(_._1)
+    // scaling block: per-query medians at the small SF, per-query wall
+    // ratio big/small, total ratio, and the superlinear flags
+    val scale = small.map { case Rung(d, sSamples, sFailures) =>
+      val sMed = measured.flatMap(n => sSamples.get(n).map(xs => n -> median(xs)))
+      val sMin = measured.flatMap(n => sSamples.get(n).map(xs => n -> xs.min))
+      val sTotal = sMed.map(_._2).sum
+      val ratios = sMed.flatMap { case (n, sv) =>
+        med.find(_._1 == n).collect { case (_, bv) if sv > 0 => n -> (bv / sv) }
+      }
+      // flag input: per-query MINIMA at both SFs, not medians — the min is
+      // the run least contaminated by host stalls, so a transient freeze in
+      // one sample cannot manufacture a superlinear flag (round 7's
+      // mm_binary_pipeline false-flag came from a median-polluting stall)
+      val ratiosMin = sMin.flatMap { case (n, sv) =>
+        mins.find(_._1 == n).collect { case (_, bv) if sv > 0 => n -> (bv / sv) }
+      }
+      // The documented bar (BASELINE.md): on a DECADE rung (10× data)
+      // a per-query min ratio > 3× is super-linear growth on this
+      // suite — the suite-wide decade ratio holds ≈1.7×, so 3× is far
+      // past data-proportional here and the flags double as the
+      // watchlist. Non-decade dir pairs fall back to 1.2×r (there, 3×
+      // could exceed honest linearity plus noise headroom).
+      val bar = ratio.map(r => if (r >= 10.0) math.max(3.0, 0.3 * r) else 1.2 * r)
+      val flagged = bar.fold(Seq.empty[String])(b => ratiosMin.filter(_._2 > b).map(_._1))
+      // ADJUDICATE the flags the same way regressions are adjudicated:
+      // re-run each flagged query ALONE at BOTH rungs and record the
+      // isolated min ratio plus the flags that REPRODUCE isolated. The
+      // in-suite flag list above is untouched — this adds the
+      // noise-vs-real verdict to the artifact (stream_windowed_agg
+      // flagged 3.49× in-suite in r16 but measures 1.5× isolated:
+      // big-rung neighbor interference, the same class queries_isolated
+      // already adjudicates for the regression gate).
+      // Adjudicate the BAND under the bar too (≥80% of it): r16 left six
+      // 2.4–3.0× queries with in-suite numbers only — under the flag bar
+      // so never re-run isolated, above the suite headline so unproven.
+      // Every band member gets an isolated decade ratio in the artifact;
+      // scale_flags_isolated still counts only true over-bar repro.
+      // ... plus any round-over-round regression names (a real decade
+      // regression must reproduce isolated, in-suite noise must not) and
+      // the decade canaries ([[ScaleCanaries]])
+      val watch = (bar.fold(Seq.empty[String])(b =>
+          ratiosMin.filter(_._2 > 0.8 * b).map(_._1)) ++ regNames ++ ScaleCanaries)
+        .distinct.filter(measured.contains)
+      val isoRatios = watch.flatMap { n =>
+        for (sv <- isolated(n, d); bv <- isolated(n, big.dir); if sv > 0)
+          yield n -> (bv / sv)
+      }
+      val o = mapper.createObjectNode()
+      o.put("sf_small", d).put("total_small", sTotal)
+      ratio.fold(o.putNull("size_ratio"))(o.put("size_ratio", _))
+      o.put("scale_ratio_total", if (sTotal > 0) total / sTotal else 0.0)
+      o.set[JsonNode]("queries_small", obj(sMed))
+      o.set[JsonNode]("scale_ratio", obj(ratios))
+      o.set[JsonNode]("scale_ratio_min", obj(ratiosMin))
+      // flags are null when the size ratio is unknown (see sizeRatio)
+      def flags(ns: Seq[String]): JsonNode =
+        if (ratio.isEmpty) NullNode.instance else mapper.valueToTree(ns.asJava)
+      o.set[JsonNode]("scale_flags", flags(flagged))
+      o.set[JsonNode]("scale_ratio_isolated", obj(isoRatios))
+      o.set[JsonNode]("scale_flags_isolated",
+        flags(isoRatios.filter(r => bar.exists(r._2 > _)).map(_._1)))
+      // a query failing ONLY at the small SF would otherwise vanish from
+      // queries_small/scale_ratio with stderr-only evidence
+      o.set[JsonNode]("errors_small", obj(sFailures.toSeq.sortBy(_._1)))
+      o
+    }
+    // ISOLATED re-measure: after the whole suite, re-run the flagged
+    // regressors plus the [[IsolateCanaries]] ALONE and record the
+    // per-query isolated MINIMA. This is the noise-vs-regression
+    // adjudication number: a real regression reproduces isolated, a
+    // page-cache/host-noise artifact does not, and the judge can read
+    // it from the artifact instead of re-benching. -1 = every isolated
+    // sample failed (artifact-visible).
+    val isolate = (regNames ++ IsolateCanaries).distinct.filter(measured.contains)
+    val iso = isolate.map(n => n -> isolated(n, big.dir).getOrElse(-1.0))
+    // host state AFTER every measured run (suite + isolated re-runs): the
+    // pre→post steal delta and the pre loadavg are the degraded-window
+    // verdict; a degraded window with nonempty flags/regressions gets a
+    // machine-readable annotation so the judge never has to take prose on
+    // faith (r19 verdict item: "make host state machine-readable")
+    val (hostBlock, degraded) = host()
+
+    val line = mapper.createObjectNode()
+    line.put("metric", "total").put("value", total).put("unit", "sec")
+      .put("runs", runs).put("order_seed", orderSeed)
+    line.set[JsonNode]("queries", obj(med))
+    line.set[JsonNode]("queries_min", obj(mins))
+    line.set[JsonNode]("errors", obj(big.failures.toSeq.sortBy(_._1)))
+    line.put("sf", big.dir)
+    line.set[JsonNode]("host", hostBlock)
+    if (degraded && (regNames.nonEmpty ||
+        scale.exists(_.get("scale_flags").size > 0)))
+      line.put("host_note", "degraded_window_flags_suspect")
+    baseline match {
+      case None => line.putNull("baseline").putNull("regressions")
+      case Some((file, _)) =>
+        line.put("baseline", file).set[JsonNode]("regressions", obj(regs))
+    }
+    if (isolate.nonEmpty) {
+      line.set[JsonNode]("queries_isolated", obj(iso))
+      line.put("isolated_runs", IsoRuns)
+      // machine-readable adjudication of the regression gate: isolated
+      // min ÷ baseline median per regressed query. < 1.5 (the gate's own
+      // bar) means the in-suite uptick does not reproduce alone — host
+      // noise; ≥ 1.5 means a real regression. -1 = all isolated runs
+      // failed (inherits queries_isolated's failure sentinel).
+      if (regNames.nonEmpty)
+        line.set[JsonNode]("regressions_isolated", obj(iso.collect {
+          case (n, v) if regNames.contains(n) =>
+            n -> base.get(n).filter(_ > 0).fold(-1.0)(b => if (v < 0) -1.0 else v / b)
+        }))
+    }
+    scale.foreach(line.setAll[JsonNode](_))
+    line
+  }
+
+  /** The compact summary for stdout-tail parsers, read off the full
+    * artifact: headline numbers, counts, and `queries` as the TRIMMED
+    * slowest-first per-query map (see [[trimmedQueriesJson]]) — the whole
+    * line must stay inside [[TailBudget]] or the per-query half of the
+    * bench contract is unmet (r20 verdict item 2). `full_artifact` is the
+    * written file, null when none was written: the line never points at a
+    * file that does not exist.
+    */
+  private[graft] def compactLine(full: ObjectNode, artifact: Option[String]): ObjectNode = {
+    val c = mapper.createObjectNode()
+    Seq("metric", "value", "unit", "runs", "sf").foreach(k => c.set[JsonNode](k, full.get(k)))
+    c.put("n_queries", full.get("queries").size)
+      .put("n_errors", full.get("errors").size)
+      .put("n_regressions", full.get("regressions").size)
+    c.set[JsonNode]("scale_ratio_total",
+      Option(full.get("scale_ratio_total")).getOrElse(NullNode.instance))
+    c.set[JsonNode]("host_degraded", full.get("host").get("degraded"))
+    val med = full.get("queries").properties().asScala.toSeq
+      .map(e => e.getKey -> e.getValue.asDouble())
+    c.set[JsonNode]("queries", mapper.createObjectNode())
+    c.put("queries_elided", med.size)
+    artifact.fold(c.putNull("full_artifact"))(c.put("full_artifact", _))
+    // everything but the map's own "{}" counts against the budget
+    val (map, elided) = trimmedQueriesJson(med,
+      TailBudget - (mapper.writeValueAsString(c).length - 2))
+    c.set[JsonNode]("queries", map)
+    c.put("queries_elided", elided)
   }
 
   def main(args: Array[String]): Unit = {
@@ -319,22 +538,14 @@ object Bench {
     // (or Spark local dir) is created — see [[scratchRoot]]
     System.setProperty("java.io.tmpdir", scratchRoot.toString)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = GraftSession.cpus
     val runs = sys.env.get("SPARK_GRAFT_RUNS").map(_.toInt).filter(_ > 0).getOrElse(3)
     // second scaling point: set SPARK_GRAFT_SCALE_DIR= (empty) to disable
     val scaleDir = sys.env.getOrElse("SPARK_GRAFT_SCALE_DIR", "/root/testdata/sf0.01")
     // host state BEFORE any work starts: this is the one loadavg sample
     // that measures the NEIGHBORS, not us (see hostJson)
     val hostPre = hostSnap()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(cpus)
     // Warmup: absorb session/codegen/parquet-footer startup so the first
     // measured query isn't charged for it.
     spark.read.parquet(s"$sfDir/lineitem.parquet")
@@ -346,8 +557,7 @@ object Bench {
     // absorbs it (JIT warmup is data-independent, so the cheapest dir
     // available does); the timed medians then reflect steady state.
     try SparkEntry.queries.get("dba_table_stats_approx").foreach { fn =>
-      val warmDir = if (scaleDir.nonEmpty &&
-        java.nio.file.Files.isDirectory(java.nio.file.Paths.get(scaleDir)))
+      val warmDir = if (scaleDir.nonEmpty && Files.isDirectory(Paths.get(scaleDir)))
         scaleDir else sfDir
       fn(spark, warmDir).write.format("noop").mode("overwrite").save()
     } catch { case e: Throwable =>
@@ -357,202 +567,25 @@ object Bench {
     // Optional subset for local iteration (SparkEntry owns the contract).
     val only = SparkEntry.querySubset
     // per-round deterministic run order (seed = newest committed bench
-    // round + 1, overridable): same order within a round's passes so the
-    // two scaling rungs stay comparable, different order across rounds
-    val orderSeed: Long = sys.env.get("SPARK_GRAFT_ORDER_SEED")
-      .flatMap(_.toLongOption).getOrElse(latestBenchRound() + 1L)
-    val names = new scala.util.Random(orderSeed)
+    // round + 1): same order within a round's passes so the two scaling
+    // rungs stay comparable, a DIFFERENT order across rounds (retiring the
+    // alphabetical page-cache-interference class where a predecessor's
+    // table construction pollutes its successor's measurement)
+    val orderSeed = benchArtifacts().headOption.fold(0)(_._2) + 1L
+    val queries = new scala.util.Random(orderSeed)
       .shuffle(SparkEntry.queries.toSeq.sortBy(_._1))
       .filter { case (name, _) => only.forall(_.contains(name)) }
     // small-SF pass first (see scaladoc), then the headline pass
     val smallDir = Some(scaleDir).filter(d => d.nonEmpty && d != sfDir &&
-      java.nio.file.Files.isDirectory(java.nio.file.Paths.get(d)))
-    val small = smallDir.map(d => runSuite(spark, d, names, runs))
+      Files.isDirectory(Paths.get(d)))
+    val small = smallDir.map(d => runSuite(spark, d, queries, runs))
     val hostMid = small.map(_ => hostSnap()) // between the two rungs
-    val (samples, failures) = runSuite(spark, sfDir, names, runs)
-    // expected big/small wall ratio for an exactly-linear query = the size
-    // ratio of the two dirs, derived from their "sf<N>" names (both dirs
-    // are env-configurable — hard-coding 10x would mis-flag any other
-    // pair); unparsable names fall back to the default sf0.1/sf0.01 pair
-    def sfOf(dir: String): Option[Double] =
-      "sf([0-9.]+)".r.findFirstMatchIn(
-        java.nio.file.Paths.get(dir).getFileName.toString)
-        .flatMap(m => m.group(1).toDoubleOption).filter(_ > 0)
-    // None when either name is unparsable: flags are then OMITTED (null)
-    // rather than computed against a guessed ratio — a silent 10.0
-    // fallback would mis-flag any honestly data-proportional query on a
-    // non-default pair, the exact failure this derivation exists to avoid
-    val sizeRatio: Option[Double] =
-      for (d <- smallDir; b <- sfOf(sfDir); s <- sfOf(d)) yield b / s
-    if (smallDir.nonEmpty && sizeRatio.isEmpty)
-      System.err.println(s"[bench] cannot parse sf<N> from '$sfDir' / " +
-        s"'${smallDir.get}' — scale_flags omitted (ratios still reported)")
-    val measured = names.filter { case (n, _) => samples.contains(n) }
-    val med = measured.map { case (n, _) => n -> median(samples(n)) }
-    val mins = measured.map { case (n, _) => n -> samples(n).min }
-    def toJson(kvs: Seq[(String, Double)]): String =
-      kvs.map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val errJson = failures.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-    val total = med.map(_._2).sum
-    // scaling block: per-query medians at the small SF, per-query wall
-    // ratio big/small, total ratio, and the superlinear flags
-    // regression gate FIRST: regressed queries join the decade isolated
-    // watch band below, so a round-over-round uptick gets an isolated
-    // decade ratio in the same artifact that reports it (r17 shipped three
-    // unadjudicated decade `regressions`; the judge had to cross-read
-    // queries_isolated against the baseline by hand)
-    val (regJson, regNames, regBase) = regressionsJson(sfDir, med)
-    // in-suite scale-flag names escape the block below so the host-state
-    // gate annotation can reference them alongside the regression names
-    var scaleFlagNames: Seq[String] = Nil
-    val scaleJson = (for ((d, (sSamples, sFailures)) <- smallDir.zip(small)) yield {
-      val sMed = measured.flatMap { case (n, _) =>
-        sSamples.get(n).map(xs => n -> median(xs)) }
-      val sMin = measured.flatMap { case (n, _) =>
-        sSamples.get(n).map(xs => n -> xs.min) }
-      val sTotal = sMed.map(_._2).sum
-      val ratios = sMed.flatMap { case (n, sv) =>
-        med.find(_._1 == n).collect {
-          case (_, bv) if sv > 0 => n -> (bv / sv) }
-      }
-      // flag input: per-query MINIMA at both SFs, not medians — the min is
-      // the run least contaminated by host stalls, so a transient freeze in
-      // one sample cannot manufacture a superlinear flag (round 7's
-      // mm_binary_pipeline false-flag came from a median-polluting stall)
-      val ratiosMin = sMin.flatMap { case (n, sv) =>
-        mins.find(_._1 == n).collect {
-          case (_, bv) if sv > 0 => n -> (bv / sv) }
-      }
-      // The documented bar (BASELINE.md): on a DECADE rung (10× data)
-      // a per-query min ratio > 3× is super-linear growth on this
-      // suite — the suite-wide decade ratio holds ≈1.7×, so 3× is far
-      // past data-proportional here and the flags double as the
-      // watchlist. Non-decade dir pairs fall back to 1.2×r (there, 3×
-      // could exceed honest linearity plus noise headroom).
-      val bar = sizeRatio.map { r =>
-        if (r >= 10.0) math.max(3.0, 0.3 * r) else 1.2 * r }
-      val flagged = bar.fold(Seq.empty[String]) { b =>
-        ratiosMin.filter(_._2 > b).map(_._1) }
-      scaleFlagNames = flagged
-      val flagJson = if (sizeRatio.isEmpty) "null"
-        else flagged.map("\"" + _ + "\"").mkString("[", ",", "]")
-      // ADJUDICATE the flags the same way regressions are adjudicated:
-      // re-run each flagged query ALONE at BOTH rungs (caches cleared,
-      // scratch swept, JVM settled) and record the isolated min ratio plus
-      // the flags that REPRODUCE isolated. The in-suite flag list above is
-      // untouched — this adds the noise-vs-real verdict to the artifact
-      // (stream_windowed_agg flagged 3.49× in-suite in r16 but measures
-      // 1.5× isolated: big-rung neighbor interference, the same class
-      // queries_isolated already adjudicates for the regression gate).
-      val isoFlagRuns = sys.env.get("SPARK_GRAFT_ISO_RUNS")
-        .flatMap(_.toIntOption).filter(_ > 0).getOrElse(3)
-      def isoMin(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame,
-                 dir: String): Option[Double] = {
-        val ts = (1 to isoFlagRuns).flatMap { _ =>
-          spark.catalog.clearCache(); sweepScratch(); System.gc()
-          val t0 = System.nanoTime()
-          try {
-            fn(spark, dir).write.format("noop").mode("overwrite").save()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case _: Throwable => None }
-        }
-        if (ts.isEmpty) None else Some(ts.min)
-      }
-      // adjudicate the BAND under the bar too (≥80% of it): r16 left six
-      // 2.4–3.0× queries with in-suite numbers only — under the flag bar
-      // so never re-run isolated, above the suite headline so unproven.
-      // Every band member gets an isolated decade ratio in the artifact;
-      // scale_flags_isolated still counts only true over-bar repro.
-      // ... plus (a) any round-over-round regression names — a real decade
-      // regression must reproduce isolated, in-suite noise must not — and
-      // (b) the env-pinned decade canaries: the two per-row kernels whose
-      // in-suite minima ride the 2.3×+ band round after round get a
-      // standing isolated number instead of ad-hoc re-benching
-      val pinned = sys.env.getOrElse("SPARK_GRAFT_SCALE_ISOLATE",
-          "mm_video_frames,text_pii_scrub,stream_interval_join")
-        .split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      val watch = (bar.fold(Seq.empty[String]) { b =>
-        ratiosMin.filter(_._2 > 0.8 * b).map(_._1) } ++ regNames ++ pinned)
-        .distinct.filter(n => measured.exists(_._1 == n))
-      val isoRatios = watch.flatMap(n => names.find(_._1 == n)).flatMap {
-        case (n, fn) =>
-          for (sv <- isoMin(fn, d); bv <- isoMin(fn, sfDir); if sv > 0)
-            yield n -> (bv / sv)
-      }
-      val isoFlagJson = if (sizeRatio.isEmpty) "null"
-        else isoRatios.filter(r => bar.exists(r._2 > _)).map(_._1)
-          .map("\"" + _ + "\"").mkString("[", ",", "]")
-      val rTotal = if (sTotal > 0) total / sTotal else 0.0
-      // a query failing ONLY at the small SF would otherwise vanish from
-      // queries_small/scale_ratio with stderr-only evidence
-      val sErrJson = sFailures.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"\"" + k + "\":" + v }.mkString("{", ",", "}")
-      s""","sf_small":"$d","total_small":$sTotal,"size_ratio":${sizeRatio.fold("null")(_.toString)},"scale_ratio_total":$rTotal,"queries_small":${toJson(sMed)},"scale_ratio":${toJson(ratios)},"scale_ratio_min":${toJson(ratiosMin)},"scale_flags":$flagJson,"scale_ratio_isolated":${toJson(isoRatios)},"scale_flags_isolated":$isoFlagJson,"errors_small":$sErrJson"""
-    }).getOrElse("")
-    // ISOLATED re-measure: after the whole suite, re-run the flagged
-    // regressors (plus any env-pinned canaries) ALONE — caches cleared,
-    // scratch swept, JVM settled before each sample — and record the
-    // per-query isolated MINIMA. This is the noise-vs-regression
-    // adjudication number: a real regression reproduces isolated, a
-    // page-cache/host-noise artifact does not, and the judge can read
-    // it from the artifact instead of re-benching.
-    // default canaries: dba_iceberg_dv (the r14 neighbor-interference
-    // case) plus the two r15 unverified-uptick queries — their isolated
-    // minima adjudicate noise-vs-regression mechanically in the artifact
-    val isolate = (regNames ++ sys.env.getOrElse("SPARK_GRAFT_ISOLATE",
-      "dba_iceberg_dv,dedup_embedding_cc_exact,dba_delta_v2ckpt")
-      .split(",").map(_.trim).filter(_.nonEmpty))
-      .distinct.filter(n => measured.exists(_._1 == n))
-    val isoRuns = sys.env.get("SPARK_GRAFT_ISO_RUNS")
-      .flatMap(_.toIntOption).filter(_ > 0).getOrElse(3)
-    val isoJson =
-      if (isolate.isEmpty) ""
-      else {
-        val iso = isolate.flatMap(n => names.find(_._1 == n)).map {
-          case (n, fn) =>
-            // a thrown sample is NOT a timing — a fast abort would
-            // masquerade as "does not reproduce isolated" and bury a
-            // real regression; all-failed records -1 (artifact-visible)
-            val ts = (1 to isoRuns).flatMap { _ =>
-              spark.catalog.clearCache(); sweepScratch(); System.gc()
-              val t0 = System.nanoTime()
-              try {
-                fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-                Some((System.nanoTime() - t0) / 1e9)
-              } catch { case e: Throwable =>
-                System.err.println(s"[bench] isolated $n failed: ${e.getMessage}")
-                None
-              }
-            }
-            n -> (if (ts.isEmpty) -1.0 else ts.min)
-        }
-        // machine-readable adjudication of the regression gate: isolated
-        // min ÷ baseline median per regressed query. < 1.5 (the gate's own
-        // bar) means the in-suite uptick does not reproduce alone — host
-        // noise; ≥ 1.5 means a real regression. -1 = all isolated runs
-        // failed (inherits queries_isolated's failure sentinel).
-        val regIso = iso.collect { case (n, v) if regNames.contains(n) =>
-          n -> regBase.get(n).filter(_ > 0)
-            .fold(-1.0)(b => if (v < 0) -1.0 else v / b)
-        }
-        val regIsoJson =
-          if (regNames.isEmpty) "" else s""","regressions_isolated":${toJson(regIso)}"""
-        s""","queries_isolated":${toJson(iso)},"isolated_runs":$isoRuns$regIsoJson"""
-      }
-    // host state AFTER every measured run (suite + isolated re-runs): the
-    // pre→post steal delta and the pre loadavg are the degraded-window
-    // verdict; a degraded window with nonempty flags/regressions gets a
-    // machine-readable annotation so the judge never has to take prose on
-    // faith (r19 verdict item: "make host state machine-readable")
-    val hostPost = hostSnap()
-    val (hostBlock, hostDegraded) =
-      hostJson(hostPre, hostMid, hostPost, cpus.toIntOption.getOrElse(4))
-    val hostNote =
-      if (hostDegraded && (regNames.nonEmpty || scaleFlagNames.nonEmpty))
-        ""","host_note":"degraded_window_flags_suspect""""
-      else ""
-    val line = s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"order_seed":$orderSeed,"queries":${toJson(med)},"queries_min":${toJson(mins)},"errors":$errJson,"sf":"$sfDir",$hostBlock$hostNote$regJson$isoJson$scaleJson}"""
+    val big = runSuite(spark, sfDir, queries, runs)
+    val byName = queries.toMap
+    val full = fullArtifact(runs, orderSeed, queries.map(_._1), big, small,
+      benchBaseline(sfDir), (n, dir) => timeIsolated(spark, n, byName(n), dir),
+      () => hostJson(hostPre, hostMid, hostSnap(), cpus))
+    val line = mapper.writeValueAsString(full)
     println(line)
     // Persist the full line to file(s): the driver captures only a
     // 2000-char stdout tail, which truncates the ~26 KB line above.
@@ -570,9 +603,8 @@ object Bench {
     }
     val written = outPaths.filter { outPath =>
       try {
-        val p = java.nio.file.Paths.get(outPath)
-        java.nio.file.Files.write(p,
-          (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+        val p = Paths.get(outPath)
+        Files.write(p, (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
         System.err.println(s"[bench] wrote ${p.toAbsolutePath.normalize}")
         true
       } catch { case e: Throwable =>
@@ -580,11 +612,6 @@ object Bench {
         false
       }
     }
-    // null when persistence is off or every write failed: the line never
-    // points at a file that does not exist
-    val artifactJson = written.lastOption
-      .map(new com.fasterxml.jackson.databind.ObjectMapper().writeValueAsString(_))
-      .getOrElse("null")
     // Everything that can still write to stdout/stderr happens BEFORE the
     // compact summary below, so the driver's tail ends with one parseable
     // JSON line: Spark's own stop()-time logging is capped at ERROR, the
@@ -593,25 +620,8 @@ object Bench {
     // The cleanups run under printFinalLine's try/catch: a stop()-time or
     // scratch-deletion failure is stderr-logged and the summary still
     // prints as the final stdout line (the r19 fix's one remaining hole).
-    val scaleTotal = "\"scale_ratio_total\":([0-9.Ee+-]+)".r
-      .findFirstMatchIn(scaleJson).map(_.group(1)).getOrElse("null")
-    // compact summary as the LAST stdout line — the driver's tail parser
-    // reads this; the regression count rides regNames (the gate's own list)
-    // rather than re-parsing the serialized JSON. `queries` carries the
-    // TRIMMED slowest-first per-query map (see trimmedQueriesJson): the
-    // whole line must stay inside the driver's ~2000-char tail or the
-    // per-query half of the bench contract is unmet (r20 verdict item 2).
-    val tailBudget = sys.env.get("SPARK_GRAFT_TAIL_BUDGET")
-      .flatMap(_.toIntOption).filter(_ > 300).getOrElse(1900)
-    val compactHead =
-      s"""{"metric":"total","value":$total,"unit":"sec","runs":$runs,"sf":"$sfDir","n_queries":${med.size},"n_errors":${failures.size},"n_regressions":${regNames.size},"scale_ratio_total":$scaleTotal,"host_degraded":$hostDegraded,"queries":"""
-    def compactTail(elided: Int) =
-      s""","queries_elided":$elided,"full_artifact":$artifactJson}"""
-    val mapBudget =
-      tailBudget - compactHead.length - compactTail(med.size).length
-    val (qMapJson, qElided) = trimmedQueriesJson(med, mapBudget)
     printFinalLine(
-      compactHead + qMapJson + compactTail(qElided),
+      mapper.writeValueAsString(compactLine(full, written.lastOption)),
       () => { spark.sparkContext.setLogLevel("ERROR"); spark.stop() },
       () => deleteRecursively(scratchRoot.toFile)) // this run's root only
   }

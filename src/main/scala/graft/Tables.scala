@@ -121,9 +121,9 @@ object Tables {
     // local sort of its entire input for retry determinism
     // (spark.sql.execution.sortBeforeRepartition, guide §2.5) while a
     // hash of real key columns is retry-deterministic for free — the
-    // r20 FanoutProbe measured the lineitem exchange at 0.88 s
-    // round-robin vs 0.60 s keyed (narrow consumer) and 1.43 vs
-    // 0.84 s (wide). Keying lineitem on l_orderkey additionally makes
+    // r20 FanoutProbe (source in commit `ac52568`) measured the
+    // lineitem exchange at 0.88 s round-robin vs 0.60 s keyed (narrow
+    // consumer) and 1.43 vs 0.84 s (wide). Keying lineitem on l_orderkey additionally makes
     // the fan-out exchange SATISFY downstream ClusteredDistribution
     // requirements on the same key (guide §2.4): lineitem⋈orders
     // joins and l_orderkey aggregates reuse this exchange instead of
@@ -303,10 +303,11 @@ object Tables {
   // aggregation, whose ClusteredDistribution is satisfied by
   // HashPartitioning(doc_id) (partition keys ⊆ grouping keys), so the
   // keyed fan-out exchange is REUSED and the pair-sized exchange above it
-  // disappears (guide §2.4). The r21 FanoutProbe measured the pair-group
-  // consumer at 0.27 s keyed vs 0.58 s round-robin (2.1×, two passes),
-  // while the heavy per-row kernel shape (the codec/decade canaries whose
-  // stage wall is max-per-partition work) measured a wash — hash balance
+  // disappears (guide §2.4). The r21 FanoutProbe (source in commit
+  // `ac52568`) measured the pair-group consumer at 0.27 s keyed vs
+  // 0.58 s round-robin (2.1×, two passes), while the heavy per-row
+  // kernel shape (the codec/decade canaries whose stage wall is
+  // max-per-partition work) measured a wash — hash balance
   // over unique doc_ids is statistically exact at any realistic n. Same
   // scale posture as lineitem/embeddings: identity on any ≥4-split
   // production layout, key column is one delta-encoded int64 locally.

@@ -1,21 +1,25 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import java.io.File
+
+import com.fasterxml.jackson.databind.ObjectMapper
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
+  /** Write the name → oracle SQL map as one JSON object. Jackson escapes
+    * every control character: a tab or CR in oracle SQL must not make a
+    * strict reader's json.load fail and silently zero the correctness
+    * check. */
+  private[graft] def writeOracleSql(file: File, sql: Iterable[(String, String)]): Unit = {
+    val mapper = new ObjectMapper()
+    val node = mapper.createObjectNode()
+    sql.foreach { case (k, v) => node.put(k, v) }
+    mapper.writeValue(file, node)
+  }
+
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    new java.io.File(outDir).mkdirs()
+    val spark = GraftSession.local(GraftSession.cpus)
+    new File(outDir).mkdirs()
     // Optional subset for local iteration (SparkEntry owns the contract);
     // unset or empty = full suite, which is what the driver runs.
     val only = SparkEntry.querySubset
@@ -30,18 +34,6 @@ object Verify {
       // release operator-owned persists between dumps (see Bench)
       spark.catalog.clearCache()
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     // static oracles + the trained-model ones generated against this
     // session/sfDir (gated on the subset, so a subset dump trains
     // nothing it doesn't need); a training failure must not zero the
@@ -53,9 +45,8 @@ object Verify {
         System.err.println(s"[verify] dynamic oracles failed: ${e.getMessage}")
         Map.empty[String, String]
       }
-    val json = (SparkEntry.oracleSql ++ dynamic)
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    writeOracleSql(new File(s"$outDir/oracle_sql.json"),
+      SparkEntry.oracleSql ++ dynamic)
     spark.stop()
   }
 }

@@ -275,9 +275,9 @@ object Dedup {
     * answer for docs with NO true near-dup is scheme-dependent and the
     * oracles CASE on the same count to pick the same scheme.
     *
-    * The value is MEASURED, not guessed (graft.harness.SimhashSweep, r17:
-    * near-dup-replica corpora of 5k/20k/50k/100k/200k docs, min of 2
-    * runs, narrow vs wide):
+    * The value is MEASURED, not guessed (r17 sweep, graft.harness.
+    * SimhashSweep, source in commit `ac52568`: near-dup-replica corpora
+    * of 5k/20k/50k/100k/200k docs, min of 2 runs, narrow vs wide):
     *   5k  0.98 vs 0.84 s · 20k 1.29 vs 0.93 · 50k 2.68 vs 1.38
     *   100k 3.48 vs 2.80 · 200k 8.73 vs 3.95
     * — wide wins from ~5k docs up and the gap is the narrow scheme's
@@ -286,12 +286,7 @@ object Dedup {
     * for genuinely tiny corpora (and the sf0.01 oracle gate exercising
     * it) while everything bench-sized runs wide.
     */
-  private[graft] val HammingWideThreshold: Long =
-    // env override is a TEST hook: forcing 0 at a small SF runs the wide
-    // scheme through the full Verify → DuckDB oracle compare (both
-    // engines read the same value when the SQL is generated in-process)
-    sys.env.get("SPARK_GRAFT_HAMMING_WIDE").flatMap(_.toLongOption)
-      .getOrElse(4000L)
+  private[graft] val HammingWideThreshold: Long = 4000L
 
   /** Wide-scheme block layout: 5 blocks of (offset, width) covering the
     * 64 fingerprint bits (4×13 + 1×12). */
@@ -445,8 +440,8 @@ object Dedup {
     * [[HammingWideThreshold]] (4000): the two hammingCandidates
     * consumers have opposite downstream shapes, so their crossovers
     * differ by orders of magnitude, and each is MEASURED
-    * (SimhashSweep, SPARK_GRAFT_SWEEP_OP=nn|gate, min of 3 runs,
-    * near-dup-replica corpora):
+    * (the SimhashSweep nn and gate sweeps, source in commit `ac52568`;
+    * min of 3 runs, near-dup-replica corpora):
     *
     *   docs    nn narrow/wide     gate narrow/wide
     *   5k      0.98 / 0.84        0.63 / 0.55
@@ -468,11 +463,7 @@ object Dedup {
     * the hot cap and narrow's recall collapses — the same argument as
     * the NN switch, just with a far larger measured constant gap.
     */
-  private[graft] val GateWideThreshold: Long =
-    // same TEST hook as HammingWideThreshold: forcing 0 at a small SF
-    // runs the wide gate through the full Verify → DuckDB compare
-    sys.env.get("SPARK_GRAFT_HAMMING_WIDE").flatMap(_.toLongOption)
-      .getOrElse(250000L)
+  private[graft] val GateWideThreshold: Long = 250000L
 
   /** doc_ids with at least one EARLIER (lower-id) document within
     * `maxHamming` simhash bits — the keep-first near-dup gate for

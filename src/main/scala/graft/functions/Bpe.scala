@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** BPE (byte-pair-encoding) subword tokenization as a literal-model
   * operator — the real-token complement to the whitespace counters every
@@ -552,10 +552,7 @@ object BpeTrainMain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val n = if (args.length > 1) args(1).toInt else 64
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4, "ERROR")
     val merges = Bpe.train(Tables.documents(spark, dir), col("text"), n)
     println(merges.map { case (a, b) => s"""("$a", "$b")""" }
       .grouped(4).map(_.mkString(", ")).mkString(",\n    "))

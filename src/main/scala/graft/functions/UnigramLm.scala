@@ -3,7 +3,7 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.Tables
+import graft.{GraftSession, Tables}
 
 /** Unigram language-model quality scoring — the CCNet-style LM-filter
   * signal (Wenzek et al., "CCNet: Extracting High Quality Monolingual
@@ -258,10 +258,7 @@ object UnigramLmTrainMain {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val cap = if (args.length > 1) args(1).toInt else 256
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.local(4, "ERROR")
     val toks = Tables.documents(spark, dir)
       .select(explode(split(col("text"), " ")).as("tok"))
     val total = toks.count()

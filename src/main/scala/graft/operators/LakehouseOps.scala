@@ -1179,7 +1179,8 @@ object LakehouseOps {
     // projected columns) collapses them; rows, within-partition order and
     // partition structure are preserved, so the sampled range boundaries
     // and every committed file are byte-identical (guide §2.4 / r20
-    // JobProbe: the lifecycle family's wall is many small repeated jobs).
+    // job table, now graft.harness.Probe: the lifecycle family's wall is
+    // many small repeated jobs).
     // §5 fault-tolerance tradeoff (here and at the four sibling ord
     // checkpoints below): localCheckpoint truncates lineage and stores
     // the projected table on executor memory+disk — an executor loss
@@ -1461,9 +1462,10 @@ object LakehouseOps {
     * lost/duplicated nothing and the pruned read stays value-exact).
     *
     * Optimization declined (r21, the r20-verdict pinned-boundaries item,
-    * quantified by JobProbe): isolated total 1.43 s, of which the wall
-    * is the two commits (initial write + the OPTIMIZE rewrite with its
-    * Morton interleave + per-column max probes) — distributed,
+    * quantified by the graft.harness.Probe job table): isolated total
+    * 1.43 s, of which the wall is the two commits (initial write + the
+    * OPTIMIZE rewrite with its Morton interleave + per-column max
+    * probes) — distributed,
     * data-proportional work that IS the modeled operation. The avoidable
     * pieces are one duplicate orders scan (~0.1 s; only 2 consumers, so
     * a checkpoint is a wash: materialize+read ≈ scan+scan) and the

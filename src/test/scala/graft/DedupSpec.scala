@@ -190,9 +190,9 @@ class DedupSpec extends SparkSpec {
     // both schemes find EVERY hamming<=3 pair (pigeonhole) and differ
     // only where hot-bucket pruning bites, so on a corpus with no hot
     // buckets the keep-first gate must return byte-identical id sets
-    // under forced-narrow and forced-wide — the unit-level guard behind
-    // the SPARK_GRAFT_HAMMING_WIDE=0 full-oracle check (which is manual
-    // and can rot; this runs every build)
+    // under forced-narrow and forced-wide, through the explicit
+    // `wideThreshold` parameter (the production thresholds are constants,
+    // so this is where the wide gate's verdicts are checked every build)
     val dir = Files.createTempDirectory("graft_gate_parity").toString
     val base = (1 to 800).map(i => s"word$i").mkString(" ")
     val near = (1 to 800).map(i => if (i == 400) "CHANGED" else s"word$i").mkString(" ")
