@@ -292,11 +292,11 @@ object Bench {
   private def roundOf(name: String): Int =
     "r0*([0-9]+)".r.findFirstMatchIn(name).map(_.group(1).toInt).getOrElse(-1)
 
-  /** Committed `BENCH_*r<N>*.json` artifacts in the working dir with their
-    * round numbers, newest round first. */
-  private def benchArtifacts(): Seq[(Path, Int)] =
+  /** Committed `BENCH_*r<N>*.json` artifacts in `dir` with their round
+    * numbers, newest round first. */
+  private def benchArtifacts(dir: Path = Paths.get(".")): Seq[(Path, Int)] =
     try {
-      val s = Files.list(Paths.get("."))
+      val s = Files.list(dir)
       try s.iterator().asScala.toList.flatMap { p =>
         val n = p.getFileName.toString
         if (n.startsWith("BENCH_") && n.endsWith(".json") && roundOf(n) >= 0)
@@ -306,25 +306,34 @@ object Bench {
       finally s.close()
     } catch { case e: Throwable =>
       System.err.println(s"[bench] cannot list BENCH_* artifacts in " +
-        s"${Paths.get(".").toAbsolutePath.normalize}: $e")
+        s"${dir.toAbsolutePath.normalize}: $e")
       Nil
     }
 
   /** The regression gate's baseline: the newest committed bench artifact
-    * with a `queries` map measured at the SAME headline SF (its "sf"
-    * basename matches), as (file name, per-query medians); None when none
-    * exists. An unreadable artifact is logged and skipped.
+    * in `dir` with a `queries` map measured at the SAME headline SF, as
+    * (file name, per-query medians); None when none exists. A
+    * driver-written artifact (`{n, rc, cpus, sf, tail, parsed}`) holds
+    * the bench line under `parsed`. The SF matches by path basename or
+    * by value (`0.1` and `/data/sf0.1` agree). The map may be the
+    * compact line's trimmed one (the rest counted in `queries_elided`),
+    * so the gate compares only the queries it lists. An unreadable
+    * artifact is logged and skipped.
     */
-  private def benchBaseline(sfDir: String): Option[(String, Map[String, Double])] = {
+  private[graft] def benchBaseline(sfDir: String, dir: Path = Paths.get("."))
+      : Option[(String, Map[String, Double])] = {
     def sfBase(p: String): String = Paths.get(p).getFileName.toString
-    benchArtifacts().iterator.flatMap { case (p, _) =>
+    def sameSf(sf: String): Boolean = sfBase(sf) == sfBase(sfDir) ||
+      sf.toDoubleOption.orElse(sfOf(sf)).exists(sfOf(sfDir).contains)
+    benchArtifacts(dir).iterator.flatMap { case (p, _) =>
       try {
-        val n = mapper.readTree(p.toFile)
-        val sf = Option(n.get("sf")).map(_.asText).getOrElse("")
+        val file = mapper.readTree(p.toFile)
+        val n = Option(file.get("parsed")).filter(_.isObject).getOrElse(file)
+        val sf = Option(n.get("sf")).orElse(Option(file.get("sf")))
+          .map(_.asText).getOrElse("")
         val qs = Option(n.get("queries")).fold(Map.empty[String, Double])(
           _.properties().asScala.map(e => e.getKey -> e.getValue.asDouble()).toMap)
-        if (qs.nonEmpty && sfBase(sf) == sfBase(sfDir))
-          Some((p.getFileName.toString, qs))
+        if (qs.nonEmpty && sameSf(sf)) Some((p.getFileName.toString, qs))
         else None
       } catch { case e: Throwable =>
         System.err.println(s"[bench] skipping unreadable bench artifact $p: $e")
@@ -341,12 +350,13 @@ object Bench {
     * fallback would mis-flag any honestly data-proportional query on a
     * non-default pair, the exact failure this derivation exists to avoid.
     */
-  private def sizeRatio(big: String, small: String): Option[Double] = {
-    def sfOf(dir: String): Option[Double] =
-      "sf([0-9.]+)".r.findFirstMatchIn(Paths.get(dir).getFileName.toString)
-        .flatMap(m => m.group(1).toDoubleOption).filter(_ > 0)
+  private def sizeRatio(big: String, small: String): Option[Double] =
     for (b <- sfOf(big); s <- sfOf(small)) yield b / s
-  }
+
+  /** The scale factor an `sf<N>` dir name states. */
+  private def sfOf(dir: String): Option[Double] =
+    "sf([0-9.]+)".r.findFirstMatchIn(Paths.get(dir).getFileName.toString)
+      .flatMap(m => m.group(1).toDoubleOption).filter(_ > 0)
 
   /** Ordered name → number pairs as one JSON object. */
   private def obj(kvs: Seq[(String, AnyVal)]): ObjectNode = {

@@ -693,11 +693,13 @@ object TextFuncs {
     * whose VOCABULARY doesn't fit a full count shuffle (web n-grams,
     * URLs): per-partition Misra–Gries summaries (fixed `width` counters,
     * one pass), then ONE exact broadcast-filtered recount of the
-    * surviving candidates only. Pigeonhole guarantees the union of
-    * per-partition survivors contains every token with global count
-    * > N/width (below-threshold-everywhere implies below globally), so
-    * the final top-k is EXACT whenever the kth count clears N/width —
-    * size width to the tail you care about. Shuffle ∝ candidates
+    * surviving candidates only. A Misra–Gries summary of width w over a
+    * partition of n tokens keeps every token counted more than n/(w+1)
+    * times there, and pigeonhole lifts that to the union of
+    * per-partition survivors: it contains every token with global count
+    * > N/(width+1) (below-threshold-everywhere implies below globally),
+    * so the final top-k is EXACT whenever the kth count exceeds
+    * N/(width+1) — size width to the tail you care about. Shuffle ∝ candidates
     * (≤ partitions·width), never ∝ vocabulary; the candidate table stays
     * distributed (tiny distinct → broadcast join), no driver collect.
     *
@@ -710,26 +712,35 @@ object TextFuncs {
     import s.implicits._
     val tokens = Tables.documents(s, dir)
       .select(explode(toks(col("text"))).as("tok"))
-    val survivors = tokens.as[String].mapPartitions { it =>
-      val h = new java.util.HashMap[String, Long]()
-      it.foreach { t =>
-        val c = h.get(t)
-        if (c != null || h.size < width) h.put(t, if (c == null) 1L else c + 1L)
-        else { // decrement-all step: drop every counter by one
-          val e = h.entrySet().iterator()
-          while (e.hasNext) {
-            val kv = e.next()
-            if (kv.getValue == 1L) e.remove() else kv.setValue(kv.getValue - 1L)
-          }
-        }
-      }
-      import scala.jdk.CollectionConverters._
-      h.keySet().iterator().asScala
-    }.toDF("tok").distinct()
+    val survivors = tokens.as[String]
+      .mapPartitions(misraGries(_, width)).toDF("tok").distinct()
     tokens.join(broadcast(survivors), Seq("tok"))
       .groupBy("tok").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("tok"))
       .limit(k)
+  }
+
+  /** One partition's Misra–Gries survivors: at most `width` tokens,
+    * including every token seen more than n/(width+1) times in the n
+    * tokens of `it`.
+    */
+  private[graft] def misraGries(it: Iterator[String],
+                                width: Int): Iterator[String] = {
+    val h = new java.util.HashMap[String, java.lang.Long]()
+    it.foreach { t =>
+      val c = h.get(t)
+      if (c != null) h.put(t, c + 1L)
+      else if (h.size < width) h.put(t, 1L)
+      else { // decrement-all step: drop every counter by one
+        val e = h.entrySet().iterator()
+        while (e.hasNext) {
+          val kv = e.next()
+          if (kv.getValue == 1L) e.remove() else kv.setValue(kv.getValue - 1L)
+        }
+      }
+    }
+    import scala.jdk.CollectionConverters._
+    h.keySet().iterator().asScala
   }
 
   /** The oracle is the EXACT top-k — the sketch path must reproduce it

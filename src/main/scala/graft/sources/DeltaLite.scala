@@ -46,6 +46,7 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, L
 object DeltaLite {
 
   private val mapper = new ObjectMapper()
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
   private def logDir(table: String) = new Path(table, "_delta_log")
   private def commitFile(table: String, v: Long) =
     new Path(logDir(table), f"$v%020d.json")
@@ -1380,7 +1381,7 @@ object DeltaLite {
         snap.configuration + (key -> value),
         partitionColumns = snap.partitionColumns))
     // enabling the universal format generates the face immediately
-    maybeUniform(spark, table, snap.configuration + (key -> value))
+    maybeUniform(spark, table, v, snap.configuration + (key -> value))
     v
   }
 
@@ -1495,7 +1496,7 @@ object DeltaLite {
       upgradeFrom = prev,
       rowIdsOf = rowIdsOf, rowIdWatermark = rowIdWatermark))
     maybeAutoCheckpoint(spark, table, v, conf)
-    maybeUniform(spark, table, conf)
+    maybeUniform(spark, table, v, conf)
     v
   }
 
@@ -1508,13 +1509,13 @@ object DeltaLite {
     * `expireSnapshots`). States the Iceberg face cannot express —
     * live deletion vectors, column mapping, hive partitioning — skip
     * the sync; the next expressible commit catches the face up. Sync
-    * failure never fails the Delta commit.
+    * failure never fails the Delta commit; it is logged.
     */
   private[graft] def uniformEnabled(conf: Map[String, String]): Boolean =
     conf.get("delta.universalFormat.enabledFormats")
       .exists(_.toLowerCase.contains("iceberg"))
 
-  private def maybeUniform(spark: SparkSession, table: String,
+  private def maybeUniform(spark: SparkSession, table: String, v: Long,
                            conf: Map[String, String]): Unit =
     if (uniformEnabled(conf))
       try {
@@ -1538,7 +1539,9 @@ object DeltaLite {
             s.files.map(p => new Path(root, p).toString), sync = true,
             knownCounts = counts)
         }
-      } catch { case scala.util.control.NonFatal(_) => }
+      } catch { case scala.util.control.NonFatal(e) =>
+        log.warn(s"$table: iceberg face sync at v$v failed: $e")
+      }
 
   /** `delta.checkpointInterval` — when the table declares it, every
     * n-th commit lands a checkpoint so REPLAY COST STAYS BOUNDED without
@@ -1557,7 +1560,9 @@ object DeltaLite {
       scala.util.Try(s.trim.toInt).toOption).filter(_ > 0).foreach { n =>
       if (v > 0 && v % n == 0)
         try checkpoint(spark, table)
-        catch { case scala.util.control.NonFatal(_) => }
+        catch { case scala.util.control.NonFatal(e) =>
+          log.warn(s"$table: auto-checkpoint at v$v failed: $e")
+        }
     }
 
   /** Validation + the (metaData schema, physically-named frame,
@@ -1788,7 +1793,7 @@ object DeltaLite {
         // maintenance as commit(): bounded replay via
         // delta.checkpointInterval and the universal-format face
         maybeAutoCheckpoint(spark, table, v, conf)
-        maybeUniform(spark, table, conf)
+        maybeUniform(spark, table, v, conf)
         return v
       }
       // lost the race: inspect every commit that beat us
@@ -2289,7 +2294,7 @@ object DeltaLite {
           addedReader = Set("typeWidening")) +
         "\n" + metaDataJson(v, widened.json, snap.configuration,
           partitionColumns = snap.partitionColumns))
-    maybeUniform(spark, table, snap.configuration) // face schema follows
+    maybeUniform(spark, table, v, snap.configuration) // face schema follows
     v
   }
 
@@ -2423,7 +2428,7 @@ object DeltaLite {
     // the restored state is the table state: bounded-replay and the
     // universal-format face must follow it like any other data commit
     maybeAutoCheckpoint(spark, table, v, tgt.configuration)
-    maybeUniform(spark, table, tgt.configuration)
+    maybeUniform(spark, table, v, tgt.configuration)
     v
   }
 

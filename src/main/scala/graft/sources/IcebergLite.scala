@@ -59,8 +59,9 @@ import org.apache.spark.sql.types._
   * metadata-only file skipping with the residual predicate pushed to the
   * surviving scans.
   *
-  * Writer concurrency: [[commit]] is the plain single-writer path (the
-  * version-hint publish is last-rename-wins absent a CAS catalog);
+  * Writer concurrency: [[commit]] is the plain single-writer path (its
+  * metadata claim is put-if-absent like every publish, so a racing
+  * writer fails it rather than being overwritten, but it never retries);
   * [[commitContended]] layers optimistic concurrency on top — stage
   * once under a writer-unique token, claim the next metadata version via
   * put-if-absent, and on a lost race rebase appends / conflict
@@ -75,6 +76,7 @@ import org.apache.spark.sql.types._
 object IcebergLite {
 
   private val mapper = new ObjectMapper()
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   private def metaDir(table: String)  = new Path(table, "metadata")
   private def dataDir(table: String)  = new Path(table, "data")
@@ -86,19 +88,6 @@ object IcebergLite {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // ------------------------------------------------------------ Avro I/O
-  /** Manifest-list entry (spec: `manifest_file`, field-ids 500+). Only
-    * the v1-required fields are written; reads are writer-schema driven
-    * so real tables' extra fields (content, sequence numbers, partition
-    * summaries) are visible when present.
-    */
-  private val ManifestListSchema: Schema = new Schema.Parser().parse(
-    """{"type":"record","name":"manifest_file","fields":[
-      |  {"name":"manifest_path","type":"string","field-id":500},
-      |  {"name":"manifest_length","type":"long","field-id":501},
-      |  {"name":"partition_spec_id","type":"int","field-id":502},
-      |  {"name":"added_snapshot_id","type":"long","field-id":503}
-      |]}""".stripMargin)
-
   /** Manifest entry (spec: `manifest_entry` wrapping `data_file`,
     * field-ids 0-2 / 100+). `block_size_in_bytes` is v1-required
     * (dropped in v2) — written for v1 conformance, ignored on read.
@@ -376,6 +365,28 @@ object IcebergLite {
     node
   }
 
+  /** The metadata's `snapshots` array, in append order (empty if absent). */
+  private def snapshotsOf(meta: JsonNode): Seq[JsonNode] =
+    Option(meta.get("snapshots")).map(_.elements().asScala.toSeq)
+      .getOrElse(Seq.empty)
+
+  /** One manifest-list row (spec `manifest_file`): `content` 0 = data,
+    * 1 = deletes; `seq` the manifest's sequence number; `specId` the
+    * partition spec its files were written under. v1 lists lack the
+    * last three fields and read as 0.
+    */
+  private final case class ListEntry(path: String, length: Long,
+                                     content: Int, seq: Long, specId: Int)
+
+  private def listEntries(f: FileSystem, table: String,
+                          listRel: String): Seq[ListEntry] =
+    readAvro(f, new Path(resolvePath(table, listRel))).map(r => ListEntry(
+      r.get("manifest_path").toString,
+      r.get("manifest_length").asInstanceOf[Long],
+      opt(r, "content").map(_.asInstanceOf[Int]).getOrElse(0),
+      opt(r, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L),
+      opt(r, "partition_spec_id").map(_.asInstanceOf[Int]).getOrElse(0)))
+
   /** One live data file of a snapshot, as the manifests describe it.
     * `seq` is the v2 data sequence number (0 for v1 tables) — the
     * ordering key delete-file applicability is decided on.
@@ -479,8 +490,7 @@ object IcebergLite {
                snapshotId: Option[Long] = None): Snapshot = {
     val meta = metadata(spark, table)
     val f = fs(spark, metaDir(table))
-    val snaps = Option(meta.get("snapshots")).map(_.elements().asScala.toSeq)
-      .getOrElse(Seq.empty)
+    val snaps = snapshotsOf(meta)
     require(snaps.nonEmpty, s"$table: no snapshots")
     val targetId = snapshotId.getOrElse(meta.get("current-snapshot-id").asLong())
     val snap = snaps.find(_.get("snapshot-id").asLong() == targetId)
@@ -511,12 +521,7 @@ object IcebergLite {
     val manifestEntries: Seq[(String, Int, Long)] =
       Option(snap.get("manifest-list")) match {
         case Some(ml) =>
-          readAvro(f, new Path(resolvePath(table, ml.asText()))).map { r =>
-            val content = opt(r, "content").map(_.asInstanceOf[Int]).getOrElse(0)
-            val seq = opt(r, "sequence_number")
-              .map(_.asInstanceOf[Long]).getOrElse(0L)
-            (r.get("manifest_path").toString, content, seq)
-          }
+          listEntries(f, table, ml.asText()).map(e => (e.path, e.content, e.seq))
         case None => Option(snap.get("manifests"))
           .map(_.elements().asScala.map(a => (a.asText(), 0, 0L)).toSeq)
           .getOrElse(sys.error(s"$table: snapshot $targetId has no manifest list"))
@@ -1199,6 +1204,150 @@ object IcebergLite {
     }
   }
 
+  // ---------------------------------------------------- snapshot publish
+  // Every commit publishes through the same three steps (spec: manifest
+  // list -> snapshots[] + snapshot-log + refs -> immutable
+  // v<N>.metadata.json -> version-hint.text): [[writeManifestList]],
+  // [[appendSnapshot]] (or [[moveMain]] for a metadata-only repoint) and
+  // [[publish]]. Table-level fields are carried by [[tableMeta]] or by
+  // editing a deep copy of the previous version.
+
+  /** Next snapshot id: one past the highest retained id (0 for a new
+    * table). Sequential ids keep logs deterministic, like DeltaLite's
+    * ts=0; a wall-clock id adds nothing here and breaks reproducible
+    * tests.
+    */
+  private def nextSnapshotId(prev: Option[JsonNode]): Long =
+    prev.toSeq.flatMap(snapshotsOf).map(_.get("snapshot-id").asLong())
+      .maxOption.fold(0L)(_ + 1)
+
+  /** Write snapshot `snapId`'s manifest list: the entries of
+    * `parentList` carried with their content kind, sequence number AND
+    * spec id (a carried DELETE manifest must not be re-listed as data,
+    * and a carried manifest keeps the spec its files were written
+    * under), then `added`.
+    */
+  private def writeManifestList(f: FileSystem, table: String, listRel: String,
+                                snapId: Long, parentList: Option[String],
+                                added: ListEntry, formatVersion: Int): Unit = {
+    val rows = (parentList.toSeq.flatMap(listEntries(f, table, _)) :+ added)
+      .map(e => record(ManifestListSchemaV2)(
+        "manifest_path" -> e.path, "manifest_length" -> e.length,
+        "partition_spec_id" -> e.specId, "content" -> e.content,
+        "sequence_number" -> e.seq, "added_snapshot_id" -> snapId))
+    writeAvro(f, new Path(table, listRel), ManifestListSchemaV2, rows,
+      Map("format-version" -> formatVersion.toString))
+  }
+
+  /** Raise `meta`'s format-version to at least `floor`, never lower than
+    * `prev` declared: a table deleteRowsV3 moved to 3 (live DVs in Puffin
+    * files) must not be re-stamped 2 by a later append — a conforming v2
+    * reader would skip the carried DV entries and resurrect deleted rows.
+    */
+  private def ratchetFormat(meta: ObjectNode, prev: Option[JsonNode],
+                            floor: Int): Unit =
+    meta.put("format-version", math.max(floor, prev
+      .flatMap(m => Option(m.get("format-version"))).map(_.asInt())
+      .getOrElse(floor)))
+
+  /** A new metadata version for a commit that rewrites the schema and
+    * spec fields, with every table-level field carried from `prev` (None
+    * when the commit creates the table): format-version (v2 at least —
+    * sequence numbers order delete applicability), a `table-uuid` fixed
+    * for the table's life (the spec's rule), properties and refs (durable
+    * state no writer may reset), main's head and the snapshot history.
+    */
+  private def tableMeta(prev: Option[JsonNode], table: String,
+                        metaV: Int): ObjectNode = {
+    def carried(field: String): Option[JsonNode] =
+      prev.flatMap(m => Option(m.get(field))).map(_.deepCopy[JsonNode]())
+    val meta = mapper.createObjectNode()
+    ratchetFormat(meta, prev, 2)
+    meta.put("table-uuid", carried("table-uuid").map(_.asText())
+      .getOrElse(f"graft-iceberg-$metaV%08d"))
+    meta.put("location", table)
+    meta.put("last-updated-ms", 0L)
+    meta.set[JsonNode]("properties",
+      carried("properties").getOrElse(mapper.createObjectNode()))
+    carried("refs").foreach(meta.set[JsonNode]("refs", _))
+    carried("current-snapshot-id")
+      .foreach(meta.set[JsonNode]("current-snapshot-id", _))
+    meta.set[JsonNode]("snapshots",
+      carried("snapshots").getOrElse(mapper.createArrayNode()))
+    meta.set[JsonNode]("snapshot-log",
+      carried("snapshot-log").getOrElse(mapper.createArrayNode()))
+    meta
+  }
+
+  private def setRef(refs: ObjectNode, name: String, snapshotId: Long,
+                     refType: String): Unit = {
+    val r = refs.putObject(name)
+    r.put("snapshot-id", snapshotId); r.put("type", refType)
+  }
+
+  /** Point main at `snapshotId`: current-snapshot-id, the `main` branch
+    * ref when the table has one (it mirrors current-snapshot-id), and a
+    * snapshot-log entry (the time-travel channel tracks every change of
+    * the current snapshot).
+    */
+  private def moveMain(meta: ObjectNode, snapshotId: Long): Unit = {
+    meta.put("current-snapshot-id", snapshotId)
+    Option(meta.get("refs")).collect { case o: ObjectNode if o.has("main") => o }
+      .foreach(setRef(_, "main", snapshotId, "branch"))
+    val e = meta.withArray[ArrayNode]("snapshot-log").addObject()
+    e.put("timestamp-ms", 0L); e.put("snapshot-id", snapshotId)
+  }
+
+  /** Append snapshot `snapId` (its sequence number is its id) to `meta`.
+    * On main it becomes current through [[moveMain]]; on `branch` only
+    * that ref advances — main and the snapshot-log stay where they were.
+    */
+  private def appendSnapshot(meta: ObjectNode, snapId: Long,
+                             parent: Option[Long],
+                             summary: Seq[(String, String)], listRel: String,
+                             schemaId: Option[Int],
+                             branch: Option[String] = None): Unit = {
+    val s = meta.withArray[ArrayNode]("snapshots").addObject()
+    s.put("snapshot-id", snapId)
+    s.put("sequence-number", snapId)
+    parent.foreach(s.put("parent-snapshot-id", _))
+    s.put("timestamp-ms", 0L)
+    val sum = s.putObject("summary")
+    summary.foreach { case (k, v) => sum.put(k, v) }
+    s.put("manifest-list", listRel)
+    schemaId.foreach(s.put("schema-id", _))
+    meta.put("last-sequence-number", snapId)
+    branch match {
+      case None    => moveMain(meta, snapId)
+      case Some(b) => setRef(meta.get("refs").asInstanceOf[ObjectNode], b,
+        snapId, "branch")
+    }
+  }
+
+  /** The one writer of table metadata: `meta` lands as immutable
+    * `v<metaV>.metadata.json`, claimed put-if-absent
+    * ([[renameIfAbsent]] — the file name IS the version, so a writer
+    * that claimed v<metaV> first makes this return false and leaves the
+    * table untouched), then `version-hint.text` is repointed and the
+    * table's metadata retention applied ([[maybeAutoCleanupMetadata]]).
+    * `token` keeps racing writers' temp names apart.
+    */
+  private def publish(spark: SparkSession, table: String, meta: ObjectNode,
+                      metaV: Int, token: String = "0"): Boolean = {
+    val f = fs(spark, metaDir(table))
+    val tmp = new Path(metaDir(table), s".v$metaV-$token.metadata.json.tmp")
+    val out = f.create(tmp, true)
+    try out.write(mapper.writerWithDefaultPrettyPrinter()
+      .writeValueAsBytes(meta))
+    finally out.close()
+    if (!renameIfAbsent(spark, f, tmp, metaFile(table, metaV))) return false
+    val hint = f.create(hintFile(table), true)
+    try hint.write(metaV.toString.getBytes(StandardCharsets.UTF_8))
+    finally hint.close()
+    maybeAutoCleanupMetadata(spark, table, meta, metaV)
+    true
+  }
+
   /** Commit `df` as the next snapshot: land parquet parts under `data/`,
     * write one ADDED-entry manifest (+ DELETED entries when overwriting),
     * a manifest list, and a new immutable `v<N>.metadata.json`; publish
@@ -1215,7 +1364,7 @@ object IcebergLite {
     commitAttempt(spark, table, df, overwrite, operation, partitionBy,
       replacing, nameToken = None, ifAbsent = false,
       partitionTransforms = partitionTransforms)
-      .getOrElse(sys.error("unreachable: non-contended publish cannot lose"))
+      .getOrElse(sys.error("unreachable: a lost non-contended claim raises"))
 
   /** `"days(ts)"` / `"bucket(8, id)"` / `"truncate(4, s)"` /
     * `"months(ts)"` / `"years(ts)"` / `"hours(ts)"` — the Iceberg DDL
@@ -1265,22 +1414,17 @@ object IcebergLite {
     val f = fs(spark, root)
     val vs = versions(spark, table)
     val prevMeta = if (vs.isEmpty) None else Some(metadata(spark, table))
-    val prevSnaps: Seq[JsonNode] = prevMeta
-      .flatMap(m => Option(m.get("snapshots")))
-      .map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
-    val snapId: Long =
-      if (prevSnaps.isEmpty) 0L
-      else prevSnaps.map(_.get("snapshot-id").asLong()).max + 1
+    val prevSnaps: Seq[JsonNode] = prevMeta.toSeq.flatMap(snapshotsOf)
+    val snapId = nextSnapshotId(prevMeta)
     val metaV = if (vs.isEmpty) 1 else vs.last + 1
     // branch commits append on the BRANCH head (refs[name]), leaving
     // main (current-snapshot-id) untouched — the WAP shape
     require(toBranch.isEmpty || (!overwrite && replacing.isEmpty),
       s"$table: branch commits are append-only (no overwrite/replace)")
-    val prevRefs: Option[ObjectNode] = prevMeta.flatMap(m =>
-      Option(m.get("refs")).collect { case o: ObjectNode => o })
     val prevHead: Option[Long] = toBranch match {
       case Some(b) =>
-        val r = prevRefs.flatMap(o => Option(o.get(b))).getOrElse(
+        val r = prevMeta.flatMap(m => Option(m.get("refs")))
+          .flatMap(o => Option(o.get(b))).getOrElse(
           sys.error(s"$table: no ref $b — createBranch first"))
         require(r.get("type").asText() == "branch",
           s"$table: ref $b is a tag — tags are immutable")
@@ -1521,189 +1665,37 @@ object IcebergLite {
       entrySchema, entries,
       Map("format-version" -> "2", "content" -> "data"))
 
-    // partition specs: the HISTORY carries forward — partition-spec
-    // EVOLUTION means a table accumulates specs over its life, each
-    // data file forever bound to the spec it was written under (old
-    // files lack the new spec's partition values and prune
-    // conservatively by field name, readWherePart's contract). This
-    // commit's declared layout either matches an existing spec (reuse
-    // its id — the steady state) or appends a fresh one. Partition
-    // FIELD-ids are globally unique across the history (spec's reserved
-    // ≥1000 range, continued from last-partition-id); a field already
-    // seen in any prior spec keeps its id, exactly the real writer's
-    // assignment.
-    val prevSpecNodes: Seq[ObjectNode] =
-      prevMeta.flatMap(m => Option(m.get("partition-specs")))
-        .map(_.elements().asScala
-          .collect { case o: ObjectNode => o.deepCopy[ObjectNode]() }.toSeq)
-        .getOrElse(Nil)
-    val prevLastPartId: Int =
-      prevMeta.flatMap(m => Option(m.get("last-partition-id")))
-        .map(_.asInt()).getOrElse(999)
-    val knownFieldIds: Map[(Int, String), Int] =
-      prevSpecNodes.flatMap(_.get("fields").elements().asScala)
-        .map(f => (f.get("source-id").asInt(),
-          f.get("transform").asText()) -> f.get("field-id").asInt()).toMap
-    var nextPartId = math.max(prevLastPartId, 999)
-    val declaredFields: Seq[ObjectNode] = specCols.map { sc =>
-      val sourceId = schemaNode.get("fields").elements().asScala
-        .find(_.get("name").asText() == sc.source)
-        .map(_.get("id").asInt())
-        .getOrElse(sys.error(s"partition source column not in schema: ${sc.source}"))
-      val id = knownFieldIds.getOrElse((sourceId, sc.transform),
-        { nextPartId += 1; nextPartId })
-      val n = mapper.createObjectNode()
-      n.put("name", sc.name)
-      n.put("transform", sc.transform)
-      n.put("source-id", sourceId)
-      n.put("field-id", id)
-      n
-    }
-    def specKey(fields: Seq[JsonNode]): Seq[(Int, String)] =
-      fields.map(f => (f.get("source-id").asInt(),
-        f.get("transform").asText()))
-    val matchingSpec = prevSpecNodes.find(s =>
-      specKey(s.get("fields").elements().asScala.toSeq) ==
-        specKey(declaredFields))
-    val (allSpecNodes, defaultSpecId) = matchingSpec match {
-      case Some(s) => (prevSpecNodes, s.get("spec-id").asInt())
-      case None =>
-        val newId = prevSpecNodes.map(_.get("spec-id").asInt())
-          .maxOption.getOrElse(-1) + 1
-        val n = mapper.createObjectNode()
-        n.put("spec-id", newId)
-        val fs = n.putArray("fields")
-        declaredFields.foreach(f => fs.add(f.deepCopy[JsonNode]()))
-        (prevSpecNodes :+ n, newId)
-    }
-
-    // 3. manifest list: append keeps prior manifests (their content kind,
-    //    sequence numbers AND spec ids preserved — a carried DELETE
-    //    manifest must not be re-listed as data, and a carried manifest
-    //    keeps the spec its files were written under); overwrite starts
-    //    fresh (the DELETED entries above record the transition)
-    val prevManifests: Seq[(String, Long, Int, Long, Int)] =
-      if (overwrite || prevSnaps.isEmpty) Nil
-      else {
-        val cur = prevHead.flatMap(h =>
-          prevSnaps.find(_.get("snapshot-id").asLong() == h))
-        cur.map { s =>
-          readAvro(f, new Path(resolvePath(table, s.get("manifest-list").asText())))
-            .map(r => (r.get("manifest_path").toString,
-              r.get("manifest_length").asInstanceOf[Long],
-              opt(r, "content").map(_.asInstanceOf[Int]).getOrElse(0),
-              opt(r, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L),
-              opt(r, "partition_spec_id").map(_.asInstanceOf[Int]).getOrElse(0)))
-        }.getOrElse(Nil)
-      }
-    val listRel = s"metadata/snap-$partTag.avro"
-    val listRows =
-      (prevManifests :+ (manifestRel, manifestLen, 0, snapId, defaultSpecId))
-        .map { case (p, len, content, seq, specId) =>
-          record(ManifestListSchemaV2)(
-            "manifest_path" -> p, "manifest_length" -> len,
-            "partition_spec_id" -> specId, "content" -> content,
-            "sequence_number" -> seq, "added_snapshot_id" -> snapId)
-        }
-    writeAvro(f, new Path(root, listRel), ManifestListSchemaV2, listRows,
-      Map("format-version" -> "2"))
-
-    // 4. new metadata version (immutable), then the version-hint publish
-    val meta = mapper.createObjectNode()
-    // v2 metadata (sequence numbers are the delete-applicability
-    // ordering); v1 tables written by older rounds still read fine.
-    // The declared version only RATCHETS UP: a table deleteRowsV3 moved
-    // to format-version 3 (live DVs in Puffin files) must not be
-    // re-stamped 2 by a later append — a spec-conforming v2 reader
-    // would skip the carried DV entries and resurrect deleted rows.
-    val prevFv = prevMeta.flatMap(m => Option(m.get("format-version")))
-      .map(_.asInt()).getOrElse(2)
-    meta.put("format-version", math.max(prevFv, 2))
-    meta.put("last-sequence-number", snapId)
-    meta.put("table-uuid", f"graft-iceberg-$metaV%08d")
-    meta.put("location", table)
-    meta.put("last-updated-ms", 0L)
+    // 3. new metadata version (immutable): table-level fields carried,
+    //    this commit's schema and partition spec declared
+    val meta = tableMeta(prevMeta, table, metaV)
     meta.put("last-column-id", lastColId)
     meta.set[ObjectNode]("schema", schemaNode.deepCopy())
     val schemas = meta.putArray("schemas")
     allSchemas.foreach(s => schemas.add(s.deepCopy[JsonNode]()))
     meta.put("current-schema-id", schemaId)
-    val legacySpec = meta.putArray("partition-spec") // v1 legacy form
-    declaredFields.foreach(f => legacySpec.add(f.deepCopy[JsonNode]()))
-    val specs = meta.putArray("partition-specs")
-    allSpecNodes.foreach(s => specs.add(s.deepCopy[JsonNode]()))
-    meta.put("default-spec-id", defaultSpecId)
-    meta.put("last-partition-id", math.max(nextPartId,
-      allSpecNodes.flatMap(_.get("fields").elements().asScala)
-        .map(_.get("field-id").asInt()).maxOption.getOrElse(999)))
-    // table PROPERTIES and REFS are durable foreign state this writer
-    // must carry forward, never silently reset
-    meta.set[JsonNode]("properties",
-      prevMeta.flatMap(m => Option(m.get("properties")))
-        .map(_.deepCopy[JsonNode]())
-        .getOrElse(mapper.createObjectNode()))
-    meta.put("current-snapshot-id",
-      if (toBranch.isEmpty) snapId
-      else prevMeta.get.get("current-snapshot-id").asLong())
-    prevRefs.map(_.deepCopy[ObjectNode]()).foreach { rs =>
-      // the written snapshot moves its ref: the target branch, or the
-      // `main` branch ref (kept in sync with current-snapshot-id) when
-      // committing to main
-      val moved = toBranch.getOrElse("main")
-      if (toBranch.nonEmpty || rs.has("main")) {
-        val r = mapper.createObjectNode()
-        r.put("snapshot-id", snapId); r.put("type", "branch")
-        rs.set[ObjectNode](moved, r)
-      }
-      meta.set[ObjectNode]("refs", rs)
-    }
+    val (_, defaultSpecId) = declareSpec(meta, prevMeta, schemaNode, table,
+      specCols.map(sc => (sc.name, sc.transform, sc.source)))
+
+    // 4. manifest list: append carries the head's manifests; overwrite
+    //    starts fresh (the DELETED entries above record the transition)
+    val listRel = s"metadata/snap-$partTag.avro"
+    val parentList =
+      if (overwrite) None
+      else prevHead.flatMap(h => prevSnaps.find(_.get("snapshot-id").asLong() == h))
+        .map(_.get("manifest-list").asText())
+    writeManifestList(f, table, listRel, snapId, parentList,
+      ListEntry(manifestRel, manifestLen, 0, snapId, defaultSpecId), 2)
+
+    // 5. the snapshot, then the put-if-absent publish
     val op = if (operation.nonEmpty) operation
       else if (overwrite) "overwrite" else "append"
-    val snapNode = mapper.createObjectNode()
-    snapNode.put("snapshot-id", snapId)
-    snapNode.put("sequence-number", snapId)
-    prevHead.foreach(h => snapNode.put("parent-snapshot-id", h))
-    snapNode.put("timestamp-ms", 0L)
-    val summary = mapper.createObjectNode()
-    summary.put("operation", op)
-    summary.put("added-data-files", named.size.toString)
-    summary.put("removed-data-files", removed.size.toString)
-    snapNode.set[ObjectNode]("summary", summary)
-    snapNode.put("manifest-list", listRel)
-    snapNode.put("schema-id", schemaId)
-    val allSnaps = meta.putArray("snapshots")
-    prevSnaps.foreach(s => allSnaps.add(s.deepCopy[JsonNode]()))
-    allSnaps.add(snapNode)
-    val log = meta.putArray("snapshot-log")
-    prevMeta.flatMap(m => Option(m.get("snapshot-log")))
-      .foreach(_.elements().asScala.foreach(e => log.add(e.deepCopy[JsonNode]())))
-    // snapshot-log tracks CURRENT-snapshot-id changes (the time-travel
-    // channel) — a branch commit does not move main, so no entry
-    if (toBranch.isEmpty) {
-      val logEntry = mapper.createObjectNode()
-      logEntry.put("timestamp-ms", 0L); logEntry.put("snapshot-id", snapId)
-      log.add(logEntry)
-    }
-
-    val tmp = new Path(metaDir(table),
-      s".v$metaV-${nameToken.getOrElse("0")}.metadata.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(meta))
-    finally out.close()
-    if (ifAbsent) {
-      // the CAS point of the file-system-tables catalog: the immutable
-      // metadata file name IS the version — claim it without overwrite
-      if (!renameIfAbsent(spark, f, tmp, metaFile(table, metaV)))
-        return None
-    } else
-      require(f.rename(tmp, metaFile(table, metaV)),
-        s"metadata rename failed: v$metaV")
-    val hint = f.create(hintFile(table), true)
-    try hint.write(metaV.toString.getBytes(StandardCharsets.UTF_8))
-    finally hint.close()
-    maybeAutoCleanupMetadata(spark, table, meta)
-    Some(snapId)
+    appendSnapshot(meta, snapId, prevHead, Seq("operation" -> op,
+      "added-data-files" -> named.size.toString,
+      "removed-data-files" -> removed.size.toString),
+      listRel, Some(schemaId), toBranch)
+    val claimed = publish(spark, table, meta, metaV, nameToken.getOrElse("0"))
+    require(claimed || ifAbsent, s"metadata rename failed: v$metaV")
+    Option.when(claimed)(snapId)
   }
 
   /** The spec's automatic metadata retention
@@ -1713,10 +1705,11 @@ object IcebergLite {
     * — without it a streaming writer leaves one immortal metadata file
     * per batch. Time travel rides the CURRENT metadata's snapshots
     * array, so nothing user-visible is lost ([[cleanupMetadata]]'s own
-    * contract). Failure must not fail the commit.
+    * contract). Failure must not fail the commit: it is logged, and the
+    * next commit retries the prune.
     */
   private def maybeAutoCleanupMetadata(spark: SparkSession, table: String,
-                                       meta: ObjectNode): Unit = {
+                                       meta: ObjectNode, metaV: Int): Unit = {
     val props = Option(meta.get("properties"))
       .collect { case o: ObjectNode => o }
     val enabled = props
@@ -1729,7 +1722,9 @@ object IcebergLite {
       .getOrElse(100)
     try cleanupMetadata(spark, table,
       retainVersions = math.max(keepPrev, 0) + 1)
-    catch { case scala.util.control.NonFatal(_) => }
+    catch { case scala.util.control.NonFatal(e) =>
+      log.warn(s"$table: metadata auto-cleanup after v$metaV failed: $e")
+    }
   }
 
   /** Atomic put-if-absent claim of `dst` — shared primitive with
@@ -1943,16 +1938,15 @@ object IcebergLite {
     // the history (expireSnapshots can reap their manifests later)
     val prevMeta = if (existing.isEmpty) None else Some(metadata(spark, table))
     val prevSnapId = prevMeta.map(_.get("current-snapshot-id").asLong())
-      .getOrElse(-1L)
-    val snapId = prevSnapId + 1L
-    val metaV = existing.lastOption.map(_.toInt + 1).getOrElse(1)
-    val topFields: Map[String, (Int, DataType)] = {
-      val (node, _) = sparkToIceberg(schema)
-      node.get("fields").elements().asScala.filter(_.get("type").isTextual)
+      .filter(_ >= 0)
+    val snapId = nextSnapshotId(prevMeta)
+    val metaV = existing.lastOption.map(_ + 1).getOrElse(1)
+    val (schemaNode, lastColId) = sparkToIceberg(schema)
+    val topFields: Map[String, (Int, DataType)] =
+      schemaNode.get("fields").elements().asScala.filter(_.get("type").isTextual)
         .map(fn => fn.get("name").asText() ->
           (fn.get("id").asInt(), schema(fn.get("name").asText()).dataType))
         .toMap
-    }
     val entrySchema = manifestEntrySchema(Nil)
     val dataFileSchema = entrySchema.getField("data_file").schema()
     val partSchema = dataFileSchema.getField("partition").schema()
@@ -1988,79 +1982,28 @@ object IcebergLite {
     val manifestLen = writeAvro(f, new Path(root, manifestRel),
       entrySchema, entries, Map("format-version" -> "2", "content" -> "data"))
     val listRel = f"metadata/snap-$snapId%05d.avro"
-    writeAvro(f, new Path(root, listRel), ManifestListSchemaV2,
-      Seq(record(ManifestListSchemaV2)(
-        "manifest_path" -> manifestRel, "manifest_length" -> manifestLen,
-        "partition_spec_id" -> 0, "content" -> 0,
-        "sequence_number" -> snapId, "added_snapshot_id" -> snapId)),
-      Map("format-version" -> "2"))
-    val (schemaNode, lastColId) = sparkToIceberg(schema)
-    val meta = mapper.createObjectNode()
-    // same ratchet as commitAttempt: a synced face whose carried
-    // snapshots hold DV manifests keeps declaring format-version 3
-    meta.put("format-version", math.max(prevMeta
-      .flatMap(m => Option(m.get("format-version"))).map(_.asInt())
-      .getOrElse(2), 2))
-    meta.put("last-sequence-number", snapId)
-    meta.put("table-uuid",
-      prevMeta.flatMap(m => Option(m.get("table-uuid")).map(_.asText()))
-        .getOrElse(f"graft-iceberg-$metaV%08d"))
-    meta.put("location", table)
-    meta.put("last-updated-ms", 0L)
+    writeManifestList(f, table, listRel, snapId, None,
+      ListEntry(manifestRel, manifestLen, 0, snapId, 0), 2)
+    // a synced face keeps its format-version ratchet, table-uuid,
+    // properties and refs across syncs
+    val meta = tableMeta(prevMeta, table, metaV)
     meta.put("last-column-id", lastColId)
     meta.set[ObjectNode]("schema", schemaNode)
-    val schemas = meta.putArray("schemas"); schemas.add(schemaNode.deepCopy())
+    meta.putArray("schemas").add(schemaNode.deepCopy())
     meta.put("current-schema-id", 0)
     meta.putArray("partition-spec")
-    val specs = meta.putArray("partition-specs")
-    val spec0 = mapper.createObjectNode()
-    spec0.put("spec-id", 0); spec0.putArray("fields"); specs.add(spec0)
+    val spec0 = meta.putArray("partition-specs").addObject()
+    spec0.put("spec-id", 0); spec0.putArray("fields")
     meta.put("default-spec-id", 0)
     meta.put("last-partition-id", 999)
-    // a synced face keeps its properties (and any refs) across syncs
-    meta.set[JsonNode]("properties",
-      prevMeta.flatMap(m => Option(m.get("properties")))
-        .map(_.deepCopy[JsonNode]())
-        .getOrElse(mapper.createObjectNode()))
-    prevMeta.flatMap(m => Option(m.get("refs"))).foreach(r =>
-      meta.set[JsonNode]("refs", r.deepCopy[JsonNode]()))
-    meta.put("current-snapshot-id", snapId)
-    val snapNode = mapper.createObjectNode()
-    snapNode.put("snapshot-id", snapId)
-    snapNode.put("sequence-number", snapId)
-    if (prevSnapId >= 0) snapNode.put("parent-snapshot-id", prevSnapId)
-    snapNode.put("timestamp-ms", 0L)
-    val summary = mapper.createObjectNode()
     // a re-sync REPLACES the visible file set wholesale — recorded as
     // overwrite so incremental readers refuse the range instead of
     // double-counting the re-listed files
-    summary.put("operation", if (prevSnapId >= 0) "overwrite" else "append")
-    summary.put("added-data-files", files.size.toString)
-    snapNode.set[ObjectNode]("summary", summary)
-    snapNode.put("manifest-list", listRel)
-    snapNode.put("schema-id", 0)
-    val snapsArr = meta.putArray("snapshots")
-    prevMeta.flatMap(m => Option(m.get("snapshots")))
-      .foreach(_.elements().asScala
-        .foreach(sn => snapsArr.add(sn.deepCopy[JsonNode]())))
-    snapsArr.add(snapNode)
-    val log = meta.putArray("snapshot-log")
-    prevMeta.flatMap(m => Option(m.get("snapshot-log")))
-      .foreach(_.elements().asScala
-        .foreach(e => log.add(e.deepCopy[JsonNode]())))
-    val logEntry = mapper.createObjectNode()
-    logEntry.put("timestamp-ms", 0L); logEntry.put("snapshot-id", snapId)
-    log.add(logEntry)
-    val tmp = new Path(metaDir(table), s".v$metaV.metadata.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(meta))
-    finally out.close()
-    require(f.rename(tmp, metaFile(table, metaV)),
+    appendSnapshot(meta, snapId, prevSnapId, Seq(
+      "operation" -> (if (prevSnapId.nonEmpty) "overwrite" else "append"),
+      "added-data-files" -> files.size.toString), listRel, Some(0))
+    require(publish(spark, table, meta, metaV),
       s"metadata rename failed: v$metaV")
-    val hint = f.create(hintFile(table), true)
-    try hint.write(metaV.toString.getBytes(StandardCharsets.UTF_8))
-    finally hint.close()
     snapId
   }
 
@@ -2104,10 +2047,8 @@ object IcebergLite {
     val root = new Path(table)
     val f = fs(spark, root)
     val meta = metadata(spark, table)
-    val prevSnaps = Option(meta.get("snapshots"))
-      .map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
-    require(prevSnaps.nonEmpty, s"$table: no snapshots")
-    val snapId = prevSnaps.map(_.get("snapshot-id").asLong()).max + 1
+    require(snapshotsOf(meta).nonEmpty, s"$table: no snapshots")
+    val snapId = nextSnapshotId(Some(meta))
     val metaV = versions(spark, table).last + 1
     val snap = snapshot(spark, table)
     if (snap.detail.isEmpty) return DeleteStats(snap.snapshotId, 0, 0L)
@@ -2229,60 +2170,8 @@ object IcebergLite {
       DeleteManifestEntrySchema, Seq(entry),
       Map("format-version" -> "2", "content" -> "deletes"))
 
-    // 3. new manifest list: every prior manifest carried (content/seq
-    //    preserved) + the delete manifest
-    val curList = prevSnaps.find(_.get("snapshot-id").asLong() ==
-      meta.get("current-snapshot-id").asLong())
-      .map(_.get("manifest-list").asText())
-      .getOrElse(sys.error(s"$table: current snapshot has no manifest list"))
-    val carried = readAvro(f, new Path(resolvePath(table, curList))).map(r =>
-      (r.get("manifest_path").toString,
-        r.get("manifest_length").asInstanceOf[Long],
-        opt(r, "content").map(_.asInstanceOf[Int]).getOrElse(0),
-        opt(r, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)))
-    val listRel = f"metadata/snap-$snapId%05d.avro"
-    val listRows = (carried :+ (manifestRel, manifestLen, 1, snapId)).map {
-      case (p, len, content, seq) => record(ManifestListSchemaV2)(
-        "manifest_path" -> p, "manifest_length" -> len,
-        "partition_spec_id" -> 0, "content" -> content,
-        "sequence_number" -> seq, "added_snapshot_id" -> snapId)
-    }
-    writeAvro(f, new Path(root, listRel), ManifestListSchemaV2, listRows,
-      Map("format-version" -> "2"))
-
-    // 4. new metadata: the previous version with a delete snapshot
-    //    appended (schema untouched — a delete never evolves it)
-    val newMeta = meta.deepCopy[ObjectNode]()
-    newMeta.put("format-version", 2)
-    newMeta.put("last-sequence-number", snapId)
-    newMeta.put("current-snapshot-id", snapId)
-    val snapNode = mapper.createObjectNode()
-    snapNode.put("snapshot-id", snapId)
-    snapNode.put("sequence-number", snapId)
-    snapNode.put("parent-snapshot-id", snap.snapshotId)
-    snapNode.put("timestamp-ms", 0L)
-    val summary = mapper.createObjectNode()
-    summary.put("operation", "delete")
-    summary.put("added-delete-files", "1")
-    snapNode.set[ObjectNode]("summary", summary)
-    snapNode.put("manifest-list", listRel)
-    Option(meta.get("current-schema-id"))
-      .foreach(id => snapNode.put("schema-id", id.asInt()))
-    newMeta.withArray[ArrayNode]("snapshots").add(snapNode)
-    val logEntry = mapper.createObjectNode()
-    logEntry.put("timestamp-ms", 0L)
-    logEntry.put("snapshot-id", snapId)
-    newMeta.withArray[ArrayNode]("snapshot-log").add(logEntry)
-    val tmp = new Path(metaDir(table), s".v$metaV.metadata.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(newMeta))
-    finally out.close()
-    require(f.rename(tmp, metaFile(table, metaV)),
-      s"metadata rename failed: v$metaV")
-    val hint = f.create(hintFile(table), true)
-    try hint.write(metaV.toString.getBytes(StandardCharsets.UTF_8))
-    finally hint.close()
+    commitDeletes(spark, table, meta, metaV, snapId, manifestRel, manifestLen,
+      formatVersion = 2, "added-delete-files" -> "1")
     DeleteStats(snapId, 1, nRows)
   }
 
@@ -2307,10 +2196,8 @@ object IcebergLite {
     val root = new Path(table)
     val f = fs(spark, root)
     val meta = metadata(spark, table)
-    val prevSnaps = Option(meta.get("snapshots"))
-      .map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
-    require(prevSnaps.nonEmpty, s"$table: no snapshots")
-    val snapId = prevSnaps.map(_.get("snapshot-id").asLong()).max + 1
+    require(snapshotsOf(meta).nonEmpty, s"$table: no snapshots")
+    val snapId = nextSnapshotId(Some(meta))
     val metaV = versions(spark, table).last + 1
     val snap = snapshot(spark, table)
     if (snap.detail.isEmpty) return DeleteStats(snap.snapshotId, 0, 0L)
@@ -2378,60 +2265,37 @@ object IcebergLite {
       DeleteManifestEntrySchemaV3, entries,
       Map("format-version" -> "3", "content" -> "deletes"))
 
-    // 3. new manifest list: carried priors + the DV manifest
-    val curList = prevSnaps.find(_.get("snapshot-id").asLong() ==
-      meta.get("current-snapshot-id").asLong())
+    // format-version 3: the DV entries are only legal there
+    commitDeletes(spark, table, meta, metaV, snapId, manifestRel, manifestLen,
+      formatVersion = 3, "added-dvs" -> bitmaps.size.toString)
+    DeleteStats(snapId, bitmaps.size, victims.length.toLong)
+  }
+
+  /** Publish a row-level DELETE snapshot on main as metadata version
+    * `metaV`: the current snapshot's manifests carried plus the one
+    * DELETE manifest, the previous metadata otherwise unchanged (a
+    * delete never evolves the schema) with its format-version raised to
+    * at least `formatVersion`.
+    */
+  private def commitDeletes(spark: SparkSession, table: String,
+                            meta: JsonNode, metaV: Int, snapId: Long,
+                            manifestRel: String, manifestLen: Long,
+                            formatVersion: Int,
+                            added: (String, String)): Unit = {
+    val cur = meta.get("current-snapshot-id").asLong()
+    val curList = snapshotsOf(meta).find(_.get("snapshot-id").asLong() == cur)
       .map(_.get("manifest-list").asText())
       .getOrElse(sys.error(s"$table: current snapshot has no manifest list"))
-    val carried = readAvro(f, new Path(resolvePath(table, curList))).map(r =>
-      (r.get("manifest_path").toString,
-        r.get("manifest_length").asInstanceOf[Long],
-        opt(r, "content").map(_.asInstanceOf[Int]).getOrElse(0),
-        opt(r, "sequence_number").map(_.asInstanceOf[Long]).getOrElse(0L)))
     val listRel = f"metadata/snap-$snapId%05d.avro"
-    val listRows = (carried :+ (manifestRel, manifestLen, 1, snapId)).map {
-      case (p, len, content, seq) => record(ManifestListSchemaV2)(
-        "manifest_path" -> p, "manifest_length" -> len,
-        "partition_spec_id" -> 0, "content" -> content,
-        "sequence_number" -> seq, "added_snapshot_id" -> snapId)
-    }
-    writeAvro(f, new Path(root, listRel), ManifestListSchemaV2, listRows,
-      Map("format-version" -> "3"))
-
-    // 4. new metadata: format-version 3 (the DV entries are only legal
-    //    there), delete snapshot appended, schema untouched
+    writeManifestList(fs(spark, new Path(table)), table, listRel, snapId,
+      Some(curList), ListEntry(manifestRel, manifestLen, 1, snapId, 0),
+      formatVersion)
     val newMeta = meta.deepCopy[ObjectNode]()
-    newMeta.put("format-version", 3)
-    newMeta.put("last-sequence-number", snapId)
-    newMeta.put("current-snapshot-id", snapId)
-    val snapNode = mapper.createObjectNode()
-    snapNode.put("snapshot-id", snapId)
-    snapNode.put("sequence-number", snapId)
-    snapNode.put("parent-snapshot-id", snap.snapshotId)
-    snapNode.put("timestamp-ms", 0L)
-    val summary = mapper.createObjectNode()
-    summary.put("operation", "delete")
-    summary.put("added-dvs", bitmaps.size.toString)
-    snapNode.set[ObjectNode]("summary", summary)
-    snapNode.put("manifest-list", listRel)
-    Option(meta.get("current-schema-id"))
-      .foreach(id => snapNode.put("schema-id", id.asInt()))
-    newMeta.withArray[ArrayNode]("snapshots").add(snapNode)
-    val logEntry = mapper.createObjectNode()
-    logEntry.put("timestamp-ms", 0L)
-    logEntry.put("snapshot-id", snapId)
-    newMeta.withArray[ArrayNode]("snapshot-log").add(logEntry)
-    val tmp = new Path(metaDir(table), s".v$metaV.metadata.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(newMeta))
-    finally out.close()
-    require(f.rename(tmp, metaFile(table, metaV)),
+    ratchetFormat(newMeta, Some(meta), formatVersion)
+    appendSnapshot(newMeta, snapId, Some(cur), Seq("operation" -> "delete", added),
+      listRel, Option(meta.get("current-schema-id")).map(_.asInt()))
+    require(publish(spark, table, newMeta, metaV),
       s"metadata rename failed: v$metaV")
-    val hint = f.create(hintFile(table), true)
-    try hint.write(metaV.toString.getBytes(StandardCharsets.UTF_8))
-    finally hint.close()
-    DeleteStats(snapId, bitmaps.size, victims.length.toLong)
   }
 
   /** What [[purgeDeletes]] did. */
@@ -2489,24 +2353,14 @@ object IcebergLite {
     PurgeStats(sid, touched.size, untouched.size)
   }
 
-  /** Write `meta` as the next immutable metadata version and repoint the
-    * version hint — the metadata-only publish rename/drop ride.
+  /** [[publish]] `meta` as the next metadata version — the metadata-only
+    * edits (schema, spec, refs, properties, rollback) ride this.
     */
   private def publishMetadataVersion(spark: SparkSession, table: String,
                                      meta: ObjectNode): Int = {
-    val f = fs(spark, metaDir(table))
     val metaV = versions(spark, table).last + 1
-    val tmp = new Path(metaDir(table), s".v$metaV-evo.metadata.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(meta))
-    finally out.close()
-    require(f.rename(tmp, metaFile(table, metaV)),
+    require(publish(spark, table, meta, metaV),
       s"metadata rename failed: v$metaV")
-    val hint = f.create(hintFile(table), true)
-    try hint.write(metaV.toString.getBytes(StandardCharsets.UTF_8))
-    finally hint.close()
-    maybeAutoCleanupMetadata(spark, table, meta)
     metaV
   }
 
@@ -2605,15 +2459,10 @@ object IcebergLite {
   def rollbackTo(spark: SparkSession, table: String,
                  snapshotId: Long): Int = {
     val meta = metadata(spark, table).deepCopy[ObjectNode]()
-    val ids = Option(meta.get("snapshots")).map(_.elements().asScala.toSeq)
-      .getOrElse(Seq.empty).map(_.get("snapshot-id").asLong())
+    val ids = snapshotsOf(meta).map(_.get("snapshot-id").asLong())
     require(ids.contains(snapshotId),
       s"$table: snapshot $snapshotId not retained (have $ids)")
-    meta.put("current-snapshot-id", snapshotId)
-    val logEntry = mapper.createObjectNode()
-    logEntry.put("timestamp-ms", 0L)
-    logEntry.put("snapshot-id", snapshotId)
-    meta.withArray[ArrayNode]("snapshot-log").add(logEntry)
+    moveMain(meta, snapshotId)
     publishMetadataVersion(spark, table, meta)
   }
 
@@ -2637,8 +2486,7 @@ object IcebergLite {
   private def putRef(spark: SparkSession, table: String, name: String,
                      refType: String, at: Option[Long]): Int = {
     val meta = metadata(spark, table).deepCopy[ObjectNode]()
-    val ids = Option(meta.get("snapshots")).map(_.elements().asScala.toSeq)
-      .getOrElse(Seq.empty).map(_.get("snapshot-id").asLong())
+    val ids = snapshotsOf(meta).map(_.get("snapshot-id").asLong())
     val target = at.getOrElse(meta.get("current-snapshot-id").asLong())
     require(ids.contains(target),
       s"$table: snapshot $target not retained (have $ids)")
@@ -2646,9 +2494,7 @@ object IcebergLite {
       .collect { case o: ObjectNode => o }
       .getOrElse(meta.putObject("refs"))
     require(!refs.has(name), s"$table: ref $name already exists")
-    val r = mapper.createObjectNode()
-    r.put("snapshot-id", target); r.put("type", refType)
-    refs.set[ObjectNode](name, r)
+    setRef(refs, name, target, refType)
     publishMetadataVersion(spark, table, meta)
   }
 
@@ -2707,7 +2553,7 @@ object IcebergLite {
     commitAttempt(spark, table, df, overwrite = false, operation,
       partitionBy = Nil, replacing = None, nameToken = None,
       ifAbsent = false, toBranch = Some(branch))
-      .getOrElse(sys.error("unreachable: non-contended publish cannot lose"))
+      .getOrElse(sys.error("unreachable: a lost non-contended claim raises"))
 
   /** FAST-FORWARD main to a branch head — the publish half of WAP:
     * metadata-only (current-snapshot-id repointed + snapshot-log
@@ -2725,9 +2571,8 @@ object IcebergLite {
       s"$table: ref $branch is a tag")
     val target = r.get("snapshot-id").asLong()
     val cur = meta.get("current-snapshot-id").asLong()
-    val byId: Map[Long, JsonNode] = Option(meta.get("snapshots"))
-      .map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
-      .map(s => s.get("snapshot-id").asLong() -> s).toMap
+    val byId: Map[Long, JsonNode] =
+      snapshotsOf(meta).map(s => s.get("snapshot-id").asLong() -> s).toMap
     // ancestor walk: target ... parent chain ... must pass through cur
     var probe: Option[Long] = Some(target)
     var isAncestor = false
@@ -2739,16 +2584,7 @@ object IcebergLite {
     require(isAncestor,
       s"$table: main ($cur) is not an ancestor of $branch ($target) — " +
         "not a fast-forward")
-    meta.put("current-snapshot-id", target)
-    if (refs.has("main")) {
-      val m = mapper.createObjectNode()
-      m.put("snapshot-id", target); m.put("type", "branch")
-      refs.set[ObjectNode]("main", m)
-    }
-    val logEntry = mapper.createObjectNode()
-    logEntry.put("timestamp-ms", 0L)
-    logEntry.put("snapshot-id", target)
-    meta.withArray[ArrayNode]("snapshot-log").add(logEntry)
+    moveMain(meta, target)
     publishMetadataVersion(spark, table, meta)
   }
 
@@ -2776,15 +2612,13 @@ object IcebergLite {
     * carry real stamps.) Time-keyed callers refuse on zero-stamp logs.
     */
   def hasWallClockStamps(spark: SparkSession, table: String): Boolean =
-    Option(metadata(spark, table).get("snapshots"))
-      .exists(_.elements().asScala.exists(s =>
-        Option(s.get("timestamp-ms")).exists(_.asLong() > 0)))
+    snapshotsOf(metadata(spark, table)).exists(s =>
+      Option(s.get("timestamp-ms")).exists(_.asLong() > 0))
 
   def lastSnapshotBefore(spark: SparkSession, table: String,
                          tsMillis: Long): Option[Long] = {
     val meta = metadata(spark, table)
-    Option(meta.get("snapshots")).map(_.elements().asScala.toSeq)
-      .getOrElse(Seq.empty)
+    snapshotsOf(meta)
       .filter(s => Option(s.get("timestamp-ms")).exists(_.asLong() < tsMillis))
       .lastOption.map(_.get("snapshot-id").asLong())
   }
@@ -2805,10 +2639,50 @@ object IcebergLite {
     */
   def evolvePartitionSpec(spark: SparkSession, table: String,
                           transforms: Seq[String]): Int = {
-    val meta = metadata(spark, table).deepCopy[ObjectNode]()
-    val schemaNode = currentSchemaNode(meta, table)
+    val prev = metadata(spark, table)
+    val meta = prev.deepCopy[ObjectNode]()
+    val currentIdentity = partitionSpecFields(prev)
+      .filter(_.transform == "identity").map(_.sourceId).toSet
+    val (fields, defaultId) = declareSpec(meta, Some(prev),
+      currentSchemaNode(prev, table), table, transforms.map { decl =>
+        val (tf, src) = parseTransformDecl(decl)
+        (transformFieldName(tf, src), tf, src)
+      })
+    // identity fields put their SOURCE COLUMN in the directory layout
+    // and DROP it from the data files — that physical choice is fixed at
+    // write time, so a metadata-only evolution may not change the
+    // identity set once data exists (old and new files would need
+    // conflicting basePath discovery). Transforms (bucket/truncate/
+    // time) keep the source column in-file and evolve freely.
+    val newIdentity = fields.filter(_.get("transform").asText() == "identity")
+      .map(_.get("source-id").asInt()).toSet
+    require(snapshotsOf(prev).isEmpty || newIdentity == currentIdentity,
+      s"$table: identity (hive-layout) partition fields cannot change " +
+        "by metadata-only evolution — existing files' directory layout " +
+        "is fixed; rewrite via overwrite with the new partitionBy")
+    publishMetadataVersion(spark, table, meta)
+    defaultId
+  }
+
+  /** Declare `cols` — (field name, transform, source column) — as the
+    * default partition spec of `meta`, against the spec history carried
+    * from `prev`. Partition-spec EVOLUTION means a table accumulates
+    * specs over its life, each data file forever bound to the spec it
+    * was written under (old files lack the new spec's partition values
+    * and prune conservatively by field name, readWherePart's contract).
+    * The declared layout either matches an existing spec (reuse its id —
+    * the steady state) or joins the history under a fresh one. Partition
+    * FIELD-ids are globally unique across the history (spec's reserved
+    * ≥1000 range, continued from last-partition-id); a field already
+    * seen in any prior spec keeps its id, exactly the real writer's
+    * assignment. Returns the declared fields and the default spec-id.
+    */
+  private def declareSpec(meta: ObjectNode, prev: Option[JsonNode],
+                          schemaNode: JsonNode, table: String,
+                          cols: Seq[(String, String, String)])
+      : (Seq[ObjectNode], Int) = {
     val prevSpecs: Seq[ObjectNode] =
-      Option(meta.get("partition-specs"))
+      prev.flatMap(m => Option(m.get("partition-specs")))
         .map(_.elements().asScala
           .collect { case o: ObjectNode => o.deepCopy[ObjectNode]() }.toSeq)
         .getOrElse(Nil)
@@ -2816,44 +2690,27 @@ object IcebergLite {
       prevSpecs.flatMap(_.get("fields").elements().asScala)
         .map(f => (f.get("source-id").asInt(),
           f.get("transform").asText()) -> f.get("field-id").asInt()).toMap
-    var nextId = math.max(Option(meta.get("last-partition-id"))
+    var nextId = math.max(prev.flatMap(m => Option(m.get("last-partition-id")))
       .map(_.asInt()).getOrElse(999), 999)
-    val fields: Seq[ObjectNode] = transforms.map { decl =>
-      val (tf, src) = parseTransformDecl(decl)
+    val fields: Seq[ObjectNode] = cols.map { case (name, transform, source) =>
       val sourceId = schemaNode.get("fields").elements().asScala
-        .find(_.get("name").asText() == src)
+        .find(_.get("name").asText() == source)
         .map(_.get("id").asInt())
         .getOrElse(sys.error(
-          s"$table: partition source column not in schema: $src"))
-      val id = knownIds.getOrElse((sourceId, tf), { nextId += 1; nextId })
+          s"$table: partition source column not in schema: $source"))
       val n = mapper.createObjectNode()
-      n.put("name", transformFieldName(tf, src))
-      n.put("transform", tf)
+      n.put("name", name)
+      n.put("transform", transform)
       n.put("source-id", sourceId)
-      n.put("field-id", id)
+      n.put("field-id",
+        knownIds.getOrElse((sourceId, transform), { nextId += 1; nextId }))
       n
     }
-    // identity fields put their SOURCE COLUMN in the directory layout
-    // and DROP it from the data files — that physical choice is fixed at
-    // write time, so a metadata-only evolution may not change the
-    // identity set once data exists (old and new files would need
-    // conflicting basePath discovery). Transforms (bucket/truncate/
-    // time) keep the source column in-file and evolve freely.
-    val hasData = Option(meta.get("snapshots"))
-      .exists(_.elements().asScala.nonEmpty)
-    val currentIdentity = partitionSpecFields(meta)
-      .filter(_.transform == "identity").map(_.sourceId).toSet
-    val newIdentity = fields.filter(_.get("transform").asText() == "identity")
-      .map(_.get("source-id").asInt()).toSet
-    require(!hasData || newIdentity == currentIdentity,
-      s"$table: identity (hive-layout) partition fields cannot change " +
-        "by metadata-only evolution — existing files' directory layout " +
-        "is fixed; rewrite via overwrite with the new partitionBy")
     def key(fs: Seq[JsonNode]): Seq[(Int, String)] =
       fs.map(f => (f.get("source-id").asInt(), f.get("transform").asText()))
-    val defaultId = prevSpecs.find(s =>
+    val (specs, defaultId) = prevSpecs.find(s =>
       key(s.get("fields").elements().asScala.toSeq) == key(fields)) match {
-      case Some(s) => s.get("spec-id").asInt()
+      case Some(s) => (prevSpecs, s.get("spec-id").asInt())
       case None =>
         val newId = prevSpecs.map(_.get("spec-id").asInt())
           .maxOption.getOrElse(-1) + 1
@@ -2861,16 +2718,17 @@ object IcebergLite {
         n.put("spec-id", newId)
         val fs = n.putArray("fields")
         fields.foreach(f => fs.add(f.deepCopy[JsonNode]()))
-        val arr = meta.putArray("partition-specs")
-        (prevSpecs :+ n).foreach(s => arr.add(s))
-        newId
+        (prevSpecs :+ n, newId)
     }
-    val legacy = meta.putArray("partition-spec")
+    val legacy = meta.putArray("partition-spec") // v1 legacy form
     fields.foreach(f => legacy.add(f.deepCopy[JsonNode]()))
+    val specsArr = meta.putArray("partition-specs")
+    specs.foreach(specsArr.add(_))
     meta.put("default-spec-id", defaultId)
-    meta.put("last-partition-id", nextId)
-    publishMetadataVersion(spark, table, meta)
-    defaultId
+    meta.put("last-partition-id", math.max(nextId,
+      specs.flatMap(_.get("fields").elements().asScala)
+        .map(_.get("field-id").asInt()).maxOption.getOrElse(999)))
+    (fields, defaultId)
   }
 
   /** The table's property map (SHOW TBLPROPERTIES' source) — metadata
@@ -2897,8 +2755,7 @@ object IcebergLite {
                       fromSnapshotId: Long,
                       toSnapshotId: Option[Long] = None): DataFrame = {
     val meta = metadata(spark, table)
-    val snaps = Option(meta.get("snapshots")).map(_.elements().asScala.toSeq)
-      .getOrElse(Seq.empty)
+    val snaps = snapshotsOf(meta)
     val ids = snaps.map(_.get("snapshot-id").asLong())
     val toId = toSnapshotId.getOrElse(meta.get("current-snapshot-id").asLong())
     // range resolution by the snapshots array's APPEND ORDER, not id
@@ -2997,8 +2854,7 @@ object IcebergLite {
               withVersion: Boolean = false): DataFrame = {
     require(keys.nonEmpty, "changes needs the key columns for classification")
     val meta = metadata(spark, table)
-    val ids = Option(meta.get("snapshots")).map(_.elements().asScala.toSeq)
-      .getOrElse(Seq.empty).map(_.get("snapshot-id").asLong())
+    val ids = snapshotsOf(meta).map(_.get("snapshot-id").asLong())
     val toId = toSnapshotId.getOrElse(meta.get("current-snapshot-id").asLong())
     val fromIdx = ids.indexOf(fromSnapshotId)
     val toIdx = ids.indexOf(toId)
@@ -3060,8 +2916,7 @@ object IcebergLite {
     */
   private[graft] def historyOrdinal(spark: SparkSession, table: String,
                                     snapshotId: Long): Long = {
-    val ids = Option(metadata(spark, table).get("snapshots"))
-      .map(_.elements().asScala.toSeq).getOrElse(Seq.empty)
+    val ids = snapshotsOf(metadata(spark, table))
       .map(_.get("snapshot-id").asLong())
     val idx = ids.indexOf(snapshotId)
     require(idx >= 0, s"$table: snapshot $snapshotId not in history $ids")
@@ -3107,15 +2962,14 @@ object IcebergLite {
   def history(spark: SparkSession, table: String): DataFrame = {
     import spark.implicits._
     val meta = metadata(spark, table)
-    Option(meta.get("snapshots")).map(_.elements().asScala.toSeq)
-      .getOrElse(Seq.empty).map { s =>
-        val sum = Option(s.get("summary"))
-        (s.get("snapshot-id").asLong(),
-          Option(s.get("parent-snapshot-id")).map(_.asLong()).getOrElse(-1L),
-          sum.flatMap(x => Option(x.get("operation"))).map(_.asText()).getOrElse(""),
-          sum.flatMap(x => Option(x.get("added-data-files"))).map(_.asText().toLong).getOrElse(-1L),
-          sum.flatMap(x => Option(x.get("removed-data-files"))).map(_.asText().toLong).getOrElse(-1L))
-      }.toDF("snapshot_id", "parent_id", "operation", "n_added", "n_removed")
+    snapshotsOf(meta).map { s =>
+      val sum = Option(s.get("summary"))
+      (s.get("snapshot-id").asLong(),
+        Option(s.get("parent-snapshot-id")).map(_.asLong()).getOrElse(-1L),
+        sum.flatMap(x => Option(x.get("operation"))).map(_.asText()).getOrElse(""),
+        sum.flatMap(x => Option(x.get("added-data-files"))).map(_.asText().toLong).getOrElse(-1L),
+        sum.flatMap(x => Option(x.get("removed-data-files"))).map(_.asText().toLong).getOrElse(-1L))
+    }.toDF("snapshot_id", "parent_id", "operation", "n_added", "n_removed")
   }
 
   /** Expire all but the last `retainSnapshots` snapshots (the format's GC
@@ -3135,8 +2989,7 @@ object IcebergLite {
   def expireSnapshotsOlderThan(spark: SparkSession, table: String,
                                cutoffMillis: Long): Seq[String] = {
     val meta = metadata(spark, table)
-    val snaps = Option(meta.get("snapshots")).map(_.elements().asScala.toSeq)
-      .getOrElse(Seq.empty)
+    val snaps = snapshotsOf(meta)
     if (snaps.isEmpty) return Seq.empty
     // a zero-stamp snapshot log (this library's own deterministic
     // writer) has no wall-clock to retain by — refuse rather than
@@ -3157,8 +3010,7 @@ object IcebergLite {
     require(retainSnapshots >= 1, "must retain at least the current snapshot")
     val meta = metadata(spark, table)
     val f = fs(spark, metaDir(table))
-    val snaps = Option(meta.get("snapshots")).map(_.elements().asScala.toSeq)
-      .getOrElse(Seq.empty)
+    val snaps = snapshotsOf(meta)
     if (snaps.size <= retainSnapshots) return Seq.empty
     // branch heads and tags are PROTECTED: a ref'd snapshot expiring
     // would leave a dangling named pointer
@@ -3180,8 +3032,7 @@ object IcebergLite {
         .foldLeft((Set.empty[String], Set.empty[String], Set.empty[String])) {
           case ((lists, manifests, files), s) =>
             val lp = s.get("manifest-list").asText()
-            val mps = readAvro(f, new Path(resolvePath(table, lp)))
-              .map(_.get("manifest_path").toString)
+            val mps = listEntries(f, table, lp).map(_.path)
             val fps = mps.flatMap(mp =>
               readAvro(f, new Path(resolvePath(table, mp)))
                 .filter(_.get("status").asInstanceOf[Int] != 2)
@@ -3202,15 +3053,7 @@ object IcebergLite {
     val arr = pruned.putArray("snapshots")
     snaps.filter(s => keepIds.contains(s.get("snapshot-id").asLong()))
       .foreach(s => arr.add(s.deepCopy[JsonNode]()))
-    val tmp = new Path(metaDir(table), s".v$metaV.metadata.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(mapper.writerWithDefaultPrettyPrinter()
-      .writeValueAsBytes(pruned))
-    finally out.close()
-    require(f.rename(tmp, metaFile(table, metaV)), "expire metadata rename failed")
-    val hint = f.create(hintFile(table), true)
-    try hint.write(metaV.toString.getBytes(StandardCharsets.UTF_8))
-    finally hint.close()
+    require(publish(spark, table, pruned, metaV), "expire metadata rename failed")
 
     val victims = (dropMeta -- keepMeta) ++ (dropData -- keepData)
     victims.toSeq.sorted.map { rel =>
@@ -3238,20 +3081,18 @@ object IcebergLite {
     val meta = metadata(spark, table)
     val qual = (p: Path) => f.makeQualified(p).toString
     val referenced = scala.collection.mutable.Set.empty[String]
-    Option(meta.get("snapshots")).map(_.elements().asScala.toSeq)
-      .getOrElse(Seq.empty).foreach { s =>
-        val lp = new Path(resolvePath(table, s.get("manifest-list").asText()))
-        referenced += qual(lp)
-        readAvro(f, lp).foreach { r =>
-          val mp = new Path(resolvePath(table,
-            r.get("manifest_path").toString))
-          referenced += qual(mp)
-          readAvro(f, mp).foreach(e =>
-            referenced += qual(new Path(resolvePath(table,
-              e.get("data_file").asInstanceOf[GenericRecord]
-                .get("file_path").toString))))
-        }
+    snapshotsOf(meta).foreach { s =>
+      val lp = s.get("manifest-list").asText()
+      referenced += qual(new Path(resolvePath(table, lp)))
+      listEntries(f, table, lp).foreach { m =>
+        val mp = new Path(resolvePath(table, m.path))
+        referenced += qual(mp)
+        readAvro(f, mp).foreach(e =>
+          referenced += qual(new Path(resolvePath(table,
+            e.get("data_file").asInstanceOf[GenericRecord]
+              .get("file_path").toString))))
       }
+    }
     val victims = scala.collection.mutable.ArrayBuffer.empty[String]
     def walk(dir: Path): Unit =
       if (f.exists(dir)) f.listStatus(dir).foreach { st =>

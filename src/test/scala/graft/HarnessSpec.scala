@@ -208,6 +208,34 @@ class HarnessSpec extends SparkSpec {
     assert(Bench.compactLine(full, None).get("full_artifact").isNull)
   }
 
+  test("bench baseline: a driver-written artifact's parsed line is read, " +
+    "sf matches by value, only the listed queries are compared") {
+    val dir = Files.createTempDirectory("graft_bench_baseline")
+    def put(name: String, json: String): Unit =
+      Files.write(dir.resolve(name), json.getBytes("UTF-8"))
+    put("BENCH_LOCAL_r04.json",
+      """{"sf":"/data/sf0.1","queries":{"a":5.0,"b":5.0}}""")
+    // the driver's shape: the bench's compact line under `parsed`, the
+    // SF as a bare number, the trimmed map's rest under queries_elided
+    put("BENCH_r05.json", """{"n":3,"rc":0,"cpus":32,"sf":0.1,"tail":"...",
+      |"parsed":{"metric":"total","queries":{"a":1.0},"queries_elided":1}}"""
+      .stripMargin)
+    put("BENCH_r06.json", """{"n":3,"rc":0,"cpus":32,"sf":1,"tail":"",
+      |"parsed":{"sf":"/data/sf1","queries":{"a":9.0}}}""".stripMargin)
+    put("BENCH_r07.json",
+      """{"n":3,"rc":1,"cpus":32,"sf":0.1,"tail":"boom","parsed":null}""")
+    val baseline = Bench.benchBaseline("/data/sf0.1", dir)
+    assert(baseline == Some("BENCH_r05.json" -> Map("a" -> 1.0)))
+    // `b` is elided from the baseline's map: not compared, not regressed
+    val big = Bench.Rung("/data/sf0.1",
+      Map("a" -> List(2.0, 2.0, 2.0), "b" -> List(9.0, 9.0, 9.0)), Map.empty)
+    val quiet = Bench.HostSnap(0.2, 0.5, 1.0, 1, 100, 100000)
+    val full = Bench.fullArtifact(3, 1L, Seq("a", "b"), big, None, baseline,
+      (_, _) => Some(1.0), () => Bench.hostJson(quiet, None, quiet, 4))
+    assert(full.get("baseline").asText == "BENCH_r05.json")
+    assert(keys(full.get("regressions")) == Seq("a"))
+  }
+
   test("oracle_sql.json round-trips SQL holding a tab, CR, quote, backslash and U+0001") {
     val mapper = new ObjectMapper()
     val sql = "SELECT 'a\tb',\r\n \"col\" FROM t WHERE x LIKE '%\\%' -- \u0001"

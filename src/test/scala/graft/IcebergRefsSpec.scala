@@ -51,6 +51,58 @@ class IcebergRefsSpec extends SparkSpec {
       "refs must survive unrelated commits")
   }
 
+  test("the main ref mirrors current-snapshot-id through commit, " +
+    "deleteRows, deleteRowsV3, rollbackTo and fastForward") {
+    val t = newTable("graft_refs_main")
+    def inSync(step: String): Unit = {
+      val cur = IcebergLite.metadata(spark, t).get("current-snapshot-id")
+        .asLong()
+      assert(IcebergLite.tableRefs(spark, t)("main") == (cur -> "branch"),
+        s"after $step")
+    }
+    IcebergLite.commit(spark, t,
+      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "s"))        // s0
+    IcebergLite.createBranch(spark, t, "main")
+    IcebergLite.commit(spark, t, Seq((4L, "d")).toDF("k", "s"))   // s1
+    inSync("commit")
+    IcebergLite.deleteRows(spark, t, Seq(1L).toDF("k"), Seq("k")) // s2
+    inSync("deleteRows")
+    IcebergLite.deleteRowsV3(spark, t, Seq(2L).toDF("k"), Seq("k")) // s3
+    inSync("deleteRowsV3")
+    IcebergLite.rollbackTo(spark, t, 0L)
+    inSync("rollbackTo")
+    IcebergLite.createBranch(spark, t, "wip")
+    IcebergLite.commitToBranch(spark, t, "wip",
+      Seq((5L, "e")).toDF("k", "s"))                              // s4
+    inSync("commitToBranch")
+    IcebergLite.fastForward(spark, t, "wip")
+    inSync("fastForward")
+    assert(IcebergLite.tableRefs(spark, t)("main")._1 == 4L)
+  }
+
+  test("table-uuid stays fixed for the table's life across commit, " +
+    "delete, expire, property and add-files commits") {
+    val t = newTable("graft_refs_uuid")
+    def uuid: String =
+      IcebergLite.metadata(spark, t).get("table-uuid").asText()
+    IcebergLite.commit(spark, t, Seq((1L, "a"), (2L, "b")).toDF("k", "s"))
+    val first = uuid
+    def same(step: String): Unit = assert(uuid == first, s"after $step")
+    IcebergLite.commit(spark, t, Seq((3L, "c")).toDF("k", "s"))
+    same("commit")
+    IcebergLite.deleteRows(spark, t, Seq(1L).toDF("k"), Seq("k"))
+    same("deleteRows")
+    IcebergLite.expireSnapshots(spark, t, 1)
+    same("expireSnapshots")
+    IcebergLite.setProperty(spark, t, "owner", "audit")
+    same("setProperty")
+    val snap = IcebergLite.snapshot(spark, t)
+    IcebergLite.addFilesCommit(spark, t, snap.schema,
+      snap.files.map(p => new org.apache.hadoop.fs.Path(t, p).toString),
+      sync = true)
+    same("addFilesCommit")
+  }
+
   test("fastForward refuses a diverged branch; tags are immutable and " +
     "not committable") {
     val t = newTable("graft_refs_div")

@@ -20,6 +20,26 @@ class IcebergSpecEvolutionSpec extends SparkSpec {
 
   private def meta(t: String) = IcebergLite.metadata(spark, t)
 
+  /** The current snapshot's manifest list: manifest file name -> the
+    * partition spec id it is listed under.
+    */
+  private def listedSpecs(t: String): Map[String, Int] = {
+    import scala.jdk.CollectionConverters._
+    import org.apache.avro.file.DataFileReader
+    import org.apache.avro.generic.{GenericDatumReader, GenericRecord}
+    val m = meta(t)
+    val cur = m.get("current-snapshot-id").asLong()
+    val list = m.get("snapshots").elements().asScala
+      .find(_.get("snapshot-id").asLong() == cur).get
+      .get("manifest-list").asText()
+    val r = new DataFileReader[GenericRecord](new java.io.File(t, list),
+      new GenericDatumReader[GenericRecord]())
+    try r.iterator().asScala.map(e =>
+      new java.io.File(e.get("manifest_path").toString).getName ->
+        e.get("partition_spec_id").asInstanceOf[Int]).toMap
+    finally r.close()
+  }
+
   test("evolve bucket(id) -> bucket(grp): metadata-only, spec history " +
     "kept, globally-unique field-ids, undeclared append inherits the " +
     "NEW default, pruning stays per-file conservative") {
@@ -74,6 +94,25 @@ class IcebergSpecEvolutionSpec extends SparkSpec {
     assert(IcebergLite.evolvePartitionSpec(spark, t,
       Seq("bucket(4, id)")) == 0)
     assert(meta(t).get("partition-specs").size() == 2)
+  }
+
+  test("carried manifests keep their partition spec id through " +
+    "deleteRows and deleteRowsV3") {
+    val t = newTable("graft_specevo_carry")
+    def rows(ks: Range) = ks.map(k => (k.toLong, k % 5L, s"a$k"))
+      .toDF("id", "grp", "s")
+    IcebergLite.commit(spark, t, rows(0 until 40),
+      partitionTransforms = Seq("bucket(4, id)"))
+    IcebergLite.evolvePartitionSpec(spark, t, Seq("bucket(2, grp)"))
+    IcebergLite.commit(spark, t, rows(40 until 60))
+    val before = listedSpecs(t)
+    assert(before == Map("m-00000-0.avro" -> 0, "m-00001-0.avro" -> 1))
+    IcebergLite.deleteRows(spark, t, Seq(3L).toDF("id"), Seq("id"))
+    val afterDelete = before + ("m-00002-del.avro" -> 0)
+    assert(listedSpecs(t) == afterDelete)
+    IcebergLite.deleteRowsV3(spark, t, Seq(44L).toDF("id"), Seq("id"))
+    assert(listedSpecs(t) == afterDelete + ("m-00003-dv.avro" -> 0))
+    assert(IcebergLite.read(spark, t).count() == 58L)
   }
 
   test("identity-layout changes refuse once data exists (the directory " +

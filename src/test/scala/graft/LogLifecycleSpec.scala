@@ -247,4 +247,20 @@ class LogLifecycleSpec extends SparkSpec {
     val snaps = IcebergLite.history(spark, t).count()
     assert(snaps == 7L, s"all snapshots must survive cleanup, got $snaps")
   }
+
+  test("iceberg auto metadata cleanup runs on deleteRows commits too") {
+    val t = newTable("graft_autoclean_del")
+    IcebergLite.commit(spark, t,
+      (0L until 10L).map(k => (k, s"r$k")).toDF("k", "s"))
+    IcebergLite.setProperty(spark, t,
+      "write.metadata.delete-after-commit.enabled", "true")
+    IcebergLite.setProperty(spark, t,
+      "write.metadata.previous-versions-max", "2")
+    (0L until 5L).foreach(k =>
+      IcebergLite.deleteRows(spark, t, Seq(k).toDF("k"), Seq("k")))
+    val vs = IcebergLite.versions(spark, t)
+    assert(vs == Seq(6, 7, 8),
+      s"only current + 2 previous metadata versions may remain: $vs")
+    assert(IcebergLite.read(spark, t).count() == 5L)
+  }
 }

@@ -315,6 +315,24 @@ class TextSpec extends SparkSpec {
     assert(got.tail.forall(_._2 == 100L))
   }
 
+  test("topk sketch: a partition whose vocabulary exceeds width keeps at " +
+    "most width survivors, every token above n/(width+1) among them") {
+    import graft.functions.TextFuncs
+    // per partition: "hot" on every 4th token (n/4 > n/9), the rest all
+    // distinct — a vocabulary far larger than the 8 counters
+    val toks = (0 until 3000).map(i => if (i % 4 == 0) "hot" else s"cold$i")
+    val perPartition = toks.toDS().repartition(3)
+      .mapPartitions { it =>
+        val kept = TextFuncs.misraGries(it, 8).toSeq
+        Iterator((kept.size, kept.contains("hot")))
+      }.collect()
+    assert(perPartition.length == 3)
+    perPartition.foreach { case (n, hot) =>
+      assert(n <= 8, s"$n survivors in one partition")
+      assert(hot, "a token above n/(width+1) was dropped")
+    }
+  }
+
   test("ccnet buckets: per-language thirds by LM score, head above tail") {
     import graft.functions.UnigramLm
     val dir = Files.createTempDirectory("graft_ccnet").toString
