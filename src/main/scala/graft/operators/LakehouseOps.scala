@@ -343,24 +343,27 @@ object LakehouseOps {
   }
 
   // ---------------------------------------------------------------- B5 lib
-  /** ANALYZE ... FOR ALL COLUMNS equivalent: one distributed agg pass →
-    * tiny stats DF. Exact NDV here for oracle parity; at 100 TB swap
-    * `count_distinct` for `approx_count_distinct` (HLL, single pass).
+  /** ANALYZE ... FOR ALL COLUMNS equivalent → tiny stats DF, one row per
+    * column: per column, one narrow `groupBy(c)` (a row per distinct
+    * value with its row count, reading that column alone) folded into
+    * min, max, nulls and the exact NDV; the per-column rows union. Exact
+    * distinct counts over several columns in ONE aggregate plan as an
+    * Expand to (columns + 1)× the rows under a wide grouping key; the
+    * narrow group-bys never widen a row. Exact NDV here for oracle
+    * parity; at 100 TB use [[tableStatsApprox]] (HLL, bounded state).
     */
-  def tableStats(df: DataFrame, cols: Seq[String]): DataFrame = {
-    val aggs = cols.flatMap { c =>
-      Seq(
-        min(col(c)).cast("double").as(s"__min_$c"),
-        max(col(c)).cast("double").as(s"__max_$c"),
-        (count(lit(1)) - count(col(c))).as(s"__nulls_$c"),
-        count_distinct(col(c)).as(s"__ndv_$c"))
-    }
-    val stacked = cols
-      .map(c => s"'$c', __min_$c, __max_$c, __nulls_$c, __ndv_$c")
-      .mkString(", ")
-    df.agg(aggs.head, aggs.tail: _*)
-      .select(expr(s"stack(${cols.size}, $stacked) AS (column_name, min_val, max_val, n_nulls, ndv)"))
-  }
+  def tableStats(df: DataFrame, cols: Seq[String]): DataFrame =
+    cols.map { c =>
+      df.groupBy(col(c).as("v")).agg(count(lit(1)).as("n"))
+        .agg(
+          min(col("v")).cast("double").as("min_val"),
+          max(col("v")).cast("double").as("max_val"),
+          coalesce(sum(when(col("v").isNull, col("n"))), lit(0L))
+            .as("n_nulls"),
+          count(col("v")).as("ndv"))
+        .select(lit(c).as("column_name"), col("min_val"), col("max_val"),
+          col("n_nulls"), col("ndv"))
+    }.reduce(_.unionByName(_))
 
   // ---------------------------------------------------------------- B11 lib
   /** Recursive nested-struct flattening — the reference's first move on

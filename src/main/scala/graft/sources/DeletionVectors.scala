@@ -290,28 +290,41 @@ object DeletionVectors {
   }
 
   // ------------------------------------------------------- scan-side probe
-  /** `dv_deleted(fileKey, rowIndex)` — true iff `rowIndex` is a member of
-    * the broadcast DV bitmap for `fileKey` (the data file's NAME — unique
-    * within a Delta table, whose file names carry UUIDs). Scans filter on
-    * the negation. See [[DvProbe]].
+  /** `dv_deleted(filePath, rowIndex)` — true iff `rowIndex` is a member of
+    * the broadcast bitmap for the data file `filePath` names. `fileKey`
+    * maps the scan's `_metadata.file_path` to the map's key, the format's
+    * per-file identity: the file NAME for Delta ([[fileName]], unique
+    * within a table whose part names carry UUIDs), the canonical full
+    * path for Iceberg (the spec matches position deletes on the whole
+    * `file_path`). It runs once per data file, not per row. Scans filter
+    * on the negation. See [[DvProbe]].
     */
   def dvDeleted(bitmaps: Broadcast[Map[String, Array[Byte]]],
-                fileKey: Column, rowIndex: Column): Column =
+                filePath: Column, rowIndex: Column,
+                fileKey: String => String): Column =
     GraftColumnBridge.column(DvProbe(
-      GraftColumnBridge.expression(fileKey),
-      GraftColumnBridge.expression(rowIndex), bitmaps))
+      GraftColumnBridge.expression(filePath),
+      GraftColumnBridge.expression(rowIndex), bitmaps, fileKey))
+
+  /** Delta's DV key: the last path segment of a scan's file path. */
+  val fileName: String => String = p => p.substring(p.lastIndexOf('/') + 1)
 }
 
 /** Native expression behind [[DeletionVectors.dvDeleted]]: probes the
   * broadcast serialized-bitmap map, deserializing each file's bitmap at
   * most once per executor (a concurrent cache — the broadcast itself
-  * stays compressed). Codegen'd: the probe is one virtual call inside the
-  * whole-stage span, the same pattern as BpeTokenCount's reference-object
-  * model. Null inputs (no metadata column, corrupt row) read as "not
-  * deleted" — a DV can only ever HIDE rows it names.
+  * stays compressed). Rows arrive grouped by file, so the probe keeps the
+  * last file path it saw with that file's bitmap: a row of the same file
+  * costs one byte comparison of the path and one bitmap lookup, and
+  * `fileKey` plus the map lookup run once per file. Codegen'd: the probe
+  * is one virtual call inside the whole-stage span, the same pattern as
+  * BpeTokenCount's reference-object model. Null inputs (no metadata
+  * column, corrupt row) read as "not deleted" — a DV can only ever HIDE
+  * rows it names.
   */
 case class DvProbe(left: Expression, right: Expression,
-                   bitmaps: Broadcast[Map[String, Array[Byte]]])
+                   bitmaps: Broadcast[Map[String, Array[Byte]]],
+                   fileKey: String => String)
   extends BinaryExpression {
   override def dataType: DataType = BooleanType
   override def nullable: Boolean = false
@@ -319,16 +332,26 @@ case class DvProbe(left: Expression, right: Expression,
   @transient private lazy val cache =
     new java.util.concurrent.ConcurrentHashMap[String, DeletionVectors.Bitmap64]()
   @transient private lazy val empty = new DeletionVectors.Bitmap64()
+  /** (file path, its bitmap) of the previous row, one reference so a
+    * reader on another thread never sees a torn pair.
+    */
+  @transient @volatile private var last: (UTF8String, DeletionVectors.Bitmap64) = _
 
-  def deleted(fileKey: UTF8String, pos: Long): Boolean = {
-    val k = fileKey.toString
-    val bm = cache.computeIfAbsent(k, key =>
-      bitmaps.value.get(key)
-        .map(DeletionVectors.Bitmap64.deserialize)
-        .getOrElse(empty))
+  def deleted(filePath: UTF8String, pos: Long): Boolean = {
+    val prev = last
+    val bm =
+      if (prev != null && prev._1 == filePath) prev._2
+      else {
+        val b = cache.computeIfAbsent(fileKey(filePath.toString), key =>
+          bitmaps.value.get(key)
+            .map(DeletionVectors.Bitmap64.deserialize)
+            .getOrElse(empty))
+        // the row's string may point into a reused buffer: keep a copy
+        last = (filePath.clone(), b)
+        b
+      }
     bm.contains(pos)
   }
-
   override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
     val f = left.eval(input)
     val p = right.eval(input)

@@ -1019,7 +1019,7 @@ object DeltaLite {
         }
         val bc = spark.sparkContext.broadcast(bitmaps)
         base.filter(!DeletionVectors.dvDeleted(bc,
-          col("__graft_file"), col("__graft_idx")))
+          col("__graft_file"), col("__graft_idx"), identity))
       }
     val info = snap.files.map(p => (new Path(table, p).getName,
       snap.rowIds.get(p).map(r => java.lang.Long.valueOf(r._1)).orNull,
@@ -1241,7 +1241,7 @@ object DeltaLite {
   private[sources] def readSnapshot(spark: SparkSession, table: String,
                                     snap: Snapshot,
                                     files: Seq[String]): DataFrame = {
-    import org.apache.spark.sql.functions.{col, substring_index}
+    import org.apache.spark.sql.functions.col
     val logical = snap.schemaJson.map(j =>
       DataType.fromJson(j).asInstanceOf[StructType])
     val mapped = mappingMode(snap.configuration) != "none"
@@ -1318,8 +1318,8 @@ object DeltaLite {
         val base = spark.read.schema(readSchema.get)
           .parquet(paths(dvFiles): _*)
         val masked = base.filter(!DeletionVectors.dvDeleted(bc,
-          substring_index(col("_metadata.file_path"), "/", -1),
-          col("_metadata.row_index")))
+          col("_metadata.file_path"), col("_metadata.row_index"),
+          DeletionVectors.fileName))
         Some(masked.select(readSchema.get.fieldNames.toIndexedSeq
           .map(n => col(s"`$n`")): _*))
       }
@@ -2640,7 +2640,7 @@ object DeltaLite {
       else {
         val bc = spark.sparkContext.broadcast(existing)
         base.filter(!DeletionVectors.dvDeleted(bc, col("__dv_key"),
-          col("__dv_pos")))
+          col("__dv_pos"), identity))
       }
     val keySel = keys.select(keyCols.zip(physKeyCols).map { case (k, pk) =>
       keys(s"`$k`").as(pk) }.toIndexedSeq: _*).distinct()

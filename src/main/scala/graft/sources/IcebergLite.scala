@@ -645,140 +645,223 @@ object IcebergLite {
     readWithDeletes(spark, table, s, s.detail)
   }
 
-  /** Scan `subset` of a snapshot's data files with v2 row-level deletes
-    * applied (merge-on-read): POSITION deletes anti-join on (canonical
-    * full data-file path, `_metadata.row_index`) — the spec matches on
-    * `file_path`, and [[canonPath]] keeps identically-named files in
-    * different directories apart; applicable when dataSeq ≤ deleteSeq;
-    * EQUALITY deletes anti-join on the columns their `equality_ids`
-    * name — applicable strictly dataSeq < deleteSeq, so a row
-    * re-inserted after the delete survives it (the spec's ordering).
-    * Data files are grouped by sequence number (group count ∝ snapshot
-    * history, not data) so each group joins only the delete files that
-    * govern it. Cost ∝ data scanned + delete rows; the delete sides are
-    * small CDC-shaped files and broadcast under AQE.
+  /** Scan `subset` of a snapshot's data files with row-level deletes
+    * applied (merge-on-read). POSITION deletes — v2 position-delete files
+    * and v3 deletion vectors alike — fold into one row-index bitmap per
+    * data file ([[positionBitmaps]]) and apply through the broadcast
+    * [[DvProbe]] that Delta's DV reads use: no join, and the probe keys
+    * each file by its canonical full path (the spec matches on
+    * `file_path`; [[canonPath]] keeps identically-named files in
+    * different directories apart). EQUALITY deletes anti-join on the
+    * columns their `equality_ids` name, applicable strictly dataSeq <
+    * deleteSeq, so a row re-inserted after the delete survives it (the
+    * spec's ordering). Files split into read groups only where the plan
+    * must differ: by the schema era they were written under (rename
+    * alignment) and by the equality deletes that govern them; a table
+    * with neither reads in ONE scan per partition layout.
     */
   private def readWithDeletes(spark: SparkSession, table: String,
                               s: Snapshot, subset: Seq[FileInfo],
                               keepMeta: Boolean = false): DataFrame = {
-    import org.apache.spark.sql.functions.col
+    import org.apache.spark.sql.functions.{col, lit}
     // rename-era alignment applies when the table evolved through more
     // than one schema AND this snapshot resolved a known era
     val targetEra: Map[Int, String] =
       s.schemaId.flatMap(s.schemaHistory.get).getOrElse(Map.empty)
-    // (read-with schema, written→target renames) for one sequence group:
-    // a group written under a different era with the SAME field-id set
-    // reads under its WRITTEN names and relabels by id; anything else
-    // (same era, unknown era, add/drop between eras) reads by name.
-    def writeSchemaFor(seq: Long): (StructType, Map[String, String]) = {
-      val written = s.seqToSchemaId.get(seq)
-        .flatMap(s.schemaHistory.get).getOrElse(targetEra)
-      if (targetEra.isEmpty || written == targetEra ||
-          written.keySet != targetEra.keySet) (s.schema, Map.empty)
-      else {
-        val ren: Map[String, String] = targetEra.flatMap { case (id, tn) =>
-          written.get(id).filter(_ != tn).map(tn -> _)
-        }
-        (StructType(s.schema.fields.map(f =>
-          f.copy(name = ren.getOrElse(f.name, f.name)))), ren)
-      }
-    }
-    val needAlign = targetEra.nonEmpty &&
-      subset.map(_.seq).distinct.exists(sq => writeSchemaFor(sq)._2.nonEmpty)
-    if (s.deletes.isEmpty && !keepMeta && !needAlign)
+    val targetId: Map[String, Int] = targetEra.map(_.swap)
+    // the field-id → name map a file was written under, when it differs
+    // from the target era's (None: read the target schema by name)
+    def writtenEra(seq: Long): Option[Map[Int, String]] =
+      if (targetEra.isEmpty) None
+      else s.seqToSchemaId.get(seq).flatMap(s.schemaHistory.get)
+        .filter(_ != targetEra)
+    val eqDeletes = s.deletes.filter(_.content == 2)
+    val groups = subset.groupBy(fi =>
+      (writtenEra(fi.seq), eqDeletes.filter(_.seq > fi.seq)))
+      .toSeq.sortBy(_._2.map(_.seq).min)
+    if (!s.deletes.exists(_.content == 1) && !keepMeta &&
+        groups.forall(g => g._1 == ((None, Nil))))
       return readFileList(spark, table, s.schema, subset.map(_.path))
-    val dataCols = s.schema.fieldNames.toIndexedSeq.map(n => col(s"`$n`")) ++
-      (if (keepMeta) Seq(col("__if"), col("__ip")) else Nil)
-    val fieldNames: Map[Int, String] =
-      if (targetEra.nonEmpty) targetEra
-      else {
-        val meta = metadata(spark, table)
-        currentSchemaNode(meta, table).get("fields").elements().asScala
-          .map(f => f.get("id").asInt() -> f.get("name").asText()).toMap
-      }
     val tableAbs = canonTableRoot(spark, table)
-    // v3 deletion vectors, hoisted ABOVE the per-sequence-group loop:
-    // each Puffin blob is read + deserialized exactly ONCE for the whole
-    // snapshot and ONE broadcast carries every bitmap — a deep history
-    // (many sequence groups) must not pay G× the blob I/O or hold G
-    // near-identical broadcasts. Applicability (dvSeq >= dataSeq) folds
-    // in per referenced data file, which has exactly one sequence
-    // number, so the per-group filter below stays a pure probe.
-    val dvEntries = s.deletes.filter(d => d.content == 1 &&
-      d.contentOffset.isDefined)
-    val dvBc: Option[org.apache.spark.broadcast.Broadcast[Map[String, Array[Byte]]]] =
-      if (dvEntries.isEmpty) None
-      else {
-        val fsys = fs(spark, new Path(table))
-        val blobOnce: Map[(String, Long), DeletionVectors.Bitmap64] =
-          dvEntries.groupBy(d => (d.path, d.contentOffset.get)).map {
-            case ((p, off), ds) =>
-              (p, off) -> DeletionVectors.Bitmap64.deserialize(
-                Puffin.dvBitmap(Puffin.readBlob(fsys,
-                  new Path(resolvePath(table, p)), off,
-                  ds.head.contentSize.get)))
-          }
-        val fileSeq: Map[String, Long] = subset.map(fi =>
-          canonPath(tableAbs, resolvePath(table, fi.path)) -> fi.seq).toMap
-        val merged: Map[String, Array[Byte]] = dvEntries
-          .groupBy(d => canonPath(tableAbs,
-            resolvePath(table, d.refDataFile.get)))
-          .flatMap { case (ref, ds) =>
-            val applicable = fileSeq.get(ref).toSeq
-              .flatMap(sq => ds.filter(_.seq >= sq))
-            if (applicable.isEmpty) None
-            else Some(ref -> applicable
-              .map(d => blobOnce((d.path, d.contentOffset.get)))
-              .reduce(_.or(_)).serialize())
-          }
-        if (merged.isEmpty) None
-        else Some(spark.sparkContext.broadcast(merged))
+    val bitmaps = positionBitmaps(spark, table, s, subset, tableAbs)
+    val bc = if (bitmaps.isEmpty) None
+      else Some(spark.sparkContext.broadcast(
+        bitmaps.map { case (k, b) => k -> b.serialize() }))
+    val withMeta = keepMeta || bc.isDefined
+    val metaCols = if (withMeta) Seq(col("__if"), col("__ip")) else Nil
+    val dataCols = s.schema.fieldNames.toIndexedSeq.map(n => col(s"`$n`")) ++
+      (if (keepMeta) metaCols else Nil)
+    lazy val fieldNames: Map[Int, String] =
+      if (targetEra.nonEmpty) targetEra
+      else currentSchemaNode(metadata(spark, table), table).get("fields")
+        .elements().asScala
+        .map(f => f.get("id").asInt() -> f.get("name").asText()).toMap
+    val parts = groups.map { case ((era, eqs), files) =>
+      val paths = files.map(_.path)
+      val raw = era match {
+        case None => readFileList(spark, table, s.schema, paths, withMeta)
+        case Some(written) =>
+          // align by field id over the fields both eras share: read
+          // under the written name, relabel to the target's; a target
+          // field the written era lacks reads as NULL
+          def source(f: StructField): Option[String] =
+            targetId.get(f.name).fold(Option(f.name))(written.get)
+          val readSchema = StructType(s.schema.fields.flatMap(f =>
+            source(f).map(wn => f.copy(name = wn))))
+          readFileList(spark, table, readSchema, paths, withMeta)
+            .select(s.schema.fields.toIndexedSeq.map(f => source(f) match {
+              case Some(wn) => col(s"`$wn`").as(f.name)
+              case None     => lit(null).cast(f.dataType).as(f.name)
+            }) ++ metaCols: _*)
       }
-    val groups = subset.groupBy(_.seq).toSeq.sortBy(_._1)
-    val parts = groups.map { case (seq, files) =>
-      val (readSchema, renames) = writeSchemaFor(seq)
-      val raw = readFileList(spark, table, readSchema, files.map(_.path))
-        .withColumn("__if", canonCol(tableAbs, col("_metadata.file_path")))
-        .withColumn("__ip", col("_metadata.row_index"))
-      var df =
-        if (renames.isEmpty) raw
-        else raw.select(s.schema.fieldNames.toIndexedSeq.map(n =>
-          col(s"`${renames.getOrElse(n, n)}`").as(n)) :+
-          col("__if") :+ col("__ip"): _*)
-      val pos = s.deletes.filter(d => d.content == 1 && d.seq >= seq &&
-        d.contentOffset.isEmpty)
-      if (pos.nonEmpty) {
-        // the spec's position-delete columns, read without inference (a
-        // foreign file's optional `row` column is simply not read)
-        val posDf = spark.read.schema("file_path STRING, pos BIGINT")
-          .parquet(pos.map(d => resolvePath(table, d.path)): _*)
-          .select(canonCol(tableAbs, col("file_path")).as("__if"),
-            col("pos").as("__ip"))
-        df = df.join(posDf, Seq("__if", "__ip"), "left_anti")
+      val masked = bc match {
+        case Some(b) if files.exists(fi =>
+            bitmaps.contains(canonPath(tableAbs, fi.path))) =>
+          raw.filter(!DeletionVectors.dvDeleted(b, col("__if"), col("__ip"),
+            canonPath(tableAbs, _)))
+        case _ => raw
       }
-      // v3 deletion vectors: the shared snapshot-wide broadcast built
-      // above, applied as a codegen'd row-index probe — the same
-      // masking kernel Delta DVs use, no join at all. Rows probe by
-      // their own file path, so the shared map is group-safe; skip the
-      // filter entirely when no DV governs this group's sequence.
-      if (dvBc.isDefined && dvEntries.exists(_.seq >= seq))
-        df = df.filter(!DeletionVectors.dvDeleted(dvBc.get, col("__if"),
-          col("__ip")))
-      val eqGroups = s.deletes.filter(d => d.content == 2 && d.seq > seq)
-        .groupBy(_.equalityIds)
-      eqGroups.foreach { case (ids, dels) =>
-        val cols = ids.map(id => fieldNames.getOrElse(id,
-          sys.error(s"$table: equality_ids references unknown field $id")))
-        val eqDf = spark.read
-          .parquet(dels.map(d => resolvePath(table, d.path)): _*)
-          .select(cols.map(n => col(s"`$n`")): _*).distinct()
-        df = df.join(eqDf, cols, "left_anti")
-      }
-      df.select(dataCols: _*)
+      eqs.groupBy(_.equalityIds).toSeq.sortBy(_._1.mkString(","))
+        .foldLeft(masked) { case (df, (ids, dels)) =>
+          val cols = ids.map(id => fieldNames.getOrElse(id,
+            sys.error(s"$table: equality_ids references unknown field $id")))
+          val eqDf = spark.read
+            .parquet(dels.map(d => resolvePath(table, d.path)): _*)
+            .select(cols.map(n => col(s"`$n`")): _*).distinct()
+          df.join(eqDf, cols, "left_anti")
+        }.select(dataCols: _*)
     }
     parts.reduceOption(_.unionByName(_)).getOrElse(
       spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s.schema))
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        if (keepMeta) withMetaFields(s.schema) else s.schema))
+  }
+
+  /** A parquet file's row count and per-column null counts, from its
+    * footer alone. A column any of whose chunks lacks a null count is
+    * absent from the map.
+    */
+  private def footerCounts(conf: org.apache.hadoop.conf.Configuration,
+                           p: Path): (Long, Map[String, Long]) = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(p, conf))
+    try {
+      val blocks = reader.getFooter.getBlocks.asScala.toSeq
+      val nulls = blocks.flatMap(_.getColumns.asScala)
+        .groupBy(_.getPath.toDotString).flatMap { case (c, chunks) =>
+          val st = chunks.map(_.getStatistics)
+          if (st.forall(x => x != null && x.isNumNullsSet))
+            Some(c -> st.map(_.getNumNulls).sum)
+          else None
+        }
+      (blocks.map(_.getRowCount).sum, nulls)
+    } finally reader.close()
+  }
+
+  /** `schema` plus the two metadata columns merge-on-read scans carry:
+    * `__if` (the scan's `_metadata.file_path`) and `__ip` (the row's
+    * index in its file).
+    */
+  private def withMetaFields(schema: StructType): StructType =
+    schema.add("__if", StringType).add("__ip", LongType)
+
+  /** The live position deletes of `subset`, folded into one row-index
+    * bitmap per data file keyed by [[canonPath]]: v2 position-delete
+    * files, streamed on the driver by [[readPositionDeletes]] (no Spark
+    * job), and v3 deletion vectors, each blob read once. A delete applies
+    * to a file when the file's data sequence number is ≤ the delete's;
+    * rows naming files outside `subset` are skipped. Driver memory is the
+    * bitmaps alone, ∝ the live deleted positions of `subset` (roaring:
+    * about 2 bytes a position while sparse, at most 8 KiB per 65 536-row
+    * block), never the data or the delete files' size.
+    */
+  private def positionBitmaps(spark: SparkSession, table: String,
+                              s: Snapshot, subset: Seq[FileInfo],
+                              tableAbs: String)
+      : Map[String, DeletionVectors.Bitmap64] = {
+    val (dvs, posFiles) = s.deletes.filter(_.content == 1)
+      .partition(_.contentOffset.isDefined)
+    if (subset.isEmpty || (dvs.isEmpty && posFiles.isEmpty)) return Map.empty
+    val fileSeq: Map[String, Long] =
+      subset.map(fi => canonPath(tableAbs, fi.path) -> fi.seq).toMap
+    val out = scala.collection.mutable.HashMap.empty[String, DeletionVectors.Bitmap64]
+    val fsys = fs(spark, new Path(table))
+    posFiles.foreach { d =>
+      // delete files are sorted by file_path: canonicalize once a run
+      var lastRaw: String = null
+      var target: DeletionVectors.Bitmap64 = null
+      readPositionDeletes(fsys.getConf, new Path(resolvePath(table, d.path))) {
+        (raw, pos) =>
+          if (raw != lastRaw) {
+            lastRaw = raw
+            val c = canonPath(tableAbs, raw)
+            target =
+              if (fileSeq.get(c).exists(_ <= d.seq))
+                out.getOrElseUpdate(c, new DeletionVectors.Bitmap64())
+              else null
+          }
+          if (target != null) target.add(pos)
+      }
+    }
+    dvs.groupBy(d => (d.path, d.contentOffset.get)).foreach {
+      case ((p, off), ds) =>
+        val refs = ds.map(d => (canonPath(tableAbs, d.refDataFile.get), d.seq))
+          .collect { case (r, sq) if fileSeq.get(r).exists(_ <= sq) => r }
+          .distinct
+        if (refs.nonEmpty) {
+          val bm = DeletionVectors.Bitmap64.deserialize(Puffin.dvBitmap(
+            Puffin.readBlob(fsys, new Path(resolvePath(table, p)), off,
+              ds.head.contentSize.get)))
+          refs.foreach(r => out(r) = out.get(r).fold(bm)(_.or(bm)))
+        }
+    }
+    out.toMap
+  }
+
+  /** Stream one v2 position-delete file's `(file_path, pos)` rows on the
+    * driver: one footer open and a plain read of the two spec columns (a
+    * foreign file's optional `row` column is never read). A missing
+    * column or a null in either fails loudly — a delete that cannot be
+    * read must never silently un-delete a row.
+    */
+  private def readPositionDeletes(conf: org.apache.hadoop.conf.Configuration,
+                                  p: Path)(each: (String, Long) => Unit): Unit = {
+    import org.apache.parquet.column.impl.ColumnReadStoreImpl
+    import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.schema.MessageType
+    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(p, conf))
+    try {
+      val footer = reader.getFooter.getFileMetaData
+      val fileSchema = footer.getSchema
+      def field(n: String) = fileSchema.getType(fileSchema.getFieldIndex(n))
+      val proj = new MessageType(fileSchema.getName, field("file_path"),
+        field("pos"))
+      reader.setRequestedSchema(proj)
+      val pathDesc = proj.getColumnDescription(Array("file_path"))
+      val posDesc = proj.getColumnDescription(Array("pos"))
+      var pages = reader.readNextRowGroup()
+      while (pages != null) {
+        val store = new ColumnReadStoreImpl(pages,
+          new GroupRecordConverter(proj).getRootConverter, proj,
+          footer.getCreatedBy)
+        val paths = store.getColumnReader(pathDesc)
+        val poss = store.getColumnReader(posDesc)
+        var i = 0L
+        while (i < pages.getRowCount) {
+          require(
+            paths.getCurrentDefinitionLevel == pathDesc.getMaxDefinitionLevel &&
+              poss.getCurrentDefinitionLevel == posDesc.getMaxDefinitionLevel,
+            s"$p: null file_path/pos in a position-delete file — refusing")
+          each(paths.getBinary.toStringUsingUTF8, poss.getLong)
+          paths.consume()
+          poss.consume()
+          i += 1
+        }
+        pages = reader.readNextRowGroup()
+      }
+    } finally reader.close()
   }
 
   type SkippingScan = DataFiles.SkippingScan
@@ -987,12 +1070,26 @@ object IcebergLite {
     readWithDeletes(spark, table, s, s.detail.filter(fi => want(fi.path)))
   }
 
+  /** Scan `files` under `schema`, one scan per partition layout. With
+    * `withMeta` every layout's scan also carries `__if` and `__ip`
+    * ([[withMetaFields]]), attached inside the layout's own scan: above
+    * the union of layouts `_metadata` no longer resolves.
+    */
   private def readFileList(spark: SparkSession, table: String,
-                           schema: StructType, files: Seq[String]): DataFrame = {
+                           schema: StructType, files: Seq[String],
+                           withMeta: Boolean = false): DataFrame = {
+    import org.apache.spark.sql.functions.col
     val paths = files.map(p => resolvePath(table, p))
     if (paths.isEmpty)
       return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
+        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+        if (withMeta) withMetaFields(schema) else schema)
+    def addMeta(d: DataFrame): DataFrame =
+      if (!withMeta) d
+      else d.select(col("*"), col("_metadata.file_path").as("__if"),
+        col("_metadata.row_index").as("__ip"))
+    val out = schema.fieldNames.toIndexedSeq.map(n => col(s"`$n`")) ++
+      (if (withMeta) Seq(col("__if"), col("__ip")) else Nil)
     // partition-spec EVOLUTION leaves one snapshot spanning several
     // directory layouts (old files under id_bucket=N/, new under
     // grp_bucket=M/, or at the root) — one basePath discovery over the
@@ -1008,23 +1105,21 @@ object IcebergLite {
     }
     val groups = paths.groupBy(signature).toSeq.sortBy(_._1.mkString(","))
     val frames = groups.map { case (sig, ps) =>
-      if (sig.isEmpty) spark.read.schema(schema).parquet(ps: _*)
+      if (sig.isEmpty) addMeta(spark.read.schema(schema).parquet(ps: _*))
       else {
         // hive-layout group: partition columns live in the directory
         // names, not the data files — basePath discovery re-attaches
         // them (and gives Catalyst real PartitionFilters pruning).
         // Discovery infers partition value types, so re-cast drifted
         // columns to the committed schema and restore column order.
-        val raw = spark.read.option("basePath", table).parquet(ps: _*)
+        val raw = addMeta(spark.read.option("basePath", table).parquet(ps: _*))
         val typed = schema.fields.foldLeft(raw) { (d, fld) =>
           if (d.schema.fieldNames.contains(fld.name) &&
               d.schema(fld.name).dataType != fld.dataType)
-            d.withColumn(fld.name, org.apache.spark.sql.functions
-              .col(fld.name).cast(fld.dataType))
+            d.withColumn(fld.name, col(s"`${fld.name}`").cast(fld.dataType))
           else d
         }
-        typed.select(schema.fieldNames
-          .map(org.apache.spark.sql.functions.col).toIndexedSeq: _*)
+        typed.select(out: _*)
       }
     }
     frames.reduce(_.unionByName(_))
@@ -1225,12 +1320,14 @@ object IcebergLite {
     * `parentList` carried with their content kind, sequence number AND
     * spec id (a carried DELETE manifest must not be re-listed as data,
     * and a carried manifest keeps the spec its files were written
-    * under), then `added`.
+    * under), except the manifests `dropped` names, then `added`.
     */
   private def writeManifestList(f: FileSystem, table: String, listRel: String,
                                 snapId: Long, parentList: Option[String],
-                                added: ListEntry, formatVersion: Int): Unit = {
-    val rows = (parentList.toSeq.flatMap(listEntries(f, table, _)) :+ added)
+                                added: ListEntry, formatVersion: Int,
+                                dropped: Set[String] = Set.empty): Unit = {
+    val rows = (parentList.toSeq.flatMap(listEntries(f, table, _))
+      .filterNot(e => dropped(e.path)) :+ added)
       .map(e => record(ManifestListSchemaV2)(
         "manifest_path" -> e.path, "manifest_length" -> e.length,
         "partition_spec_id" -> e.specId, "content" -> e.content,
@@ -2021,12 +2118,15 @@ object IcebergLite {
     * a new manifest list and metadata version.
     *
     *  - `equality = false` (default): POSITION deletes. Matching rows
-    *    are located in one distributed pass (existing deletes applied
-    *    first — already-dead rows are neither re-marked nor re-counted),
-    *    their (file_path, pos) pairs collected BOUNDED by
-    *    `maxDeleteRows` (refused past it — bulk erasure should rewrite
-    *    files via selectiveMerge/compaction) and written sorted, the
-    *    spec's ordering for efficient merge-on-read.
+    *    are located and written in ONE distributed execution (existing
+    *    deletes applied first — already-dead rows are neither re-marked
+    *    nor re-counted): their (file_path, pos) pairs, sorted (the
+    *    spec's ordering for efficient merge-on-read) and limited to
+    *    `maxDeleteRows` + 1, land in the staged delete file, whose
+    *    footer then gives the victim count and the unmapped-path check.
+    *    Past `maxDeleteRows` the staged file is removed and the delete
+    *    refused — bulk erasure should rewrite files via
+    *    selectiveMerge/compaction.
     *  - `equality = true`: EQUALITY deletes. The distinct key rows
     *    themselves are the delete file (columns = `keyCols`, declared
     *    via `equality_ids` field ids); no data scan is needed to WRITE
@@ -2043,7 +2143,7 @@ object IcebergLite {
   def deleteRows(spark: SparkSession, table: String, keys: DataFrame,
                  keyCols: Seq[String], equality: Boolean = false,
                  maxDeleteRows: Int = 16 << 20): DeleteStats = {
-    import org.apache.spark.sql.functions.{broadcast, col, count, lit, when}
+    import org.apache.spark.sql.functions.{broadcast, col}
     val root = new Path(table)
     val f = fs(spark, root)
     val meta = metadata(spark, table)
@@ -2064,56 +2164,63 @@ object IcebergLite {
         "carrying deletion vectors — use deleteRowsV3")
 
     val keySel = keys.select(keyCols.map(k => keys(s"`$k`")).toIndexedSeq: _*)
-      .distinct()
-    // build the delete-file rows; delFileRows is the delete FILE's own
-    // row count (what the manifest's record_count must carry — for
-    // equality deletes that is the distinct-key count, NOT the number of
+    // the delete file, staged; for position deletes the victim count and
+    // the unmapped check read its footer, so the victim plan runs ONCE
+    val staging = new Path(root, s".staging-del-s$snapId")
+    def stage(rows: DataFrame): Option[Path] = {
+      rows.coalesce(1).write.mode("overwrite").parquet(staging.toString)
+      f.listStatus(staging).map(_.getPath).find(p =>
+        p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
+    }
+    // nRows: the data rows erased; delFileRows: the delete FILE's own row
+    // count (what the manifest's record_count must carry — for equality
+    // deletes that is the distinct-key count, NOT the number of
     // currently-matched data rows)
-    val (deleteRowsDf, nRows, eqIds, delFileRows): (DataFrame, Long, Seq[Int], Long) =
+    val (part, nRows, eqIds, delFileRows): (Path, Long, Seq[Int], Long) =
       if (!equality) {
-        // victims stay DISTRIBUTED (r17): the old path collected every
-        // (file, pos) pair to the driver, sorted there, and re-shipped —
-        // driver wall and GC ∝ deleted rows, the superlinear piece of
-        // the decade lifecycle queries. Now the semi join's output maps
-        // file names through a broadcast (metadata-sized) relation and
-        // lands sorted in the single delete-file partition on an
-        // executor; the one eager checkpoint is victim-sized and runs
-        // the scan+join exactly once for the count + the write.
+        // victims stay DISTRIBUTED: the semi join's output maps scan
+        // paths to manifest paths through a broadcast (metadata-sized)
+        // relation and lands sorted in the single delete-file partition
+        // on an executor. The limit bounds the write — a no-op below the
+        // cap — so an over-limit bulk delete is refused having written at
+        // most maxDeleteRows + 1 rows, and the staged file is removed.
         val scan = readWithDeletes(spark, table, snap, snap.detail,
           keepMeta = true)
         val tableAbs = canonTableRoot(spark, table)
         import spark.implicits._
         // one row per canonical path: duplicate manifest entries for the
         // same file (same canon key) must not fan the broadcast join out —
-        // each would duplicate its victim rows, inflating nVictims and
-        // emitting duplicate delete entries where the old driver-side Map
-        // collapsed them. Identical (canon, path) pairs collapse silently;
-        // two DIFFERENT manifest paths canonicalizing to one key is a
+        // each would duplicate its victim rows and emit duplicate delete
+        // entries. Identical (canon, path) pairs collapse silently; two
+        // DIFFERENT manifest paths canonicalizing to one key is a
         // corrupt-metadata state and fails loudly (matching the unmapped-
-        // victim require below).
+        // victim check below).
         val n2p = snap.detail.map(fi =>
-          canonPath(tableAbs, resolvePath(table, fi.path)) -> fi.path).distinct
+          canonPath(tableAbs, fi.path) -> fi.path).distinct
         require(n2p.map(_._1).distinct.size == n2p.size,
           s"$table: multiple manifest data-file paths canonicalize to one " +
             "scan path — refusing to write a delete file against " +
             "ambiguous file identities")
         val nameToPath = n2p.toDF("__if", "file_path")
-        // LEFT join: an __if canonicalization mismatch must fail loudly
-        // (the old driver-side Map lookup threw NoSuchElementException; an
+        // a semi join marks each matching row once, so the key side needs
+        // no distinct. LEFT join to the manifest paths: a canonicalization
+        // mismatch leaves file_path NULL and fails loudly below — an
         // inner join would silently DROP the victim and leave the row
-        // alive). The limit bounds the eager checkpoint — it is a no-op
-        // below the cap, and an over-limit bulk delete is refused without
-        // first materializing an unbounded victim set (the old
-        // limit(maxDeleteRows+1).collect() economics, kept distributed).
+        // alive. The position-delete spec requires (file_path, pos) order.
         val victims = scan.join(broadcast(keySel), keyCols, "left_semi")
+          .select(canonCol(tableAbs, col("__if")).as("__if"), col("__ip"))
           .join(broadcast(nameToPath), Seq("__if"), "left")
           .select(col("file_path"), col("__ip").as("pos"))
           .limit(maxDeleteRows + 1)
-          .localCheckpoint(true)
-        val vStats = victims.agg(
-          count(lit(1)).as("n"),
-          count(when(col("file_path").isNull, lit(1))).as("unmapped")).head()
-        val (nVictims, nUnmapped) = (vStats.getLong(0), vStats.getLong(1))
+          .sortWithinPartitions("file_path", "pos")
+        val staged = stage(victims)
+        val (nVictims, nUnmapped) = staged.map(footerCounts(f.getConf, _))
+          .map { case (n, nulls) => (n, nulls.getOrElse("file_path",
+            if (n == 0) 0L
+            else sys.error(s"$staging: no null count for file_path"))) }
+          .getOrElse((0L, 0L))
+        if (nUnmapped > 0 || nVictims > maxDeleteRows || nVictims == 0)
+          f.delete(staging, true)
         require(nUnmapped == 0L,
           s"$table: $nUnmapped victim rows matched no manifest data-file " +
             "path after canonicalization — refusing to write a delete " +
@@ -2122,23 +2229,18 @@ object IcebergLite {
           s"$table: delete batch exceeds $maxDeleteRows rows — rewrite " +
             "files (selectiveMerge / compaction) for bulk erasure")
         if (nVictims == 0) return DeleteStats(snap.snapshotId, 0, 0L)
-        // the position-delete spec requires (file_path, pos) order; sort
-        // inside the one output partition, executor-side
-        (victims.repartition(1).sortWithinPartitions("file_path", "pos"),
-          nVictims, Seq.empty, nVictims)
+        (staged.get, nVictims, Seq.empty, nVictims)
       } else {
         val ids = keyCols.map(k => topField(meta, table, k)._2)
+        val distinctKeys = keySel.distinct()
         val matched = readWithDeletes(spark, table, snap, snap.detail)
-          .join(broadcast(keySel), keyCols, "left_semi").count()
-        (keySel, matched, ids, keySel.count())
+          .join(broadcast(distinctKeys), keyCols, "left_semi").count()
+        val staged = stage(distinctKeys).getOrElse(
+          sys.error("delete-file write produced no part file"))
+        (staged, matched, ids, footerCounts(f.getConf, staged)._1)
       }
 
-    // 1. the delete file (parquet, spec-allowed), via stage-and-rename
-    val staging = new Path(root, s".staging-del-s$snapId")
-    deleteRowsDf.coalesce(1).write.mode("overwrite").parquet(staging.toString)
-    val part = f.listStatus(staging).map(_.getPath)
-      .find(p => p.getName.startsWith("part-") && p.getName.endsWith(".parquet"))
-      .getOrElse(sys.error("delete-file write produced no part file"))
+    // 1. the delete file (parquet, spec-allowed), renamed into place
     val delRel = f"data/delete-$snapId%05d-0.parquet"
     f.mkdirs(dataDir(table))
     require(f.rename(part, new Path(root, delRel)), "delete-file rename failed")
@@ -2184,7 +2286,10 @@ object IcebergLite {
     * content_size_in_bytes), and the table's metadata moves to
     * format-version 3. A file that already carries a DV gets old ∪ new
     * (the spec's writers-must-merge rule — the reader's OR across
-    * superseded blobs is then idempotent). Scale shape identical to the
+    * superseded blobs is then idempotent). v3 position deletes must be
+    * DVs, so on a table still listing v2 position-delete files every
+    * file they govern gets a DV holding their live positions too, and
+    * their manifests leave the new snapshot. Scale shape identical to the
     * Delta twin: one distributed victim scan with the key set
     * broadcast, bitmaps built driver-side bounded by `maxDeleteRows`,
     * kilobytes of blob written — data files never rewritten.
@@ -2203,7 +2308,6 @@ object IcebergLite {
     if (snap.detail.isEmpty) return DeleteStats(snap.snapshotId, 0, 0L)
 
     val keySel = keys.select(keyCols.map(k => keys(s"`$k`")).toIndexedSeq: _*)
-      .distinct()
     val scan = readWithDeletes(spark, table, snap, snap.detail,
       keepMeta = true)
     val victims = scan.join(broadcast(keySel), keyCols, "left_semi")
@@ -2214,24 +2318,26 @@ object IcebergLite {
     if (victims.isEmpty) return DeleteStats(snap.snapshotId, 0, 0L)
     val tableAbs = canonTableRoot(spark, table)
     val nameToPath = snap.detail.map(fi =>
-      canonPath(tableAbs, resolvePath(table, fi.path)) -> fi.path).toMap
-    // per-file victim indices; merge in any EXISTING DV on the same file
-    val byFile: Seq[(String, Seq[Long])] = victims
-      .map(r => nameToPath(r.getString(0)) -> r.getLong(1))
-      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toSeq.sortBy(_._1)
-    val existingDv: Map[String, DeletionVectors.Bitmap64] = snap.deletes
-      .filter(d => d.content == 1 && d.contentOffset.isDefined)
-      .flatMap(d => nameToPath.get(canonPath(tableAbs,
-        resolvePath(table, d.refDataFile.get))).map(_ ->
-        DeletionVectors.Bitmap64.deserialize(Puffin.dvBitmap(
-          Puffin.readBlob(f, new Path(resolvePath(table, d.path)),
-            d.contentOffset.get, d.contentSize.get)))))
-      .groupBy(_._1).view.mapValues(_.map(_._2).reduce(_.or(_))).toMap
-    val bitmaps: Seq[(String, DeletionVectors.Bitmap64)] =
-      byFile.map { case (p, poss) =>
-        val fresh = DeletionVectors.Bitmap64(poss)
-        p -> existingDv.get(p).map(_.or(fresh)).getOrElse(fresh)
-      }
+      canonPath(tableAbs, fi.path) -> fi.path).toMap
+    // per-file victim indices
+    val byFile: Map[String, Seq[Long]] = victims
+      .map(r => nameToPath(canonPath(tableAbs, r.getString(0))) -> r.getLong(1))
+      .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
+    // the positions already live on each file — earlier DVs and the v2
+    // position-delete files — merge into the new DV (writers-must-merge).
+    // v3 position deletes must be DVs, so a table still listing v2
+    // position-delete files folds them all in here: every file they
+    // govern gets a DV and their manifests leave the new snapshot.
+    val live = positionBitmaps(spark, table, snap, snap.detail, tableAbs)
+      .map { case (c, bm) => nameToPath(c) -> bm }
+    val v2Manifests = positionDeleteManifests(f, table, meta, snap)
+    val targets = (byFile.keySet ++
+      (if (v2Manifests.isEmpty) Set.empty[String] else live.keySet))
+      .toSeq.sorted
+    val bitmaps: Seq[(String, DeletionVectors.Bitmap64)] = targets.map { p =>
+      val fresh = DeletionVectors.Bitmap64(byFile.getOrElse(p, Nil))
+      p -> live.get(p).map(_.or(fresh)).getOrElse(fresh)
+    }
 
     // 1. ONE Puffin file, one deletion-vector-v1 blob per data file
     val puffinRel = f"data/dv-$snapId%05d.puffin"
@@ -2267,8 +2373,35 @@ object IcebergLite {
 
     // format-version 3: the DV entries are only legal there
     commitDeletes(spark, table, meta, metaV, snapId, manifestRel, manifestLen,
-      formatVersion = 3, "added-dvs" -> bitmaps.size.toString)
+      formatVersion = 3, "added-dvs" -> bitmaps.size.toString, v2Manifests)
     DeleteStats(snapId, bitmaps.size, victims.length.toLong)
+  }
+
+  /** The current manifest list's delete manifests that list v2
+    * position-delete files. A manifest that mixes them with deletion
+    * vectors or equality deletes is refused: dropping it would drop
+    * those too.
+    */
+  private def positionDeleteManifests(f: FileSystem, table: String,
+                                      meta: JsonNode,
+                                      snap: Snapshot): Set[String] = {
+    if (!snap.deletes.exists(d => d.content == 1 && d.contentOffset.isEmpty))
+      return Set.empty
+    val list = snapshotsOf(meta)
+      .find(_.get("snapshot-id").asLong() == snap.snapshotId)
+      .map(_.get("manifest-list").asText())
+      .getOrElse(sys.error(s"$table: current snapshot has no manifest list"))
+    listEntries(f, table, list).filter(_.content == 1).map(_.path).filter { mp =>
+      val kinds = readAvro(f, new Path(resolvePath(table, mp)))
+        .filter(_.get("status").asInstanceOf[Int] != 2).map { e =>
+          val df = e.get("data_file").asInstanceOf[GenericRecord]
+          opt(df, "content").contains(Int.box(1)) &&
+            opt(df, "content_offset").isEmpty
+        }.distinct
+      require(kinds.size <= 1, s"$table: delete manifest $mp mixes v2 " +
+        "position deletes with other delete kinds — refusing to fold it")
+      kinds == Seq(true)
+    }.toSet
   }
 
   /** Publish a row-level DELETE snapshot on main as metadata version
@@ -2281,7 +2414,8 @@ object IcebergLite {
                             meta: JsonNode, metaV: Int, snapId: Long,
                             manifestRel: String, manifestLen: Long,
                             formatVersion: Int,
-                            added: (String, String)): Unit = {
+                            added: (String, String),
+                            dropped: Set[String] = Set.empty): Unit = {
     val cur = meta.get("current-snapshot-id").asLong()
     val curList = snapshotsOf(meta).find(_.get("snapshot-id").asLong() == cur)
       .map(_.get("manifest-list").asText())
@@ -2289,7 +2423,7 @@ object IcebergLite {
     val listRel = f"metadata/snap-$snapId%05d.avro"
     writeManifestList(fs(spark, new Path(table)), table, listRel, snapId,
       Some(curList), ListEntry(manifestRel, manifestLen, 1, snapId, 0),
-      formatVersion)
+      formatVersion, dropped)
     val newMeta = meta.deepCopy[ObjectNode]()
     ratchetFormat(newMeta, Some(meta), formatVersion)
     appendSnapshot(newMeta, snapId, Some(cur), Seq("operation" -> "delete", added),
@@ -2304,7 +2438,8 @@ object IcebergLite {
 
   /** REORG / PURGE on the Iceberg side — materialize row-level deletes
     * into plain parquet by rewriting ONLY the GOVERNED data files:
-    * those referenced by a position delete file, plus those whose data
+    * those a live position delete (v2 file or v3 DV) masks rows of,
+    * plus those whose data
     * sequence number any equality delete's strict ordering covers.
     * Untouched files survive byte-identical through their old
     * manifests. The carried delete manifests then apply to NOTHING
@@ -2316,35 +2451,18 @@ object IcebergLite {
     * pay a full compaction.
     */
   def purgeDeletes(spark: SparkSession, table: String): PurgeStats = {
-    import org.apache.spark.sql.functions.col
     val snap = snapshot(spark, table)
     if (snap.deletes.isEmpty)
       return PurgeStats(snap.snapshotId, 0, snap.detail.size)
     val eqMaxSeq = snap.deletes.filter(_.content == 2).map(_.seq)
       .maxOption.getOrElse(Long.MinValue)
-    // v3 DV entries are NOT parquet (their path is the shared Puffin
-    // file) — their governed files come from referenced_data_file, the
-    // positional parquet read must exclude them
-    val posFiles = snap.deletes.filter(d => d.content == 1 &&
-      d.contentOffset.isEmpty)
-    // full canonical paths a position delete references: metadata-scale
-    // collect (delete files are CDC-sized by deleteRows' own bound)
+    // files a live position delete governs: v2 position-delete files and
+    // v3 DVs alike, from the per-file bitmaps (metadata-scale driver work)
     val tableAbs = canonTableRoot(spark, table)
-    val posPaths: Set[String] =
-      if (posFiles.isEmpty) Set.empty
-      else spark.read
-        .parquet(posFiles.map(d => resolvePath(table, d.path)): _*)
-        .select(canonCol(tableAbs, col("file_path")).as("p"))
-        .distinct().collect().map(_.getString(0)).toSet
-    val dvPaths: Set[String] = snap.deletes
-      .filter(d => d.content == 1 && d.contentOffset.isDefined)
-      .flatMap(_.refDataFile)
-      .map(p => canonPath(tableAbs, resolvePath(table, p))).toSet
-    val (touched, untouched) = snap.detail.partition { fi =>
-      val canon = canonPath(tableAbs, resolvePath(table, fi.path))
-      fi.seq < eqMaxSeq || posPaths.contains(canon) ||
-        dvPaths.contains(canon)
-    }
+    val governed = positionBitmaps(spark, table, snap, snap.detail, tableAbs)
+      .keySet
+    val (touched, untouched) = snap.detail.partition(fi =>
+      fi.seq < eqMaxSeq || governed(canonPath(tableAbs, fi.path)))
     if (touched.isEmpty)
       return PurgeStats(snap.snapshotId, 0, untouched.size)
     val rewritten = readWithDeletes(spark, table, snap, touched)

@@ -111,7 +111,9 @@ class IcebergSpecEvolutionSpec extends SparkSpec {
     val afterDelete = before + ("m-00002-del.avro" -> 0)
     assert(listedSpecs(t) == afterDelete)
     IcebergLite.deleteRowsV3(spark, t, Seq(44L).toDF("id"), Seq("id"))
-    assert(listedSpecs(t) == afterDelete + ("m-00003-dv.avro" -> 0))
+    // the v3 delete folds the v2 position deletes into its DVs, so their
+    // manifest leaves the list; the carried data manifests keep their ids
+    assert(listedSpecs(t) == before + ("m-00003-dv.avro" -> 0))
     assert(IcebergLite.read(spark, t).count() == 58L)
   }
 

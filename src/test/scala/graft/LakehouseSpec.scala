@@ -138,6 +138,55 @@ class LakehouseSpec extends SparkSpec {
       s"histogram p50 $a50 off exact median $exactP50 by more than a bin")
   }
 
+  test("tableStats: exact min/max/nulls/NDV per column equal single-" +
+    "column SQL over nulls, duplicates, signed zeros, NaN, string, date " +
+    "and decimal columns and an empty frame, with no Expand in the plan") {
+    import java.sql.Date
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.execution.ExpandExec
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.types._
+    object Plans extends AdaptiveSparkPlanHelper
+    val schema = new StructType().add("d", DoubleType).add("i", IntegerType)
+      .add("s", StringType).add("num", StringType).add("dt", DateType)
+      .add("dec", DecimalType(10, 2))
+    def date(x: String) = Date.valueOf(x)
+    def dec(x: String) = new java.math.BigDecimal(x)
+    val rows = Seq(
+      Row(0.0, 1, "a", "10", date("2024-01-01"), dec("1.50")),
+      Row(-0.0, 1, "b", "2.5", null, dec("1.50")),
+      Row(Double.NaN, null, "a", "-1", date("2024-01-01"), null),
+      Row(null, 3, null, "10", date("1999-12-31"), dec("-2.25")),
+      Row(2.5, 3, "zz", null, date("2024-02-29"), dec("7.00")),
+      Row(Double.NaN, 7, "a", "2.5", null, dec("-2.25")),
+      Row(2.5, null, null, null, null, null),
+      Row(-3.0, 1, "b", "10", date("1999-12-31"), dec("0.00")))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows, 3),
+      schema)
+    val cols = schema.fieldNames.toSeq
+    // a DATE or a non-numeric string casts to DOUBLE only outside ANSI
+    withConf("spark.sql.ansi.enabled" -> "false") {
+      for (frame <- Seq(df, df.limit(0))) {
+        frame.createOrReplaceTempView("table_stats_src")
+        val want = cols.map(c => spark.sql(
+          s"""SELECT '$c' AS column_name, CAST(MIN($c) AS DOUBLE) AS min_val,
+             |  CAST(MAX($c) AS DOUBLE) AS max_val,
+             |  COUNT(*) - COUNT($c) AS n_nulls, COUNT(DISTINCT $c) AS ndv
+             |FROM table_stats_src""".stripMargin).head())
+        val stats = LakehouseOps.tableStats(frame, cols)
+        val got = stats.collect().toSeq
+        assert(got == want, s"\n got  $got\n want $want")
+        assert(Plans.find(stats.queryExecution.executedPlan)(
+          _.isInstanceOf[ExpandExec]).isEmpty, "tableStats must not Expand")
+      }
+      // NaN and the signed zeros: NaN is one distinct value and the
+      // largest, 0.0 and -0.0 one value
+      val d = LakehouseOps.tableStats(df, Seq("d")).head()
+      assert(d.getDouble(1) == -3.0 && d.getDouble(2).isNaN &&
+        d.getLong(3) == 1L && d.getLong(4) == 4L, s"$d")
+    }
+  }
+
   test("portable HLL: estimate within ±12% across cardinality decades; " +
     "histogram p50 within one bin of the exact median (property sweep)") {
     // the r18 estimator's contract, pinned as a property over synthetic

@@ -25,7 +25,12 @@ won (ties count for neither side) and a verdict:
 - `same`: neither, within the bound.
 
 It also lists every run with its CPU steal share from the run's detail
-file, since runs that drew steal are slower for reasons outside the code.
+file, since runs that drew steal are slower for reasons outside the code,
+and a per-op table: each run's op samples, read from the same file and
+matched across runs by op name and occurrence (the k-th time a run ran
+that op; `lake` runs one fixed sequence, `analytics` shuffles its panel
+by seed), give each op's parent and change medians, so a report shows
+which ops a saving or a loss came from.
 """
 import argparse
 import json
@@ -74,13 +79,45 @@ def run_once(checkout, workload, seed, seconds):
     out = json.loads(lines[-1])
     detail = os.path.join(checkout, ".perfbench", "results",
                           f"{workload}-s{seed}-t0.detail.json")
-    steal = None
+    steal, ops = None, []
     if os.path.exists(detail):
         with open(detail) as f:
-            steal = json.load(f).get("host", {}).get("steal_share")
+            d = json.load(f)
+        steal = d.get("host", {}).get("steal_share")
+        ops = [[s["op"], s["s"], s["ok"]] for s in d.get("samples", [])]
     return {"ok": True, "correct": out["correct"], "failed": out["failed"],
             "attempted": out["attempted"], "steal_share": steal,
-            "metrics": {k: v["value"] for k, v in out["metrics"].items()}}
+            "metrics": {k: v["value"] for k, v in out["metrics"].items()},
+            "ops": ops}
+
+
+def per_op(pairs):
+    """Per (op, occurrence): the runs that timed it on each side and the
+    two medians, in the order the first run met them."""
+    vals, order = {}, []
+    for p in pairs:
+        for side in ("parent", "change"):
+            if not p[side]["ok"]:
+                continue
+            seen = {}
+            for name, secs, ok in p[side].get("ops", []):
+                seen[name] = seen.get(name, 0) + 1
+                key = (name, seen[name])
+                if key not in vals:
+                    vals[key] = {"parent": [], "change": []}
+                    order.append(key)
+                if ok:
+                    vals[key][side].append(secs)
+    rows = []
+    for name, k in order:
+        v = vals[(name, k)]
+        if v["parent"] and v["change"]:
+            rows.append({"op": name, "occurrence": k,
+                         "parent_n": len(v["parent"]),
+                         "parent_median": statistics.median(v["parent"]),
+                         "change_n": len(v["change"]),
+                         "change_median": statistics.median(v["change"])})
+    return rows
 
 
 def quartiles(xs):
@@ -168,6 +205,16 @@ def main():
               f"{v['parent_iqr']:>8.3f} {v['change_median']:>9.3f} "
               f"[{v['change_q1']:.3f}, {v['change_q3']:.3f}] "
               f"{v['change_wins']:>3}/{v['pairs']:<2}  {v['verdict']}")
+    ops = per_op(pairs)
+    if ops:
+        print("per op, #k = the op's k-th run in a run (median seconds; "
+              "n = runs that timed it, parent/change):")
+        print(f"  {'op':<32} {'parent':>8} {'change':>8} {'delta':>8}  n")
+        for o in ops:
+            pm, cm = o["parent_median"], o["change_median"]
+            print(f"  {o['op'] + '#' + str(o['occurrence']):<32} {pm:>8.3f} "
+                  f"{cm:>8.3f} {(cm - pm) / pm * 100 if pm else 0.0:>+7.1f}%  "
+                  f"{o['parent_n']}/{o['change_n']}")
     print("runs (pair, seed, side, steal share, correct, failed/attempted):")
     for i, p in enumerate(pairs):
         for side in (p["first"], "change" if p["first"] == "parent" else "parent"):
@@ -181,7 +228,8 @@ def main():
     if a.out:
         with open(a.out, "w") as f:
             json.dump({"workload": a.workload, "parent": parent,
-                       "pairs": pairs, "verdicts": verdicts}, f, indent=1)
+                       "pairs": pairs, "verdicts": verdicts, "per_op": ops},
+                      f, indent=1)
     ok = all(p[s]["ok"] and p[s]["correct"] for p in pairs
              for s in ("parent", "change"))
     return 0 if ok else 1
