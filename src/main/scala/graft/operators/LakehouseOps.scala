@@ -114,13 +114,19 @@ object LakehouseOps {
     // scan + distinct, so the double consumption is NOT worth a
     // checkpoint here (measured: materializing the full-width winner set
     // cost more at the decade rung than the pruned rescan it saved).
-    val srcLatest =
-      if (skewSafe) latestPerKeyAgg(source, keys, tiebreak)
-      else latestPerKey(source, keys, tiebreak)
+    val srcLatest = winners(source, keys, tiebreak, skewSafe)
     target.select(source.columns.map(col).toIndexedSeq: _*)
       .join(srcLatest, keys, "left_anti")
       .unionByName(srcLatest)
   }
+
+  /** The one winner per source key every merge shape uses: the
+    * [[latestPerKey]] window, or its skew-safe aggregation.
+    */
+  private def winners(source: DataFrame, keys: Seq[String],
+                      tiebreak: Seq[Column], skewSafe: Boolean): DataFrame =
+    if (skewSafe) latestPerKeyAgg(source, keys, tiebreak)
+    else latestPerKey(source, keys, tiebreak)
 
   /** The MERGE both table formats' `selectiveMerge` run over the files
     * they rewrite: `clauses` go through [[mergeClauses]], otherwise the
@@ -128,17 +134,31 @@ object LakehouseOps {
     * lacks join the schema additively (untouched files read them as null
     * — the drift shape API-ingest merges hit daily). Clause merges name
     * explicit columns, so they refuse schema evolution.
+    *
+    * `unmatched`, given for a source held on the driver, is true on the
+    * target rows no source key replaces: the plain upsert then keeps
+    * those rows by that predicate on the target scan instead of an
+    * anti-join, and takes the winners from `source` in place. With
+    * `source` in one partition neither side has an exchange, so the
+    * union and its write run as one job.
     */
   def merge(target: DataFrame, source: DataFrame, keys: Seq[String],
             clauses: Seq[MergeClause], skewSafe: Boolean,
-            schemaEvolution: Boolean): DataFrame = {
+            schemaEvolution: Boolean,
+            unmatched: Option[Column] = None): DataFrame = {
     require(!schemaEvolution || clauses.isEmpty,
       "schemaEvolution composes with the plain upsert only " +
         "(clause merges name explicit columns — align the source first)")
     if (clauses.nonEmpty)
       mergeClauses(target, source, keys, clauses, skewSafe = skewSafe)
-    else mergeUpsert(target, source, keys, skewSafe = skewSafe,
-      autoAlign = schemaEvolution)
+    else unmatched match {
+      case Some(keep) if !schemaEvolution =>
+        target.filter(keep)
+          .select(source.columns.map(col).toIndexedSeq: _*)
+          .unionByName(winners(source, keys, Seq.empty, skewSafe))
+      case _ => mergeUpsert(target, source, keys, skewSafe = skewSafe,
+        autoAlign = schemaEvolution)
+    }
   }
 
   // ---------------------------------------------------------------- B2c lib
@@ -163,9 +183,7 @@ object LakehouseOps {
     require(keys.forall(target.columns.contains) &&
       keys.forall(source.columns.contains),
       s"merge keys ${keys.mkString(",")} must exist on both sides")
-    val srcLatest =
-      if (skewSafe) latestPerKeyAgg(source, keys, tiebreak)
-      else latestPerKey(source, keys, tiebreak)
+    val srcLatest = winners(source, keys, tiebreak, skewSafe)
     val t = target.withColumn("__t", lit(1)).alias("t")
     val s = srcLatest.withColumn("__s", lit(1)).alias("s")
     // SQL equality on the keys: null keys never match (they classify as
@@ -306,9 +324,7 @@ object LakehouseOps {
       s"merge keys ${keys.mkString(",")} must exist on both sides")
     val dest = StructType(target.schema.fields ++
       source.schema.fields.filterNot(f => target.columns.contains(f.name)))
-    val srcLatest =
-      if (skewSafe) latestPerKeyAgg(source, keys, tiebreak)
-      else latestPerKey(source, keys, tiebreak)
+    val srcLatest = winners(source, keys, tiebreak, skewSafe)
     val alignedT = alignToSchema(target, dest)
     val alignedS = alignToSchema(srcLatest, dest)
     val tOnly = target.columns.filterNot(source.columns.contains).toIndexedSeq

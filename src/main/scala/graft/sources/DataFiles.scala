@@ -6,7 +6,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types._
 
@@ -267,6 +267,113 @@ object DataFiles {
   /** The distinct batch keys as partition-value strings. */
   private[graft] def keyStrings(keys: Array[Row]): Set[String] =
     keys.map(r => String.valueOf(r.get(0))).toSet
+
+  // ------------------------------------------------------- merge source
+
+  /** Row bound for holding a MERGE or key-DELETE source on the driver
+    * ([[keySource]]). Sized for driver heap, not for the key bound: 65 536
+    * rows of a CDC batch are a few MB, where [[DefaultMaxPruneKeys]] keys
+    * of one column are tens of MB.
+    */
+  private[graft] val LocalSourceRows: Int = 1 << 16
+
+  /** Key types whose set membership is exactly join equality. Floating
+    * keys are out: a join normalizes -0.0 and NaN, set membership does
+    * not. So are binary (array identity), decimal and every nested type.
+    */
+  private def exactKey(dt: DataType): Boolean = dt match {
+    case StringType | BooleanType | ByteType | ShortType | IntegerType |
+         LongType | DateType | TimestampType | TimestampNTZType => true
+    case _ => false
+  }
+
+  /** A MERGE or key-DELETE source as a rewrite consumes it: `df` is the
+    * source rows, `local` the same rows when they were read onto the
+    * driver ([[keySource]]), so pruning, the target-side key predicate and
+    * the winner window all come from one read.
+    */
+  private[graft] final case class KeySource(df: DataFrame, keys: Seq[String],
+                                            local: Option[Array[Row]]) {
+
+    /** Distinct non-null values of `c` as one-column rows, for
+      * [[keyPrune]] / [[partitionPrune]]: from the local rows, else
+      * through [[boundedKeys]] (None past `maxPruneKeys`).
+      */
+    def pruneKeys(c: String, maxPruneKeys: Int): Option[Array[Row]] =
+      local match {
+        case Some(rows) =>
+          val i = df.schema.fieldIndex(c)
+          Some(rows.iterator.map(_.get(i)).filter(_ != null).distinct
+            .map(Row(_)).toArray)
+        case None => boundedKeys(df, c, maxPruneKeys)
+      }
+
+    /** Over `targetKeys` (the target's columns for [[keys]], in order):
+      * true for a row whose key no source row carries — the target rows
+      * a MERGE keeps, and the complement of a DELETE's victims. A key
+      * with a null component never equi-matches, so such rows are kept
+      * and such source keys are left out of the set. None for a source
+      * that was not read onto the driver: the caller joins instead.
+      */
+    def unmatched(targetKeys: Seq[Column]): Option[Column] = local.map { rows =>
+      import org.apache.spark.sql.catalyst.CatalystTypeConverters
+      import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, InSet}
+      val idx = keys.map(df.schema.fieldIndex)
+      val conv = idx.map(i =>
+        CatalystTypeConverters.createToCatalystConverter(df.schema(i).dataType))
+      val set: Set[Any] = rows.iterator
+        .map(r => idx.map(r.get))
+        .filter(_.forall(_ != null))
+        .map(vs => vs.zip(conv).map { case (v, c) => c(v) })
+        .map(vs => if (vs.size == 1) vs.head else new GenericInternalRow(vs.toArray))
+        .toSet
+      val probe =
+        if (targetKeys.size == 1) targetKeys.head
+        else org.apache.spark.sql.functions.struct(targetKeys: _*)
+      val member = org.apache.spark.sql.GraftColumnBridge.column(
+        InSet(org.apache.spark.sql.GraftColumnBridge.expression(probe), set))
+      targetKeys.map(_.isNull).reduce(_ || _) || !member
+    }
+  }
+
+  /** Read `src` onto the driver when it holds at most
+    * `min(maxPruneKeys, LocalSourceRows)` rows and every key column has
+    * an [[exactKey]] type, the same in `src` and in the `target` schema:
+    * one job, `limit(bound + 1)`, labelled `label`. Otherwise the source
+    * stays distributed and the caller runs its join plan; a source over
+    * the bound has then paid that one probe job.
+    */
+  private[graft] def keySource(spark: SparkSession, src: DataFrame,
+                               keys: Seq[String], target: StructType,
+                               maxPruneKeys: Int, label: String): KeySource = {
+    require(maxPruneKeys > 0, s"maxPruneKeys must be positive: $maxPruneKeys")
+    def typeIn(st: StructType, k: String) = st.find(_.name == k).map(_.dataType)
+    val eligible = keys.nonEmpty && keys.forall(k =>
+      typeIn(src.schema, k).exists(dt =>
+        exactKey(dt) && typeIn(target, k).contains(dt)))
+    val bound = math.min(maxPruneKeys, LocalSourceRows)
+    val local =
+      if (!eligible) None
+      else Some(labelled(spark, label)(src.limit(bound + 1).collect()))
+        .filter(_.length <= bound)
+    KeySource(local.fold(src)(rows =>
+      spark.createDataFrame(java.util.Arrays.asList(rows: _*), src.schema)
+        .coalesce(1)), keys, local)
+  }
+
+  /** Run `body` with its Spark jobs described as `label` (the name
+    * `graft.harness.Probe` and the UI show), restoring the caller's
+    * description after.
+    */
+  private[graft] def labelled[T](spark: SparkSession, label: String)
+                                (body: => T): T = {
+    val sc = spark.sparkContext
+    val prev = sc.getLocalProperty(JobDescription)
+    sc.setLocalProperty(JobDescription, label)
+    try body finally sc.setLocalProperty(JobDescription, prev)
+  }
+
+  private val JobDescription = "spark.job.description"
 
   /** Stats-pruned READ: files whose recorded [min, max] on `keyCol`
     * cannot overlap `[lo, hi]` are dropped before Spark sees them (no

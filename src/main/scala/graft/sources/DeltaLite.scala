@@ -37,11 +37,11 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, IntegerType, L
   * tasks/Query History API to Delta_withmetrics.py:1-264 writes its
   * results through exactly this protocol (via Databricks' engine).
   *
-  * Writer concurrency: SINGLE writer per table, the assumption every
-  * log-structured writer makes absent a put-if-absent commit service
-  * (Delta proper requires one per storage system). Readers are always
-  * safe — they only see rename-published commits; two concurrent
-  * writers could race the same version number and last-rename-wins.
+  * Writer concurrency: every commit claims its version put-if-absent
+  * ([[publishCommitIfAbsent]]), so two writers racing one version never
+  * both succeed — the loser fails loudly ([[publishCommit]]) or, through
+  * [[commitContended]], rebases and retries. Readers are always safe:
+  * they only see fully written commits.
   */
 object DeltaLite {
 
@@ -127,6 +127,14 @@ object DeltaLite {
     } finally in.close()
   }
 
+  /** The checkpoint columns [[snapshot]] replays: every live-state action
+    * kind, plus `sidecar` (a V2 checkpoint's pointers to its file
+    * actions). `remove` is left out — a checkpoint's removes are vacuum
+    * tombstones.
+    */
+  private val CheckpointActions =
+    Seq("protocol", "metaData", "domainMetadata", "txn", "add", "sidecar")
+
   /** Replay the log to `version` (default: latest). Checkpoint-aware: if
     * `_last_checkpoint` names a version ≤ the target, the file set
     * bootstraps from that parquet checkpoint (read distributed, collected
@@ -179,13 +187,12 @@ object DeltaLite {
     var readerFeatures = Set.empty[String]
     var minWriter = 1
     var writerFeatures = Set.empty[String]
-    // ONE decoder for a partitionValues map node — the JSON-replay and
-    // checkpoint paths must not drift on null handling
-    def pvMapOf(p: JsonNode): Map[String, String] =
-      p.properties().iterator().asScala.map(e => e.getKey ->
-        (if (e.getValue.isNull) null else e.getValue.asText())).toMap
+    // an add's partitionValues; a null value stays null
     def pvOf(n: JsonNode): Map[String, String] =
-      Option(n.get("partitionValues")).map(pvMapOf).getOrElse(Map.empty)
+      Option(n.get("partitionValues")).map(_.properties().iterator().asScala
+        .map(e => e.getKey ->
+          (if (e.getValue.isNull) null else e.getValue.asText())).toMap)
+        .getOrElse(Map.empty)
 
     def confOf(n: JsonNode): Map[String, String] =
       Option(n.get("configuration")).map { c =>
@@ -220,104 +227,59 @@ object DeltaLite {
       else domains(d.get("domain").asText()) =
         Option(d.get("configuration")).map(_.asText()).getOrElse("")
 
-    // net-state ADD rows of a checkpoint frame (removes in a checkpoint
-    // are vacuum tombstones, not live state). Foreign checkpoints may
-    // carry per-file deletionVector structs.
-    def processAddFrame(adds: org.apache.spark.sql.DataFrame): Unit =
-      if (adds.columns.contains("add")) {
-        val addFields = adds.schema("add").dataType match {
-          case st: StructType => st.fieldNames.toSet
-          case _              => Set.empty[String]
-        }
-        val statsSel =
-          if (addFields.contains("stats")) "add.stats"
-          else "CAST(NULL AS STRING)"
-        val dvSel =
-          if (addFields.contains("deletionVector")) "to_json(add.deletionVector)"
-          else "CAST(NULL AS STRING)"
-        val pvSel =
-          if (addFields.contains("partitionValues")) "to_json(add.partitionValues)"
-          else "CAST(NULL AS STRING)"
-        val rowIdSel =
-          if (addFields.contains("baseRowId")) "add.baseRowId"
-          else "CAST(NULL AS BIGINT)"
-        val rowVerSel =
-          if (addFields.contains("defaultRowCommitVersion"))
-            "add.defaultRowCommitVersion"
-          else "CAST(NULL AS BIGINT)"
-        adds.selectExpr("add.path", statsSel, dvSel, pvSel,
-          rowIdSel, rowVerSel).collect().foreach { r =>
-          Option(r.getString(0)).foreach { p =>
-            files += p
-            Option(r.getString(1)).foreach(stats(p) = _)
-            Option(r.getString(2)).foreach(dvs(p) = _)
-            Option(r.getString(3)).foreach { js =>
-              val pv = pvMapOf(mapper.readTree(js))
-              if (pv.nonEmpty) partValues(p) = pv
-            }
-            if (!r.isNullAt(4))
-              rowIds(p) = (r.getLong(4),
-                if (r.isNullAt(5)) 0L else r.getLong(5))
-          }
-        }
+    def applyAddNode(add: JsonNode, v: Long): Unit = {
+      val p = add.get("path").asText()
+      files += p
+      if (add.has("stats")) stats(p) = add.get("stats").asText()
+      else stats -= p
+      if (add.has("deletionVector") && !add.get("deletionVector").isNull)
+        dvs(p) = add.get("deletionVector").toString
+      else dvs -= p
+      val pv = pvOf(add)
+      if (pv.nonEmpty) partValues(p) = pv else partValues -= p
+      if (add.has("baseRowId"))
+        rowIds(p) = (add.get("baseRowId").asLong(),
+          add.path("defaultRowCommitVersion").asLong(v))
+      else rowIds -= p
+    }
+    // ONE applier for every action source: JSON commits, V2-JSON
+    // checkpoints and parquet checkpoint rows (projected to the same JSON
+    // below). `v` is the version a row-tracking add without
+    // defaultRowCommitVersion defaults to; `removes` is false for
+    // checkpoints, whose removes are vacuum tombstones, not live state
+    def applyAction(a: JsonNode, v: Long, removes: Boolean): Unit = {
+      if (a.has("protocol")) applyProtocolNode(a.get("protocol"))
+      if (a.has("metaData")) applyMetaDataNode(a.get("metaData"))
+      if (a.has("domainMetadata")) applyDomainNode(a.get("domainMetadata"))
+      if (a.has("add")) applyAddNode(a.get("add"), v)
+      if (removes && a.has("remove")) {
+        val p = a.get("remove").get("path").asText()
+        files -= p
+        stats -= p
+        dvs -= p
+        partValues -= p
+        rowIds -= p
       }
-
-    // non-file actions of a parquet checkpoint frame
-    def processCpFrame(cp: org.apache.spark.sql.DataFrame): Unit = {
-      val cols = cp.columns.toSet
-      if (cols.contains("metaData")) {
-        cp.select("metaData.schemaString").collect()
-          .flatMap(r => Option(r.getString(0))).lastOption
-          .foreach(s => schemaJson = Some(s))
-        // foreign checkpoints carry the full metaData incl. configuration
-        try cp.selectExpr("to_json(metaData.configuration)").collect()
-          .flatMap(r => Option(r.getString(0))).lastOption.foreach { js =>
-            configuration = mapper.readTree(js).properties().iterator().asScala
-              .map(e => e.getKey -> e.getValue.asText()).toMap
-          }
-        catch { case scala.util.control.NonFatal(_) => }
-        try cp.selectExpr("to_json(metaData.partitionColumns)").collect()
-          .flatMap(r => Option(r.getString(0))).lastOption.foreach { js =>
-            partitionColumns = mapper.readTree(js).elements().asScala
-              .map(_.asText()).toSeq
-          }
-        catch { case scala.util.control.NonFatal(_) => }
+      // SetTransaction: a foreign streaming writer's exactly-once
+      // bookkeeping — latest version per appId wins on replay
+      if (a.has("txn")) {
+        val t = a.get("txn")
+        txns(t.get("appId").asText()) = t.get("version").asLong()
       }
-      if (cols.contains("protocol")) {
-        cp.select("protocol.minReaderVersion").collect()
-          .flatMap(r => if (r.isNullAt(0)) None else Some(r.getInt(0)))
-          .foreach(v => minReader = math.max(minReader, v))
-        try cp.selectExpr("protocol.readerFeatures").collect().foreach { r =>
-          if (!r.isNullAt(0))
-            readerFeatures ++= r.getSeq[String](0)
-        } catch { case scala.util.control.NonFatal(_) => }
-        try cp.selectExpr("protocol.minWriterVersion").collect()
-          .foreach(r => if (!r.isNullAt(0))
-            minWriter = math.max(minWriter, r.getInt(0)))
-        catch { case scala.util.control.NonFatal(_) => }
-        try cp.selectExpr("protocol.writerFeatures").collect().foreach { r =>
-          if (!r.isNullAt(0)) writerFeatures ++= r.getSeq[String](0)
-        } catch { case scala.util.control.NonFatal(_) => }
-      }
-      if (cols.contains("domainMetadata")) {
-        try cp.selectExpr("domainMetadata.domain",
-          "domainMetadata.configuration", "domainMetadata.removed")
-          .collect().foreach { r =>
-            if (!r.isNullAt(0)) {
-              if (!r.isNullAt(2) && r.getBoolean(2)) domains -= r.getString(0)
-              else domains(r.getString(0)) =
-                Option(r.getString(1)).getOrElse("")
-            }
-          }
-        catch { case scala.util.control.NonFatal(_) => }
-      }
-      // foreign checkpoints carry SetTransaction state as txn rows
-      if (cols.contains("txn")) {
-        try cp.selectExpr("txn.appId", "txn.version").collect().foreach { r =>
-          if (!r.isNullAt(0) && !r.isNullAt(1))
-            txns(r.getString(0)) = r.getLong(1)
-        } catch { case scala.util.control.NonFatal(_) => }
-      }
+    }
+    // a parquet checkpoint's (or sidecar's) actions as JSON nodes: one
+    // to_json projection of the action columns its schema holds, one
+    // collect. A row holds one action; null fields are dropped, so each
+    // node reads like a JSON-log action.
+    def parquetActions(paths: Seq[String]): Seq[JsonNode] = {
+      import org.apache.spark.sql.functions.{col, struct, to_json}
+      val cp = spark.read.parquet(paths: _*)
+      val present = CheckpointActions.filter(cp.columns.contains)
+      if (present.isEmpty) Nil
+      else cp.select(to_json(struct(present.map(col): _*),
+          Map("ignoreNullFields" -> "true")))
+        .collect().toSeq.flatMap(r => Option(r.getString(0)))
+        .map(mapper.readTree)
     }
 
     cpVersion.foreach { cv =>
@@ -333,86 +295,22 @@ object DeltaLite {
       def resolveSidecar(p: String): String =
         if (p.contains("://") || p.startsWith("/")) p
         else new Path(new Path(logDir(table), "_sidecars"), p).toString
-      if (parquets.nonEmpty) {
-        val cp = spark.read.parquet(parquets.map(_.toString): _*)
-        processCpFrame(cp)
-        val adds =
-          if (cp.columns.contains("sidecar")) {
-            val paths = cp.selectExpr("sidecar.path").collect()
-              .flatMap(r => Option(r.getString(0))).map(resolveSidecar).toSeq
-            if (paths.nonEmpty) spark.read.parquet(paths: _*) else cp
-          } else cp
-        processAddFrame(adds)
-      } else if (jsonTops.nonEmpty) {
-        // V2-JSON top level: NDJSON actions, net-state semantics
-        val actions = jsonTops.flatMap(p => readActions(f, p))
-        actions.foreach { a =>
-          if (a.has("protocol")) applyProtocolNode(a.get("protocol"))
-          if (a.has("metaData")) applyMetaDataNode(a.get("metaData"))
-          if (a.has("domainMetadata")) applyDomainNode(a.get("domainMetadata"))
-          if (a.has("txn")) {
-            val t = a.get("txn")
-            txns(t.get("appId").asText()) = t.get("version").asLong()
-          }
-          if (a.has("add")) { // inline file actions (sidecar-less flavor)
-            val add = a.get("add")
-            val p = add.get("path").asText()
-            files += p
-            if (add.has("stats")) stats(p) = add.get("stats").asText()
-            if (add.has("deletionVector") && !add.get("deletionVector").isNull)
-              dvs(p) = add.get("deletionVector").toString
-            val pv = pvOf(add)
-            if (pv.nonEmpty) partValues(p) = pv
-            if (add.has("baseRowId"))
-              rowIds(p) = (add.get("baseRowId").asLong(),
-                add.path("defaultRowCommitVersion").asLong(0L))
-          }
-        }
-        val sidecarPaths = actions.filter(_.has("sidecar"))
-          .map(a => resolveSidecar(a.get("sidecar").get("path").asText()))
-        if (sidecarPaths.nonEmpty)
-          processAddFrame(spark.read.parquet(sidecarPaths: _*))
-      } else sys.error(
-        s"$table: _last_checkpoint names v$cv but no checkpoint file found")
+      val top: Seq[JsonNode] =
+        if (parquets.nonEmpty) parquetActions(parquets.map(_.toString))
+        else if (jsonTops.nonEmpty) jsonTops.flatMap(p => readActions(f, p))
+        else sys.error(
+          s"$table: _last_checkpoint names v$cv but no checkpoint file found")
+      top.foreach(applyAction(_, 0L, removes = false))
+      val sidecarPaths = top.filter(_.has("sidecar"))
+        .map(a => resolveSidecar(a.get("sidecar").get("path").asText()))
+      if (sidecarPaths.nonEmpty)
+        parquetActions(sidecarPaths).foreach(applyAction(_, 0L, removes = false))
     }
 
     val replayFrom = cpVersion.map(_ + 1).getOrElse(0L)
     vs.filter(v => v >= replayFrom && v <= target).foreach { v =>
-      readActions(f, commitFile(table, v)).foreach { a =>
-        if (a.has("protocol")) applyProtocolNode(a.get("protocol"))
-        if (a.has("metaData")) applyMetaDataNode(a.get("metaData"))
-        if (a.has("domainMetadata")) applyDomainNode(a.get("domainMetadata"))
-        if (a.has("add")) {
-          val add = a.get("add")
-          val p = add.get("path").asText()
-          files += p
-          if (add.has("stats")) stats(p) = add.get("stats").asText()
-          else stats -= p
-          if (add.has("deletionVector") && !add.get("deletionVector").isNull)
-            dvs(p) = add.get("deletionVector").toString
-          else dvs -= p
-          val pv = pvOf(add)
-          if (pv.nonEmpty) partValues(p) = pv else partValues -= p
-          if (add.has("baseRowId"))
-            rowIds(p) = (add.get("baseRowId").asLong(),
-              add.path("defaultRowCommitVersion").asLong(v))
-          else rowIds -= p
-        }
-        if (a.has("remove")) {
-          val p = a.get("remove").get("path").asText()
-          files -= p
-          stats -= p
-          dvs -= p
-          partValues -= p
-          rowIds -= p
-        }
-        // SetTransaction: a foreign streaming writer's exactly-once
-        // bookkeeping — latest version per appId wins on replay
-        if (a.has("txn")) {
-          val t = a.get("txn")
-          txns(t.get("appId").asText()) = t.get("version").asLong()
-        }
-      }
+      readActions(f, commitFile(table, v))
+        .foreach(applyAction(_, v, removes = true))
     }
     // Reader-protocol gate: v1 plain, v2 adds column mapping (supported),
     // v3 is table features — supported iff every listed reader feature is
@@ -1391,13 +1289,24 @@ object DeltaLite {
              columnMapping: Boolean = false,
              txn: Option[(String, Long)] = None,
              cdc: Option[DataFrame] = None,
-             partitionBy: Seq[String] = Nil): Long = {
-    val root = new Path(table)
-    val f = fs(spark, root)
-    val vs = versions(spark, table)
-    val v = if (vs.isEmpty) 0L else vs.last + 1
-    val prev: Option[Snapshot] =
-      if (vs.isEmpty) None else Some(snapshot(spark, table))
+             partitionBy: Seq[String] = Nil): Long =
+    commitOn(spark, table,
+      if (versions(spark, table).isEmpty) None else Some(snapshot(spark, table)),
+      df, overwrite, operation, replacing, columnMapping, txn, cdc, partitionBy)
+
+  /** [[commit]] on the snapshot `prev` the caller already resolved (None:
+    * a new table): publishes version `prev.version + 1`, and fails if
+    * another writer took that version meanwhile ([[publishCommit]]).
+    */
+  private def commitOn(spark: SparkSession, table: String,
+                       prev: Option[Snapshot], df: DataFrame,
+                       overwrite: Boolean = false, operation: String = "",
+                       replacing: Option[Seq[String]] = None,
+                       columnMapping: Boolean = false,
+                       txn: Option[(String, Long)] = None,
+                       cdc: Option[DataFrame] = None,
+                       partitionBy: Seq[String] = Nil): Long = {
+    val v = prev.map(_.version + 1).getOrElse(0L)
     val removed: Seq[String] = replacing.getOrElse(
       if (overwrite) prev.map(_.files).getOrElse(Nil) else Nil)
     prev.foreach(p => requireWritable(table, p,
@@ -2011,20 +1920,18 @@ object DeltaLite {
     v
   }
 
-  /** Atomically publish one JSON actions file as version `v` (write to a
-    * dot-tmp, rename into place — readers never see a partial commit).
+  /** Publish one JSON actions file as version `v`, claiming the version
+    * put-if-absent ([[publishCommitIfAbsent]]): readers never see a
+    * partial commit, and a version another writer already took fails
+    * here instead of being replaced (a plain `FileSystem.rename` onto an
+    * existing local file overwrites it and reports success).
     */
-  private def publishCommit(spark: SparkSession, table: String, v: Long,
-                            actionsNdjson: String): Unit = {
-    val f = fs(spark, logDir(table))
-    f.mkdirs(logDir(table))
-    val stamped = withIct(spark, table, v, actionsNdjson)
-    val tmp = new Path(logDir(table), s".v$v.json.tmp")
-    val out = f.create(tmp, true)
-    try out.write(stamped.getBytes(StandardCharsets.UTF_8))
-    finally out.close()
-    require(f.rename(tmp, commitFile(table, v)), s"commit rename failed: v$v")
-  }
+  private[graft] def publishCommit(spark: SparkSession, table: String,
+                                   v: Long, actionsNdjson: String): Unit =
+    if (!publishCommitIfAbsent(spark, table, v, actionsNdjson))
+      throw new java.util.ConcurrentModificationException(
+        s"$table: version $v is already committed by another writer — " +
+          "re-run the operation against the new tip")
 
   private val MaxColumnIdKey = "delta.columnMapping.maxColumnId"
 
@@ -2479,11 +2386,15 @@ object DeltaLite {
     * judged on the [min,max] interval, so interleaved key ranges degrade
     * toward full rewrite — exactly when a Z-ORDER/range re-cluster
     * ([[optimizeCompact]], TableMaintenance.zorderVersioned) pays. The
-    * batch's distinct first-key values drive the prune and are collected
-    * to the driver — BOUNDED: at most `maxPruneKeys + 1` rows ever reach
-    * the driver (a `limit`, not a full collect), and a batch past the
-    * bound degrades gracefully to a full-file-set merge (correct, just
-    * unpruned) instead of OOMing the driver on a 10⁸-key backfill.
+    * batch's distinct first-key values drive the prune. A batch of at
+    * most `min(maxPruneKeys, DataFiles.LocalSourceRows)` rows with exact
+    * key types is read onto the driver ONCE ([[DataFiles.keySource]]):
+    * its rows prune, drop the replaced target rows by key set and give the
+    * winners, and the rewrite is one job. A larger batch stays distributed
+    * — its distinct keys are collected BOUNDED (at most `maxPruneKeys + 1`
+    * rows through a `limit`), and past that bound it degrades to a
+    * full-file-set merge (correct, just unpruned) instead of OOMing the
+    * driver on a 10⁸-key backfill.
     */
   def selectiveMerge(spark: SparkSession, table: String, updates: DataFrame,
                      keys: Seq[String], skewSafe: Boolean = false,
@@ -2493,19 +2404,26 @@ object DeltaLite {
       : MergeStats = {
     val snap = snapshot(spark, table)
     require(snap.schemaJson.nonEmpty, s"$table: no metaData in log")
+    // a source of at most min(maxPruneKeys, LocalSourceRows) rows is read
+    // once, onto the driver: pruning, the kept-target predicate and the
+    // winners all come from that read
+    val src = DataFiles.keySource(spark, updates, keys, logicalSchema(snap),
+      maxPruneKeys, "delta.merge.source")
     // whenNotMatchedBySource clauses involve EVERY target row by
     // definition, so key-range pruning is off the table there
     val (touched, skipped) =
       if (graft.operators.MergeClause.touchesBySource(clauses))
         (snap.files, Seq.empty[String])
-      else keyPrune(snap, keys.head, updates, maxPruneKeys)
+      else DataFiles.labelled(spark, "delta.merge.keys")(
+        keyPrune(snap, keys.head, src.pruneKeys(keys.head, maxPruneKeys)))
     // readSnapshot: DV masking + physical→logical relabel ride along —
     // rewriting a DV-carrying file folds its mask in (the rewrite has
     // no DV, same live rows). Schema evolution's new source columns
     // reach the log through commit's append-evolution channel.
     val base = readSnapshot(spark, table, snap, touched)
-    val merged = graft.operators.LakehouseOps.merge(base, updates, keys,
-      clauses, skewSafe, schemaEvolution)
+    val merged = graft.operators.LakehouseOps.merge(base, src.df, keys,
+      clauses, skewSafe, schemaEvolution,
+      src.unmatched(keys.map(k => base(s"`$k`"))))
     // CDF: materialize the exact per-commit feed the merge implies —
     // update_pre/postimage for keys present in the base, insert for new
     // keys. Cost ∝ touched data + batch (two key semi-joins), opt-in via
@@ -2520,7 +2438,7 @@ object DeltaLite {
       else {
         import org.apache.spark.sql.functions.{broadcast, col, lit}
         val keyC = keys.map(k => col(s"`$k`"))
-        val updKeys = broadcast(updates.select(keyC: _*).distinct())
+        val updKeys = broadcast(src.df.select(keyC: _*).distinct())
         val baseKeys = base.select(keyC: _*).distinct()
         val pre = base.join(updKeys, keys, "left_semi")
           .withColumn("_change_type", lit("update_preimage"))
@@ -2531,8 +2449,9 @@ object DeltaLite {
           .withColumn("_change_type", lit("insert"))
         Some(pre.unionByName(post).unionByName(ins))
       }
-    val v = commit(spark, table, merged, operation = "MERGE",
-      replacing = Some(touched), cdc = cdc)
+    val v = DataFiles.labelled(spark, "delta.merge.write")(
+      commitOn(spark, table, Some(snap), merged, operation = "MERGE",
+        replacing = Some(touched), cdc = cdc))
     MergeStats(v, touched.size, skipped.size)
   }
 
@@ -2551,7 +2470,8 @@ object DeltaLite {
     import org.apache.spark.sql.functions.broadcast
     val snap = snapshot(spark, table)
     require(snap.schemaJson.nonEmpty, s"$table: no metaData in log")
-    val (touched, skipped) = keyPrune(snap, keyCols.head, keys, maxPruneKeys)
+    val (touched, skipped) = keyPrune(snap, keyCols.head,
+      DataFiles.boundedKeys(keys, keyCols.head, maxPruneKeys))
     if (touched.isEmpty) return MergeStats(snap.version, 0, skipped.size)
     val base = readSnapshot(spark, table, snap, touched)
     val delKeys = broadcast(keys
@@ -2591,12 +2511,15 @@ object DeltaLite {
     * them (the format's own contract — a compliance erasure is
     * copy-on-write [[selectiveDelete]] + [[vacuum]]).
     *
-    * Scale shape: the victim scan is one distributed pass with the
-    * delete-key set broadcast; the (file, rowIndex) victims are collected
-    * to the driver to build bitmaps — bounded by `maxDeleteRows`
-    * (REFUSED past it, with the copy-on-write path named in the error:
-    * past ~tens of millions of rows per batch, rewriting files is the
-    * right verb anyway, exactly the heuristic real engines apply).
+    * Scale shape: the victim scan is one distributed pass — over the
+    * files whose key bounds admit a delete key, with a key-set filter,
+    * when the batch fits [[DataFiles.keySource]]'s driver bound; over
+    * every file with the key set broadcast otherwise. The (file,
+    * rowIndex) victims are collected to the driver to build bitmaps —
+    * bounded by `maxDeleteRows` (REFUSED past it, with the copy-on-write
+    * path named in the error: past ~tens of millions of rows per batch,
+    * rewriting files is the right verb anyway, exactly the heuristic real
+    * engines apply).
     */
   def deleteVectors(spark: SparkSession, table: String, keys: DataFrame,
                     keyCols: Seq[String],
@@ -2625,16 +2548,23 @@ object DeltaLite {
     val f = fs(spark, root)
     if (snap.files.isEmpty) return DvDeleteStats(snap.version, 0, 0L)
 
+    // a key batch of at most LocalSourceRows rows is read onto the driver
+    // once: it prunes the victim scan to the files whose key bounds admit
+    // a delete key and selects the victims by key set, with no join
+    val src = DataFiles.keySource(spark, keys, keyCols, logical,
+      DataFiles.DefaultMaxPruneKeys, "delta.delete.source")
+    val scanned = src.local.fold(snap.files)(_ =>
+      keyPrune(snap, keyCols.head,
+        src.pruneKeys(keyCols.head, DataFiles.DefaultMaxPruneKeys))._1)
     val base = spark.read.schema(readSchema)
-      .parquet(snap.files.map(p => new Path(table, p).toString): _*)
+      .parquet(scanned.map(p => new Path(table, p).toString): _*)
       .withColumn("__dv_key",
         substring_index(col("_metadata.file_path"), "/", -1))
       .withColumn("__dv_pos", col("_metadata.row_index"))
     // mask rows an existing DV already hides — they must not re-mark
-    val existing: Map[String, Array[Byte]] = snap.dvs.map { case (p, dj) =>
-      new Path(table, p).getName ->
-        DeletionVectors.readBitmapBytes(f, root, parseDv(dj))
-    }
+    val existing: Map[String, Array[Byte]] = scanned.flatMap(p =>
+      snap.dvs.get(p).map(dj => new Path(table, p).getName ->
+        DeletionVectors.readBitmapBytes(f, root, parseDv(dj)))).toMap
     val masked =
       if (existing.isEmpty) base
       else {
@@ -2642,13 +2572,17 @@ object DeltaLite {
         base.filter(!DeletionVectors.dvDeleted(bc, col("__dv_key"),
           col("__dv_pos"), identity))
       }
-    val keySel = keys.select(keyCols.zip(physKeyCols).map { case (k, pk) =>
-      keys(s"`$k`").as(pk) }.toIndexedSeq: _*).distinct()
-    val victims = masked
-      .join(broadcast(keySel), physKeyCols, "left_semi")
+    val matched = src.unmatched(physKeyCols.map(pk => masked(s"`$pk`"))) match {
+      case Some(keep) => masked.filter(!keep)
+      case None =>
+        val keySel = src.df.select(keyCols.zip(physKeyCols).map {
+          case (k, pk) => src.df(s"`$k`").as(pk) }.toIndexedSeq: _*).distinct()
+        masked.join(broadcast(keySel), physKeyCols, "left_semi")
+    }
+    val victims = DataFiles.labelled(spark, "delta.delete.victims")(matched
       .select("__dv_key", "__dv_pos")
       .limit(maxDeleteRows + 1)
-      .collect()
+      .collect())
     require(victims.length <= maxDeleteRows,
       s"$table: delete batch exceeds $maxDeleteRows rows — use the " +
         "copy-on-write selectiveDelete for bulk erasure")
@@ -2968,18 +2902,18 @@ object DeltaLite {
     }
   }
 
-  /** selectiveMerge/selectiveDelete's (touched, skipped) file split for a
-    * key batch: at most `maxPruneKeys` distinct first-key values reach the
-    * driver ([[DataFiles.boundedKeys]] — past the bound, nothing is
-    * pruned). A partition-keyed batch prunes whole partitions on the
+  /** The (touched, skipped) file split for a key batch's distinct
+    * `keyCol` values (None: the batch was past the driver bound, nothing
+    * is pruned). A partition-keyed batch prunes whole partitions on the
     * log's partitionValues; otherwise files prune on add-stats, recorded
     * under PHYSICAL names on mapped tables.
     */
-  private def keyPrune(snap: Snapshot, keyCol: String, batch: DataFrame,
-                       maxPruneKeys: Int): (Seq[String], Seq[String]) = {
+  private def keyPrune(snap: Snapshot, keyCol: String,
+                       keys: Option[Array[org.apache.spark.sql.Row]])
+      : (Seq[String], Seq[String]) = {
     val field = logicalSchema(snap)(keyCol)
     val dt = field.dataType
-    DataFiles.boundedKeys(batch, keyCol, maxPruneKeys) match {
+    keys match {
       case None => (snap.files, Nil)
       case Some(rows) if snap.partitionColumns.contains(keyCol) =>
         if (!hiveComparable(dt)) (snap.files, Nil)

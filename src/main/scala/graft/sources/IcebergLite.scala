@@ -447,38 +447,41 @@ object IcebergLite {
     else new Path(table, p).toString
   }
 
-  /** Canonical file-path form for position-delete matching: the spec
-    * mandates matching on the FULL `file_path`, not the base name — two
-    * files with identical base names in different directories (foreign
+  /** One file identity for position deletes and deletion vectors. The
+    * spec matches on the FULL `file_path`, not the base name — two files
+    * with identical base names in different directories (foreign
     * partitioned layouts, converted tables mixing sources) must not
-    * cross-apply deletes. Scheme prefix and redundant slashes are
-    * stripped (`file:///x`, `file:/x` and a scan's `_metadata.file_path`
-    * all canonicalize alike); relative paths resolve against the table
-    * root. Driver twin of [[canonCol]].
+    * cross-apply deletes. The identity is the absolute path URL-encoded
+    * the way Spark reports a scan's `_metadata.file_path` (a space reads
+    * `%20`, a `+` stays a `+`), with the scheme and redundant slashes
+    * stripped, so `file:///x`, `file:/x` and `/x` key alike. A scan path
+    * is already in that form ([[scanKey]], [[scanKeyCol]]); a manifest or
+    * delete-file path, relative to the table root or absolute and never
+    * encoded, goes through [[fileKey]].
     */
-  private def canonPath(tableAbs: String, p: String): String = {
-    val noScheme = p.replaceFirst("^[A-Za-z][A-Za-z0-9+.\\-]*:/*", "/")
-      .replaceFirst("^/+", "/")
-    if (noScheme.startsWith("/")) noScheme else s"$tableAbs/$p"
+  private def scanKey(p: String): String =
+    p.replaceFirst("^[A-Za-z][A-Za-z0-9+.\\-]*:/*", "/").replaceFirst("^/+", "/")
+
+  /** [[scanKey]] of a manifest path `p`, resolved against the qualified
+    * table `root` ([[tableRoot]]) when relative.
+    */
+  private def fileKey(root: Path, p: String): String = {
+    val path = new Path(p)
+    scanKey((if (path.isAbsolute || p.contains(":/")) path
+      else new Path(root, p)).toUri.toString)
   }
 
-  /** Scheme-and-slash-stripped table root, the base [[canonPath]] and
-    * [[canonCol]] resolve relative manifest paths against.
-    */
-  private def canonTableRoot(spark: SparkSession, table: String): String =
-    canonPath("", fs(spark, new Path(table))
-      .makeQualified(new Path(table)).toString)
+  /** The qualified table root [[fileKey]] resolves relative paths against. */
+  private def tableRoot(spark: SparkSession, table: String): Path =
+    fs(spark, new Path(table)).makeQualified(new Path(table))
 
-  /** Column twin of [[canonPath]] — runs per row on the scan/delete
-    * sides, pure string ops (stays in codegen).
+  /** Column twin of [[scanKey]] — runs per row on the scan/delete sides,
+    * pure string ops (stays in codegen).
     */
-  private def canonCol(tableAbs: String,
-                       c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{concat, lit, regexp_replace, when}
-    val noScheme = regexp_replace(
+  private def scanKeyCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.functions.regexp_replace
+    regexp_replace(
       regexp_replace(c, "^[A-Za-z][A-Za-z0-9+.\\-]*:/*", "/"), "^/+", "/")
-    when(noScheme.startsWith("/"), noScheme)
-      .otherwise(concat(lit(tableAbs + "/"), c))
   }
 
   /** Resolve a snapshot (current, or pinned by snapshot id) to its data
@@ -650,9 +653,9 @@ object IcebergLite {
     * and v3 deletion vectors alike — fold into one row-index bitmap per
     * data file ([[positionBitmaps]]) and apply through the broadcast
     * [[DvProbe]] that Delta's DV reads use: no join, and the probe keys
-    * each file by its canonical full path (the spec matches on
-    * `file_path`; [[canonPath]] keeps identically-named files in
-    * different directories apart). EQUALITY deletes anti-join on the
+    * each file by its full path (the spec matches on `file_path`;
+    * [[fileKey]] keeps identically-named files in different directories
+    * apart). EQUALITY deletes anti-join on the
     * columns their `equality_ids` name, applicable strictly dataSeq <
     * deleteSeq, so a row re-inserted after the delete survives it (the
     * spec's ordering). Files split into read groups only where the plan
@@ -682,8 +685,8 @@ object IcebergLite {
     if (!s.deletes.exists(_.content == 1) && !keepMeta &&
         groups.forall(g => g._1 == ((None, Nil))))
       return readFileList(spark, table, s.schema, subset.map(_.path))
-    val tableAbs = canonTableRoot(spark, table)
-    val bitmaps = positionBitmaps(spark, table, s, subset, tableAbs)
+    val root = tableRoot(spark, table)
+    val bitmaps = positionBitmaps(spark, table, s, subset, root)
     val bc = if (bitmaps.isEmpty) None
       else Some(spark.sparkContext.broadcast(
         bitmaps.map { case (k, b) => k -> b.serialize() }))
@@ -716,9 +719,9 @@ object IcebergLite {
       }
       val masked = bc match {
         case Some(b) if files.exists(fi =>
-            bitmaps.contains(canonPath(tableAbs, fi.path))) =>
+            bitmaps.contains(fileKey(root, fi.path))) =>
           raw.filter(!DeletionVectors.dvDeleted(b, col("__if"), col("__ip"),
-            canonPath(tableAbs, _)))
+            scanKey))
         case _ => raw
       }
       eqs.groupBy(_.equalityIds).toSeq.sortBy(_._1.mkString(","))
@@ -766,7 +769,7 @@ object IcebergLite {
     schema.add("__if", StringType).add("__ip", LongType)
 
   /** The live position deletes of `subset`, folded into one row-index
-    * bitmap per data file keyed by [[canonPath]]: v2 position-delete
+    * bitmap per data file keyed by [[fileKey]]: v2 position-delete
     * files, streamed on the driver by [[readPositionDeletes]] (no Spark
     * job), and v3 deletion vectors, each blob read once. A delete applies
     * to a file when the file's data sequence number is ≤ the delete's;
@@ -777,13 +780,13 @@ object IcebergLite {
     */
   private def positionBitmaps(spark: SparkSession, table: String,
                               s: Snapshot, subset: Seq[FileInfo],
-                              tableAbs: String)
+                              root: Path)
       : Map[String, DeletionVectors.Bitmap64] = {
     val (dvs, posFiles) = s.deletes.filter(_.content == 1)
       .partition(_.contentOffset.isDefined)
     if (subset.isEmpty || (dvs.isEmpty && posFiles.isEmpty)) return Map.empty
     val fileSeq: Map[String, Long] =
-      subset.map(fi => canonPath(tableAbs, fi.path) -> fi.seq).toMap
+      subset.map(fi => fileKey(root, fi.path) -> fi.seq).toMap
     val out = scala.collection.mutable.HashMap.empty[String, DeletionVectors.Bitmap64]
     val fsys = fs(spark, new Path(table))
     posFiles.foreach { d =>
@@ -794,7 +797,7 @@ object IcebergLite {
         (raw, pos) =>
           if (raw != lastRaw) {
             lastRaw = raw
-            val c = canonPath(tableAbs, raw)
+            val c = fileKey(root, raw)
             target =
               if (fileSeq.get(c).exists(_ <= d.seq))
                 out.getOrElseUpdate(c, new DeletionVectors.Bitmap64())
@@ -805,7 +808,7 @@ object IcebergLite {
     }
     dvs.groupBy(d => (d.path, d.contentOffset.get)).foreach {
       case ((p, off), ds) =>
-        val refs = ds.map(d => (canonPath(tableAbs, d.refDataFile.get), d.seq))
+        val refs = ds.map(d => (fileKey(root, d.refDataFile.get), d.seq))
           .collect { case (r, sq) if fileSeq.get(r).exists(_ <= sq) => r }
           .distinct
         if (refs.nonEmpty) {
@@ -1898,10 +1901,11 @@ object IcebergLite {
     * partitioned-MERGE requirement — a key that migrates partitions
     * would dodge its old row). Unpartitioned files in the snapshot are
     * rewritten conservatively. The update batch's distinct partition
-    * values / first-key values drive the prune and are collected to the
-    * driver BOUNDED (at most `maxPruneKeys + 1` rows via `limit`; a
-    * batch past the bound falls back to an unpruned full-file-set merge
-    * — same guard as DeltaLite.selectiveMerge).
+    * values / first-key values drive the prune; a small batch is read
+    * onto the driver once and rewritten in one job, a large one collects
+    * its keys BOUNDED and past `maxPruneKeys` falls back to an unpruned
+    * full-file-set merge — the same [[DataFiles.keySource]] rules as
+    * DeltaLite.selectiveMerge.
     */
   def selectiveMerge(spark: SparkSession, table: String, updates: DataFrame,
                      keys: Seq[String], partitionCol: String = "",
@@ -1919,6 +1923,11 @@ object IcebergLite {
       s"$table: selectiveMerge cannot rewrite a void-partitioned spec")
     val identityOnly = spec.forall(_.transform == "identity")
     val snap = snapshot(spark, table)
+    // a source of at most min(maxPruneKeys, LocalSourceRows) rows is read
+    // once, onto the driver: pruning, the kept-target predicate and the
+    // winners all come from that read
+    val src = DataFiles.keySource(spark, updates, keys, snap.schema,
+      maxPruneKeys, "iceberg.merge.source")
     val noPrune = (snap.detail, Seq.empty[FileInfo])
     val pruneCol = if (partitionCol.nonEmpty) partitionCol else keys.head
     val (touched, skipped) =
@@ -1926,7 +1935,8 @@ object IcebergLite {
       // definition — pruning untouched partitions/files would hide rows
       // from the clause
       if (graft.operators.MergeClause.touchesBySource(clauses)) noPrune
-      else DataFiles.boundedKeys(updates, pruneCol, maxPruneKeys) match {
+      else DataFiles.labelled(spark, "iceberg.merge.keys")(
+        src.pruneKeys(pruneCol, maxPruneKeys)) match {
         case None => noPrune
         case Some(rows) if partitionCol.nonEmpty =>
           // partitioned table: prune whole partitions on the manifests'
@@ -1966,10 +1976,7 @@ object IcebergLite {
           // for the first merge key — the DeltaLite add-stats shape, so a
           // range-clustered (Z-ORDERed) Iceberg table merges ∝ touched
           // files too. Bound-less files rewrite conservatively.
-          val (tpe, fid) = topField(meta0, table, pruneCol)
-          if (!BoundedTypes(tpe)) noPrune
-          else DataFiles.keyPrune(snap.detail, primitive(tpe), rows)(
-            bounds(primitive(tpe), fid))
+          boundsPrune(meta0, table, snap, pruneCol, rows)
       }
     val base =
       if (touched.isEmpty) spark.createDataFrame(
@@ -1977,8 +1984,9 @@ object IcebergLite {
       else readWithDeletes(spark, table, snap, touched)
     // schema evolution's source-only columns re-key the metadata schema
     // through commit's append-drift channel
-    val merged = graft.operators.LakehouseOps.merge(base, updates, keys,
-      clauses, skewSafe, schemaEvolution)
+    val merged = graft.operators.LakehouseOps.merge(base, src.df, keys,
+      clauses, skewSafe, schemaEvolution,
+      src.unmatched(keys.map(k => base(s"`$k`"))))
     // rewrite under the table's OWN layout: the FULL spec (identity
     // fields included — collapsing to just partitionCol would drop the
     // other partition columns from the rewritten metadata/dirs) is
@@ -1989,12 +1997,27 @@ object IcebergLite {
       spec.map(tf => transformDecl(tf,
         specSourceName.getOrElse(tf.sourceId,
           sys.error(s"$table: spec field ${tf.name} has no source column"))))
-    val sid = commit(spark, table, merged, operation = "merge",
-      partitionBy =
-        if (spec.isEmpty && partitionCol.nonEmpty) Seq(partitionCol) else Nil,
-      partitionTransforms = specDecls,
-      replacing = Some(touched.map(_.path)))
+    val sid = DataFiles.labelled(spark, "iceberg.merge.write")(
+      commit(spark, table, merged, operation = "merge",
+        partitionBy =
+          if (spec.isEmpty && partitionCol.nonEmpty) Seq(partitionCol) else Nil,
+        partitionTransforms = specDecls,
+        replacing = Some(touched.map(_.path))))
     MergeStats(sid, touched.size, skipped.size)
+  }
+
+  /** The (touched, skipped) split of `snap`'s data files for the distinct
+    * `keyCol` values `rows`, on the manifests' column bounds: a file whose
+    * [lower, upper] admits no key is skipped; an unbounded type or a
+    * bound-less file is touched.
+    */
+  private def boundsPrune(meta: JsonNode, table: String, snap: Snapshot,
+                          keyCol: String, rows: Array[org.apache.spark.sql.Row])
+      : (Seq[FileInfo], Seq[FileInfo]) = {
+    val (tpe, fid) = topField(meta, table, keyCol)
+    if (!BoundedTypes(tpe)) (snap.detail, Nil)
+    else DataFiles.keyPrune(snap.detail, primitive(tpe), rows)(
+      bounds(primitive(tpe), fid))
   }
 
   /** Spec transform string + source column → the DDL decl
@@ -2143,7 +2166,7 @@ object IcebergLite {
   def deleteRows(spark: SparkSession, table: String, keys: DataFrame,
                  keyCols: Seq[String], equality: Boolean = false,
                  maxDeleteRows: Int = 16 << 20): DeleteStats = {
-    import org.apache.spark.sql.functions.{broadcast, col}
+    import org.apache.spark.sql.functions.col
     val root = new Path(table)
     val f = fs(spark, root)
     val meta = metadata(spark, table)
@@ -2163,7 +2186,8 @@ object IcebergLite {
       s"$table: v2 delete files are illegal on a format-version-3 table " +
         "carrying deletion vectors — use deleteRowsV3")
 
-    val keySel = keys.select(keyCols.map(k => keys(s"`$k`")).toIndexedSeq: _*)
+    val (src, scanned, matching) =
+      deleteScope(spark, table, meta, snap, keys, keyCols)
     // the delete file, staged; for position deletes the victim count and
     // the unmapped check read its footer, so the victim plan runs ONCE
     val staging = new Path(root, s".staging-del-s$snapId")
@@ -2178,42 +2202,42 @@ object IcebergLite {
     // currently-matched data rows)
     val (part, nRows, eqIds, delFileRows): (Path, Long, Seq[Int], Long) =
       if (!equality) {
-        // victims stay DISTRIBUTED: the semi join's output maps scan
-        // paths to manifest paths through a broadcast (metadata-sized)
-        // relation and lands sorted in the single delete-file partition
-        // on an executor. The limit bounds the write — a no-op below the
-        // cap — so an over-limit bulk delete is refused having written at
-        // most maxDeleteRows + 1 rows, and the staged file is removed.
-        val scan = readWithDeletes(spark, table, snap, snap.detail,
+        // victims stay DISTRIBUTED: the matched rows' scan paths map to
+        // manifest paths through a broadcast (metadata-sized) map and
+        // land sorted in the single delete-file partition on an
+        // executor. The limit bounds the write — a no-op below the cap —
+        // so an over-limit bulk delete is refused having written at most
+        // maxDeleteRows + 1 rows, and the staged file is removed.
+        if (scanned.isEmpty) return DeleteStats(snap.snapshotId, 0, 0L)
+        val scan = readWithDeletes(spark, table, snap, scanned,
           keepMeta = true)
-        val tableAbs = canonTableRoot(spark, table)
-        import spark.implicits._
-        // one row per canonical path: duplicate manifest entries for the
-        // same file (same canon key) must not fan the broadcast join out —
-        // each would duplicate its victim rows and emit duplicate delete
-        // entries. Identical (canon, path) pairs collapse silently; two
-        // DIFFERENT manifest paths canonicalizing to one key is a
-        // corrupt-metadata state and fails loudly (matching the unmapped-
-        // victim check below).
-        val n2p = snap.detail.map(fi =>
-          canonPath(tableAbs, fi.path) -> fi.path).distinct
+        val qualified = tableRoot(spark, table)
+        // one manifest path per file identity: identical (key, path)
+        // pairs from duplicate manifest entries collapse silently; two
+        // DIFFERENT manifest paths with one identity is a corrupt-metadata
+        // state and fails loudly (matching the unmapped-victim check
+        // below).
+        val n2p = scanned.map(fi =>
+          fileKey(qualified, fi.path) -> fi.path).distinct
         require(n2p.map(_._1).distinct.size == n2p.size,
           s"$table: multiple manifest data-file paths canonicalize to one " +
             "scan path — refusing to write a delete file against " +
             "ambiguous file identities")
-        val nameToPath = n2p.toDF("__if", "file_path")
-        // a semi join marks each matching row once, so the key side needs
-        // no distinct. LEFT join to the manifest paths: a canonicalization
-        // mismatch leaves file_path NULL and fails loudly below — an
-        // inner join would silently DROP the victim and leave the row
-        // alive. The position-delete spec requires (file_path, pos) order.
-        val victims = scan.join(broadcast(keySel), keyCols, "left_semi")
-          .select(canonCol(tableAbs, col("__if")).as("__if"), col("__ip"))
-          .join(broadcast(nameToPath), Seq("__if"), "left")
-          .select(col("file_path"), col("__ip").as("pos"))
+        // victims map scan paths to manifest paths through a broadcast
+        // VARIABLE (metadata-sized, shipped without a Spark job): an
+        // identity mismatch reads NULL and fails loudly below, where a
+        // join would silently DROP the victim and leave the row alive.
+        // The position-delete spec requires (file_path, pos) order.
+        val paths = spark.sparkContext.broadcast(n2p.toMap)
+        val manifestPath = org.apache.spark.sql.functions.udf(
+          (k: String) => paths.value.get(k).orNull)
+        val victims = matching(scan)
+          .select(manifestPath(scanKeyCol(col("__if"))).as("file_path"),
+            col("__ip").as("pos"))
           .limit(maxDeleteRows + 1)
           .sortWithinPartitions("file_path", "pos")
-        val staged = stage(victims)
+        val staged = DataFiles.labelled(spark, "iceberg.delete.victims")(
+          stage(victims))
         val (nVictims, nUnmapped) = staged.map(footerCounts(f.getConf, _))
           .map { case (n, nulls) => (n, nulls.getOrElse("file_path",
             if (n == 0) 0L
@@ -2232,9 +2256,10 @@ object IcebergLite {
         (staged.get, nVictims, Seq.empty, nVictims)
       } else {
         val ids = keyCols.map(k => topField(meta, table, k)._2)
-        val distinctKeys = keySel.distinct()
-        val matched = readWithDeletes(spark, table, snap, snap.detail)
-          .join(broadcast(distinctKeys), keyCols, "left_semi").count()
+        val distinctKeys = src.df
+          .select(keyCols.map(k => src.df(s"`$k`")).toIndexedSeq: _*).distinct()
+        val matched = DataFiles.labelled(spark, "iceberg.delete.victims")(
+          matching(readWithDeletes(spark, table, snap, scanned)).count())
         val staged = stage(distinctKeys).getOrElse(
           sys.error("delete-file write produced no part file"))
         (staged, matched, ids, footerCounts(f.getConf, staged)._1)
@@ -2297,7 +2322,6 @@ object IcebergLite {
   def deleteRowsV3(spark: SparkSession, table: String, keys: DataFrame,
                    keyCols: Seq[String],
                    maxDeleteRows: Int = 16 << 20): DeleteStats = {
-    import org.apache.spark.sql.functions.{broadcast, col}
     val root = new Path(table)
     val f = fs(spark, root)
     val meta = metadata(spark, table)
@@ -2307,28 +2331,28 @@ object IcebergLite {
     val snap = snapshot(spark, table)
     if (snap.detail.isEmpty) return DeleteStats(snap.snapshotId, 0, 0L)
 
-    val keySel = keys.select(keyCols.map(k => keys(s"`$k`")).toIndexedSeq: _*)
-    val scan = readWithDeletes(spark, table, snap, snap.detail,
-      keepMeta = true)
-    val victims = scan.join(broadcast(keySel), keyCols, "left_semi")
-      .select("__if", "__ip").limit(maxDeleteRows + 1).collect()
+    val (_, scanned, matching) =
+      deleteScope(spark, table, meta, snap, keys, keyCols)
+    val scan = readWithDeletes(spark, table, snap, scanned, keepMeta = true)
+    val victims = DataFiles.labelled(spark, "iceberg.delete.victims")(
+      matching(scan).select("__if", "__ip").limit(maxDeleteRows + 1).collect())
     require(victims.length <= maxDeleteRows,
       s"$table: delete batch exceeds $maxDeleteRows rows — rewrite " +
         "files (selectiveMerge / compaction) for bulk erasure")
     if (victims.isEmpty) return DeleteStats(snap.snapshotId, 0, 0L)
-    val tableAbs = canonTableRoot(spark, table)
+    val qualified = tableRoot(spark, table)
     val nameToPath = snap.detail.map(fi =>
-      canonPath(tableAbs, fi.path) -> fi.path).toMap
+      fileKey(qualified, fi.path) -> fi.path).toMap
     // per-file victim indices
     val byFile: Map[String, Seq[Long]] = victims
-      .map(r => nameToPath(canonPath(tableAbs, r.getString(0))) -> r.getLong(1))
+      .map(r => nameToPath(scanKey(r.getString(0))) -> r.getLong(1))
       .groupBy(_._1).view.mapValues(_.map(_._2).toSeq).toMap
     // the positions already live on each file — earlier DVs and the v2
     // position-delete files — merge into the new DV (writers-must-merge).
     // v3 position deletes must be DVs, so a table still listing v2
     // position-delete files folds them all in here: every file they
     // govern gets a DV and their manifests leave the new snapshot.
-    val live = positionBitmaps(spark, table, snap, snap.detail, tableAbs)
+    val live = positionBitmaps(spark, table, snap, snap.detail, qualified)
       .map { case (c, bm) => nameToPath(c) -> bm }
     val v2Manifests = positionDeleteManifests(f, table, meta, snap)
     val targets = (byFile.keySet ++
@@ -2375,6 +2399,35 @@ object IcebergLite {
     commitDeletes(spark, table, meta, metaV, snapId, manifestRel, manifestLen,
       formatVersion = 3, "added-dvs" -> bitmaps.size.toString, v2Manifests)
     DeleteStats(snapId, bitmaps.size, victims.length.toLong)
+  }
+
+  /** The victim side shared by [[deleteRows]] and [[deleteRowsV3]]: the
+    * key batch as a [[DataFiles.KeySource]] (read onto the driver when it
+    * holds at most `LocalSourceRows` rows, in a job labelled
+    * `iceberg.delete.source`), the data files a victim can live in (with
+    * the keys on the driver, those whose bounds on the first key admit
+    * one; otherwise every file), and the rows of a scan whose key the
+    * batch carries (a key-set filter for a local batch, else a broadcast
+    * semi join).
+    */
+  private def deleteScope(spark: SparkSession, table: String, meta: JsonNode,
+                          snap: Snapshot, keys: DataFrame,
+                          keyCols: Seq[String])
+      : (DataFiles.KeySource, Seq[FileInfo], DataFrame => DataFrame) = {
+    import org.apache.spark.sql.functions.broadcast
+    val src = DataFiles.keySource(spark, keys, keyCols, snap.schema,
+      DataFiles.DefaultMaxPruneKeys, "iceberg.delete.source")
+    val scanned = src.local.fold(snap.detail)(_ => boundsPrune(meta, table,
+      snap, keyCols.head,
+      src.pruneKeys(keyCols.head, DataFiles.DefaultMaxPruneKeys).get)._1)
+    def matching(scan: DataFrame): DataFrame =
+      src.unmatched(keyCols.map(k => scan(s"`$k`"))) match {
+        case Some(keep) => scan.filter(!keep)
+        case None =>
+          scan.join(broadcast(src.df.select(keyCols.map(k =>
+            src.df(s"`$k`")).toIndexedSeq: _*)), keyCols, "left_semi")
+      }
+    (src, scanned, matching)
   }
 
   /** The current manifest list's delete manifests that list v2
@@ -2458,11 +2511,11 @@ object IcebergLite {
       .maxOption.getOrElse(Long.MinValue)
     // files a live position delete governs: v2 position-delete files and
     // v3 DVs alike, from the per-file bitmaps (metadata-scale driver work)
-    val tableAbs = canonTableRoot(spark, table)
-    val governed = positionBitmaps(spark, table, snap, snap.detail, tableAbs)
+    val root = tableRoot(spark, table)
+    val governed = positionBitmaps(spark, table, snap, snap.detail, root)
       .keySet
     val (touched, untouched) = snap.detail.partition(fi =>
-      fi.seq < eqMaxSeq || governed(canonPath(tableAbs, fi.path)))
+      fi.seq < eqMaxSeq || governed(fileKey(root, fi.path)))
     if (touched.isEmpty)
       return PurgeStats(snap.snapshotId, 0, untouched.size)
     val rewritten = readWithDeletes(spark, table, snap, touched)
@@ -2936,12 +2989,11 @@ object IcebergLite {
   private[graft] def changedSplit(spark: SparkSession, table: String,
                                   from: Snapshot, to: Snapshot)
       : (Seq[FileInfo], Seq[FileInfo]) = {
-    val tableAbs = canonTableRoot(spark, table)
+    val root = tableRoot(spark, table)
     def identOf(s: Snapshot): Map[String, (Long, String)] = {
       val dvByRef: Map[String, Seq[(Long, String)]] = s.deletes
         .filter(d => d.content == 1 && d.contentOffset.isDefined)
-        .groupBy(d => canonPath(tableAbs,
-          resolvePath(table, d.refDataFile.get)))
+        .groupBy(d => fileKey(root, d.refDataFile.get))
         .view.mapValues(_.map(d =>
           (d.seq, d.path + "@" + d.contentOffset.get)).toSeq).toMap
       val plainDeletes = s.deletes.filter(d =>
@@ -2953,8 +3005,7 @@ object IcebergLite {
         }
         val dv =
           if (dvByRef.isEmpty) Nil
-          else dvByRef.getOrElse(
-            canonPath(tableAbs, resolvePath(table, fi.path)), Nil)
+          else dvByRef.getOrElse(fileKey(root, fi.path), Nil)
             .collect { case (seq, tag) if seq >= fi.seq => tag }
         fi.path -> (fi.seq, (plain ++ dv).sorted.mkString(","))
       }.toMap

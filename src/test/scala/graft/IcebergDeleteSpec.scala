@@ -508,13 +508,7 @@ class IcebergDeleteSpec extends SparkSpec {
   }
 
   // ------------------------------------------------ one-scan read property
-  private sealed trait HistOp
-  private final case class Append(keys: Seq[Long]) extends HistOp
-  private final case class PosDelete(keys: Seq[Long]) extends HistOp
-  private final case class EqDelete(keys: Seq[Long]) extends HistOp
-  private final case class DvDelete(keys: Seq[Long]) extends HistOp
-  private case object Evolve extends HistOp
-  private case object Rename extends HistOp
+  import IcebergDeleteSpec._
 
   private val keysGen = Gen.chooseNum(1, 6).flatMap(n =>
     Gen.listOfN(n, Gen.chooseNum(0L, 29L)))
@@ -629,4 +623,15 @@ class IcebergDeleteSpec extends SparkSpec {
     val r = SCTest.check(params, p)
     assert(r.passed, r.toString)
   }
+}
+
+object IcebergDeleteSpec {
+  /** One step of a generated table history in the one-scan read property. */
+  private sealed trait HistOp
+  private final case class Append(keys: Seq[Long]) extends HistOp
+  private final case class PosDelete(keys: Seq[Long]) extends HistOp
+  private final case class EqDelete(keys: Seq[Long]) extends HistOp
+  private final case class DvDelete(keys: Seq[Long]) extends HistOp
+  private case object Evolve extends HistOp
+  private case object Rename extends HistOp
 }
